@@ -62,7 +62,7 @@ object Bench {
     // can truncate the (long) JSON line, and the sweep is the round's
     // primary perf artifact (BENCH_r10 lost 145 of 221 queries that way).
     val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json"))
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json"))
     Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.write(outPath, json.getBytes("UTF-8"))
     // LAST stdout line: a <500-byte summary that survives a 2 KB log-tail

@@ -2,12 +2,15 @@ package graft
 
 import graft.dsl.{OutputColumn, TableSpec}
 import graft.plans.{CoverageValidator, FilterPropagation, SchemaManifest, TableSorter}
+import graft.sinks.JdbcUpsertSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.slf4j.LoggerFactory
 
+import java.sql.DriverManager
 import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.{Failure, Success, Try}
 
 /** High-level orchestrator: anonymized, optionally subsetted copies of a
   * multi-table catalog — the Spark-native analogue of the reference's
@@ -115,20 +118,34 @@ class Graft(
   }
 
   /** Execute the plan into a TARGET DATABASE — the full reference workflow
-    * (DbCopier.run): FK-topological level order (parents commit before the
-    * children that reference them — load-bearing under FK constraints),
-    * tables within a level in parallel, self-referencing constraints
-    * deferred around each table's write
-    * ([[graft.sinks.JdbcUpsertSink.writeDeferringSelfRefs]]), and
-    * sequences realigned afterwards when a discovery query is supplied.
+    * (DbCopier.run), with sequences realigned afterwards when a discovery
+    * query is supplied. How tables are ordered depends on `upsertVia`:
+    *
+    *  - `StageAndMerge` (with an `onConflict`): every planned table is
+    *    staged at once ([[graft.sinks.JdbcUpsertSink.stage]]) — staging
+    *    tables carry no constraints, so the Spark writes need no order and
+    *    Spark's task slots alone cap the open target connections. Then
+    *    the MERGEs run in FK-topological order in ONE transaction on a
+    *    driver connection ([[graft.sinks.JdbcUpsertSink.mergeStaged]]):
+    *    the refresh lands whole or not at all. If any staging write fails,
+    *    the target is not touched. Every staging table created is dropped
+    *    either way.
+    *  - otherwise every write goes straight into the FK-constrained
+    *    target, so levels run in FK-topological order (parents commit
+    *    before the children that reference them), tables within a level
+    *    in parallel, self-referencing constraints deferred around each
+    *    table's write ([[graft.sinks.JdbcUpsertSink.writeDeferringSelfRefs]]).
+    *
+    * When several tables fail, the first failure is thrown with the
+    * others attached as suppressed exceptions.
     *
     * @param onConflict  upsert strategy per the reference's CopyAction;
     *                    None = plain append (see JdbcUpsertSink's
     *                    at-least-once note)
     * @param upsertVia   how `onConflict` executes: `InsertOnConflict`
     *                    renders PostgreSQL `INSERT .. ON CONFLICT` per
-    *                    batch row; `StageAndMerge` appends into a staging
-    *                    table and applies ONE ANSI `MERGE` (any
+    *                    batch row; `StageAndMerge` appends into staging
+    *                    tables and applies one ANSI `MERGE` per table (any
     *                    MERGE-capable database — Derby/H2/Oracle/SQL
     *                    Server — and the bulk-friendly shape on all of
     *                    them). Ignored when `onConflict` is None.
@@ -136,8 +153,8 @@ class Graft(
     *                    [[graft.sources.JdbcCatalog.discoverSequences]]
     *                    (PG: `JdbcCatalog.PgSequenceDiscoverySql`); None
     *                    skips sequence reset (e.g. Derby targets)
-    * @return rows written per table (counted on the source plan — the
-    *         write itself is fire-and-forget batch inserts)
+    * @return rows the sink sent per table (counted by the write itself,
+    *         so the source plans run once; 0 for skipped tables)
     */
   def runJdbc(
       url: String,
@@ -150,39 +167,42 @@ class Graft(
     val plans  = plan(tableSpecs: _*)
     val levels = TableSorter(manifest.tables, manifest.fks)
     logger.info("Copying {} tables into {} in {} levels...", plans.size, targetSchema, levels.size)
+    def pks(table: String) = manifest.pks.getOrElse(table, Seq.empty)
+    val skipped = levels.flatten.filter(skippedTables.contains).map(_ -> 0L).toMap
 
-    val pool             = Executors.newFixedThreadPool(math.max(2, levels.map(_.size).max))
+    val pool             = Executors.newFixedThreadPool(math.max(2, plans.size))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val counts =
-      try {
-        levels.foldLeft(Map.empty[String, Long]) { (acc, level) =>
-          val futures = level.collect {
-            case table if skippedTables.contains(table) =>
-              Future.successful(table -> 0L)
-            case table if plans.contains(table) =>
-              Future {
-                val pks = manifest.pks.getOrElse(table, Seq.empty)
-                (onConflict, upsertVia) match {
-                  case (Some(oc), Graft.UpsertPath.StageAndMerge) =>
-                    graft.sinks.JdbcUpsertSink.upsertViaStagingMerge(
-                      plans(table), url, connectionProperties, targetSchema, table, oc, pks)
-                  case _ =>
-                    graft.sinks.JdbcUpsertSink.writeDeferringSelfRefs(
-                      plans(table), url, connectionProperties, targetSchema, table, onConflict, pks)
-                }
-                table -> plans(table).count()
-              }
+      try onConflict match {
+        case Some(oc) if upsertVia == Graft.UpsertPath.StageAndMerge =>
+          val fkOrder = levels.flatten.filter(plans.contains)
+          val outcomes = Graft.awaitAll(fkOrder.map { table =>
+            () => table -> JdbcUpsertSink.stage(plans(table), url, connectionProperties, targetSchema, table, oc, pks(table))
+          })
+          val conn = DriverManager.getConnection(url, connectionProperties)
+          try {
+            try {
+              val staged = Graft.valuesOrFirstFailure(outcomes)
+              JdbcUpsertSink.mergeStaged(conn, staged.map(_._2))
+              skipped ++ staged.map { case (table, s) => table -> s.rows }
+            } finally JdbcUpsertSink.dropStaging(conn, outcomes.collect { case Success((_, s)) => s })
+          } finally conn.close()
+        case _ =>
+          levels.foldLeft(skipped) { (acc, level) =>
+            val writes = level.filter(plans.contains).map { table =>
+              () => table -> JdbcUpsertSink.writeDeferringSelfRefs(
+                plans(table), url, connectionProperties, targetSchema, table, onConflict, pks(table))
+            }
+            acc ++ Graft.valuesOrFirstFailure(Graft.awaitAll(writes))
           }
-          acc ++ Await.result(Future.sequence(futures), Duration.Inf).toMap
-        }
       } finally pool.shutdown()
 
     sequenceDiscovery.foreach { query =>
-      val conn = java.sql.DriverManager.getConnection(url, connectionProperties)
+      val conn = DriverManager.getConnection(url, connectionProperties)
       try {
         val seqs = graft.sources.JdbcCatalog.discoverSequences(conn, targetSchema, query)
         logger.info("Resetting {} sequences...", seqs.size)
-        graft.sinks.JdbcUpsertSink.resetSequences(conn, targetSchema, seqs)
+        JdbcUpsertSink.resetSequences(conn, targetSchema, seqs)
       } finally conn.close()
     }
     counts
@@ -190,6 +210,23 @@ class Graft(
 }
 
 object Graft {
+
+  /** Runs every thunk on `ec` and waits for ALL of them — never returning
+    * while a sibling still runs — yielding each outcome in input order.
+    */
+  private def awaitAll[T](thunks: Seq[() => T])(implicit ec: ExecutionContext): Seq[Try[T]] =
+    thunks.map(t => Future(t())).map(f => Await.ready(f, Duration.Inf).value.get)
+
+  /** Every value, or the first failure with the others attached via
+    * `addSuppressed`.
+    */
+  private def valuesOrFirstFailure[T](outcomes: Seq[Try[T]]): Seq[T] =
+    outcomes.collect { case Failure(e) => e } match {
+      case Seq() => outcomes.map(_.get)
+      case first +: rest =>
+        rest.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+    }
 
   /** How [[Graft.runJdbc]] executes an [[graft.sinks.OnConflict]] strategy. */
   sealed trait UpsertPath

@@ -999,14 +999,15 @@ private[graft] object IndexStore {
     * whole call: every thunk runs to completion (no partial-state
     * ambiguity beyond what a crash already produces at any point — the
     * callers' staged-generation / pending-batch-marker protocols cover
-    * exactly these part-landed states), then the first error rethrows.
+    * exactly these part-landed states), then the first error rethrows
+    * with every other one attached via `addSuppressed`.
     */
   def inParallel[T](thunks: (() => T)*): Seq[T] = {
     require(thunks.nonEmpty, "inParallel: no thunks")
     if (thunks.size == 1) return Seq(thunks.head())
     val ctx  = held.get()
     val pend = pendingHeld.get()
-    val err  = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val out  = new Array[Any](thunks.size)
     val threads = thunks.zipWithIndex.map { case (t, i) =>
       val th = new Thread(() => {
@@ -1016,7 +1017,7 @@ private[graft] object IndexStore {
         // fast path, NOT delete the shared marker while a sibling
         // relation is still installing.
         try out(i) = t()
-        catch { case e: Throwable => err.compareAndSet(null, e) }
+        catch { case e: Throwable => errs.add(e) }
         finally { held.remove(); pendingHeld.remove() }
       }, s"graft-index-parallel-$i")
       th.setDaemon(true)
@@ -1024,7 +1025,10 @@ private[graft] object IndexStore {
       th
     }
     threads.foreach(_.join())
-    Option(err.get()).foreach(e => throw e)
+    Option(errs.poll()).foreach { first =>
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
     out.toSeq.asInstanceOf[Seq[T]]
   }
 

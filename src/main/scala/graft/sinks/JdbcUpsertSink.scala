@@ -200,6 +200,12 @@ object ColumnValueWriter {
 object JdbcUpsertSink {
   private val logger = LoggerFactory.getLogger(getClass)
 
+  /** Writes `df` into `schema.table`, one connection and one transaction
+    * per partition, and returns the rows sent. The count comes from the
+    * write itself (a `LongAccumulator` each partition adds to after its
+    * commit), so the source plan runs once. Spark applies an action's
+    * accumulator update once per task, even when the task is retried.
+    */
   def write(
       df: DataFrame,
       url: String,
@@ -210,7 +216,7 @@ object JdbcUpsertSink {
       pkColumns: Seq[String] = Seq.empty,
       batchSize: Int = 5000,
       columnWriters: Map[String, ColumnValueWriter] = Map.empty
-  ): Unit = {
+  ): Long = {
     val columns = df.schema.fieldNames.toSeq
     val sql     = SinkSql.insert(schema, table, columns, onConflict, pkColumns)
     logger.info("Upsert SQL: {}", sql)
@@ -219,6 +225,7 @@ object JdbcUpsertSink {
     // closure (writers are Serializable by contract).
     val writers: Array[ColumnValueWriter] =
       columns.map(c => columnWriters.getOrElse(c, ColumnValueWriter.Default)).toArray
+    val sent = df.sparkSession.sparkContext.longAccumulator(s"rows sent to $schema.$table")
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.nonEmpty) {
         val conn: Connection = DriverManager.getConnection(url, connectionProperties)
@@ -227,33 +234,117 @@ object JdbcUpsertSink {
           val stmt: PreparedStatement = conn.prepareStatement(sql)
           try {
             var pending = 0
+            var total   = 0L
             rows.foreach { row =>
               var i = 0
               while (i < n) { writers(i).set(stmt, i + 1, row.get(i)); i += 1 }
               stmt.addBatch()
               pending += 1
+              total += 1
               if (pending >= batchSize) { stmt.executeBatch(); pending = 0 }
             }
             if (pending > 0) stmt.executeBatch()
             conn.commit()
+            sent.add(total)
           } finally stmt.close()
         } catch {
           case e: Throwable => conn.rollback(); throw e
         } finally conn.close()
       }
     }
+    sent.value
   }
 
-  /** Upsert via stage-and-merge: append `df` in parallel into a fresh
-    * staging table cloned from the target's shape, apply ONE atomic
-    * [[SinkSql.mergeFromStaging]] on a driver connection, drop staging.
-    * Executes [[OnConflict]] semantics live on any ANSI-MERGE database
-    * (Derby — the embedded DB in this environment — H2, Oracle, SQL
-    * Server); PostgreSQL targets can use either this or [[write]]'s
-    * native ON CONFLICT path. Also the preferred BULK upsert shape: the
-    * conflict resolution is one set-based join in the database, and a
-    * Spark task retry merely re-appends into staging (the merge dedups),
-    * making the path tolerant of at-least-once task semantics.
+  /** A filled staging table, ready for [[mergeStaged]]: `mergeSql` applies
+    * it to its target, `rows` is what [[write]] sent into it.
+    */
+  final case class Staged(schema: String, stagingTable: String, mergeSql: String, rows: Long)
+
+  /** First step of a stage-and-merge upsert: create a fresh staging table
+    * `table + stagingSuffix` shaped like the target, with no constraints,
+    * and append `df` into it in parallel. A table of that exact name left
+    * behind by a process that died before its drop is dropped first, so
+    * one writer per target table at a time is assumed. The MERGE is
+    * rendered before any data moves; if the write fails, the staging
+    * table is dropped and the target is untouched.
+    */
+  def stage(
+      df: DataFrame,
+      url: String,
+      connectionProperties: Properties,
+      schema: String,
+      table: String,
+      onConflict: OnConflict,
+      pkColumns: Seq[String] = Seq.empty,
+      batchSize: Int = 5000,
+      columnWriters: Map[String, ColumnValueWriter] = Map.empty,
+      stagingSuffix: String = "_GRAFT_STAGE"
+  ): Staged = {
+    val staging  = table + stagingSuffix
+    val mergeSql = SinkSql.mergeFromStaging(schema, table, staging, df.schema.fieldNames.toSeq, onConflict, pkColumns)
+    val empty    = Staged(schema, staging, mergeSql, 0L)
+    withConnection(url, connectionProperties) { conn =>
+      if (tableExists(conn, schema, staging)) {
+        logger.warn("Dropping leftover staging table {}.{}", schema, staging)
+        exec(conn, s"DROP TABLE ${Ident.quoteQualified(schema, staging)}")
+      }
+      exec(conn,
+        s"CREATE TABLE ${Ident.quoteQualified(schema, staging)} AS " +
+          s"SELECT * FROM ${Ident.quoteQualified(schema, table)} WITH NO DATA")
+    }
+    // No driver connection stays open while the executors write.
+    try empty.copy(rows = write(df, url, connectionProperties, schema, staging, None, Seq.empty, batchSize, columnWriters))
+    catch {
+      case e: Throwable =>
+        try withConnection(url, connectionProperties)(dropStaging(_, Seq(empty)))
+        catch { case d: java.sql.SQLException => e.addSuppressed(d) }
+        throw e
+    }
+  }
+
+  /** Second step: apply every staged table's MERGE, in the given order
+    * (parents before children under FK constraints), in ONE transaction
+    * on `conn` — all of them land or none does.
+    */
+  def mergeStaged(conn: Connection, staged: Seq[Staged]): Unit = {
+    val autoCommit = conn.getAutoCommit
+    conn.setAutoCommit(false)
+    try {
+      staged.foreach { s =>
+        logger.info("Merge SQL: {}", s.mergeSql)
+        exec(conn, s.mergeSql)
+      }
+      conn.commit()
+    } catch {
+      case e: Throwable => conn.rollback(); throw e
+    } finally conn.setAutoCommit(autoCommit)
+  }
+
+  /** Last step: drop each staging table. A drop that fails is logged and
+    * skipped, so it never hides the error that brought the caller here;
+    * the next [[stage]] of that table removes what it left.
+    */
+  def dropStaging(conn: Connection, staged: Seq[Staged]): Unit =
+    staged.foreach { s =>
+      try exec(conn, s"DROP TABLE ${Ident.quoteQualified(s.schema, s.stagingTable)}")
+      catch {
+        case e: java.sql.SQLException =>
+          logger.warn(s"Could not drop staging table ${s.schema}.${s.stagingTable}", e)
+      }
+    }
+
+  /** Upsert via stage-and-merge: [[stage]] `df`, apply its ONE atomic
+    * [[SinkSql.mergeFromStaging]] on a driver connection ([[mergeStaged]]),
+    * drop staging ([[dropStaging]]); returns the rows sent. Executes
+    * [[OnConflict]] semantics live on any ANSI-MERGE database (Derby — the
+    * embedded DB in this environment — H2, Oracle, SQL Server); PostgreSQL
+    * targets can use either this or [[write]]'s native ON CONFLICT path.
+    * Also the preferred BULK upsert shape: the conflict resolution is one
+    * set-based join in the database, and a Spark task retry merely
+    * re-appends into staging (the merge dedups), making the path tolerant
+    * of at-least-once task semantics. [[graft.Graft.runJdbc]] uses the
+    * three steps directly, to stage many tables at once and merge them in
+    * one transaction.
     *
     * Staging rows must be unique on the conflict target (standard MERGE
     * restriction — two staged rows matching one target row is an error);
@@ -271,20 +362,31 @@ object JdbcUpsertSink {
       batchSize: Int = 5000,
       columnWriters: Map[String, ColumnValueWriter] = Map.empty,
       stagingSuffix: String = "_GRAFT_STAGE"
-  ): Unit = {
-    val staging = table + stagingSuffix
-    val conn    = DriverManager.getConnection(url, connectionProperties)
-    try {
-      exec(conn,
-        s"CREATE TABLE ${Ident.quoteQualified(schema, staging)} AS " +
-          s"SELECT * FROM ${Ident.quoteQualified(schema, table)} WITH NO DATA")
-      try {
-        write(df, url, connectionProperties, schema, staging, None, Seq.empty, batchSize, columnWriters)
-        val sql = SinkSql.mergeFromStaging(schema, table, staging, df.schema.fieldNames.toSeq, onConflict, pkColumns)
-        logger.info("Merge SQL: {}", sql)
-        exec(conn, sql)
-      } finally exec(conn, s"DROP TABLE ${Ident.quoteQualified(schema, staging)}")
-    } finally conn.close()
+  ): Long = {
+    val staged =
+      stage(df, url, connectionProperties, schema, table, onConflict, pkColumns, batchSize, columnWriters, stagingSuffix)
+    withConnection(url, connectionProperties) { conn =>
+      try mergeStaged(conn, Seq(staged))
+      finally dropStaging(conn, Seq(staged))
+    }
+    staged.rows
+  }
+
+  private def withConnection[T](url: String, connectionProperties: Properties)(f: Connection => T): T = {
+    val conn = DriverManager.getConnection(url, connectionProperties)
+    try f(conn)
+    finally conn.close()
+  }
+
+  /** Whether `schema.table` exists, by exact name: `getTables` takes
+    * patterns, and `_` in a staging name matches any character there.
+    */
+  private def tableExists(conn: Connection, schema: String, table: String): Boolean = {
+    val rs = conn.getMetaData.getTables(null, schema, table, null)
+    try
+      Iterator.continually(rs).takeWhile(_.next())
+        .exists(r => r.getString("TABLE_NAME") == table && r.getString("TABLE_SCHEM") == schema)
+    finally rs.close()
   }
 
   private def exec(conn: Connection, sql: String): Unit = {
@@ -310,15 +412,13 @@ object JdbcUpsertSink {
       pkColumns: Seq[String] = Seq.empty,
       batchSize: Int = 5000,
       columnWriters: Map[String, ColumnValueWriter] = Map.empty
-  ): Unit = {
-    val conn = DriverManager.getConnection(url, connectionProperties)
-    try {
+  ): Long =
+    withConnection(url, connectionProperties) { conn =>
       val constraints = ConstraintDeferrer.selfRefConstraints(conn, schema, table)
       ConstraintDeferrer.onConnection(conn).withDeferred(constraints) {
         write(df, url, connectionProperties, schema, table, onConflict, pkColumns, batchSize, columnWriters)
       }
-    } finally conn.close()
-  }
+    }
 
   /** Execute a post-copy sequence reset for every discovered sequence
     * ([[graft.sources.JdbcCatalog.discoverSequences]]) — reference

@@ -591,6 +591,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.sinks.JdbcUpsertSink.upsertViaStagingMerge(
           batch, url, connectionProperties, schema, table, onConflict, pkColumns)
+        () // foreachBatch's Scala and Java overloads both reject a Long-returning lambda
       }
       .start()
 }

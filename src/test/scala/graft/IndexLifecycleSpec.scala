@@ -204,6 +204,19 @@ class IndexLifecycleSpec extends SparkSpec {
     }
   }
 
+  describe("IndexStore.inParallel") {
+    it("runs every thunk, throws the first failure and attaches the others") {
+      val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+      val e = the[IllegalStateException] thrownBy IndexStore.inParallel[Int](
+        () => { ran.incrementAndGet(); throw new IllegalStateException("left") },
+        () => { ran.incrementAndGet(); 1 },
+        () => { ran.incrementAndGet(); throw new IllegalStateException("right") }
+      )
+      ran.get shouldBe 3
+      (e +: e.getSuppressed.toSeq).map(_.getMessage).sorted shouldBe Seq("left", "right")
+    }
+  }
+
   describe("writer lease") {
     it("is mutually exclusive, re-entrant, and two interleaved appenders both land") {
       val dir = tmpDir("lease_")

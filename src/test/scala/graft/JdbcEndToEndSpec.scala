@@ -4,9 +4,13 @@ import graft.dsl.TableSpec
 import graft.functions.Anonymizer
 import graft.sinks.{JdbcUpsertSink, OnConflict}
 import graft.sources.JdbcCatalog
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 import java.sql.DriverManager
 import java.util.Properties
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The full reference workflow — catalog discovery, spec DSL, filter
   * propagation, anonymization, JDBC write-back — driven end-to-end against
@@ -41,6 +45,76 @@ class JdbcEndToEndSpec extends SparkSpec {
     )
     st.close(); conn.close()
   }
+
+  private def exec(sqls: String*): Unit = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      try sqls.foreach(st.executeUpdate)
+      finally st.close()
+    } finally c.close()
+  }
+
+  private def query(sql: String): List[List[Any]] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(sql)
+      val n  = rs.getMetaData.getColumnCount
+      Iterator.continually(rs).takeWhile(_.next()).map(r => (1 to n).map(r.getObject(_): Any).toList).toList
+    } finally c.close()
+  }
+
+  private def stagingTablesLeft(): List[String] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.getMetaData.getTables(null, null, "%", null)
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => s"${r.getString("TABLE_SCHEM")}.${r.getString("TABLE_NAME")}")
+        .filter(_.endsWith("_GRAFT_STAGE")).toList
+    } finally c.close()
+  }
+
+  /** Runs `body` and counts the Spark jobs it started. The listener bus is
+    * asynchronous but delivers in order, so once a marker job run
+    * afterwards is seen, every earlier job's start has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc     = spark.sparkContext
+    val jobs   = new AtomicInteger(0)
+    val marker = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      marker.await(60, TimeUnit.SECONDS) shouldBe true
+      (out, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Three FK-chained tables A <- B <- C in `schema`, with no rows. */
+  private def createChain(schema: String): Unit =
+    exec(
+      s"CREATE SCHEMA $schema",
+      s"CREATE TABLE $schema.A (ID INT PRIMARY KEY, V VARCHAR(20))",
+      s"CREATE TABLE $schema.B (ID INT PRIMARY KEY, A_ID INT NOT NULL REFERENCES $schema.A(ID), V VARCHAR(20))",
+      s"CREATE TABLE $schema.C (ID INT PRIMARY KEY, B_ID INT NOT NULL REFERENCES $schema.B(ID), V VARCHAR(20))"
+    )
+
+  private def manifestOf(schema: String) = {
+    val c = DriverManager.getConnection(url)
+    try JdbcCatalog.manifestFromMetadata(c, schema)
+    finally c.close()
+  }
+
+  private val chainSpecs: Seq[(String, TableSpec)] =
+    Seq("A", "B", "C").map(_ -> TableSpec.select(row => Seq(row.V)))
 
   describe("JdbcCatalog.manifestFromMetadata") {
     it("discovers tables, PKs, and FK edges from DatabaseMetaData") {
@@ -207,6 +281,22 @@ class JdbcEndToEndSpec extends SparkSpec {
         List((1, "old-one", 10), (2, "new-two", 99), (3, "new-three", 30))
     }
 
+    it("drops a staging table a dead process left behind, then upserts") {
+      import spark.implicits._
+      exec(
+        "CREATE TABLE UP_STALE (ID INT PRIMARY KEY, NAME VARCHAR(50), V INT)",
+        "INSERT INTO UP_STALE VALUES (1, 'old-one', 10)",
+        // Left by a run that died between CREATE and DROP, in another shape.
+        "CREATE TABLE UP_STALE_GRAFT_STAGE (JUNK INT)",
+        "INSERT INTO UP_STALE_GRAFT_STAGE VALUES (7)"
+      )
+      val df = Seq((1, "new-one", 11), (2, "new-two", 20)).toDF("ID", "NAME", "V")
+      JdbcUpsertSink.upsertViaStagingMerge(
+        df, url, props, "APP", "UP_STALE", OnConflict.doUpdate, pkColumns = Seq("ID")) shouldBe 2L
+      fetch("SELECT ID, NAME, V FROM UP_STALE ORDER BY ID") shouldBe List((1, "new-one", 11), (2, "new-two", 20))
+      stagingTablesLeft() shouldBe empty
+    }
+
     it("DO UPDATE with an explicit update-column subset leaves other columns alone") {
       import spark.implicits._
       val setup = DriverManager.getConnection(url)
@@ -223,6 +313,77 @@ class JdbcEndToEndSpec extends SparkSpec {
 
       fetch("SELECT ID, NAME, V FROM UP_SUBSET ORDER BY ID") shouldBe
         List((1, "old-one", 99)) // V updated, NAME untouched
+    }
+  }
+
+  describe("Graft.runJdbc stage-and-merge (stage every table at once, merge in one transaction)") {
+    import spark.implicits._
+
+    def chainCatalog(a: Seq[(Int, String)], b: Seq[(Int, Int, String)], c: Seq[(Int, Int, String)]): Map[String, DataFrame] =
+      Map("A" -> a.toDF("ID", "V"), "B" -> b.toDF("ID", "A_ID", "V"), "C" -> c.toDF("ID", "B_ID", "V"))
+
+    it("runs one Spark job per copied table and returns the rows each write sent") {
+      createChain("SM_JOBS")
+      val graft = new Graft(
+        chainCatalog(Seq(1 -> "a1", 2 -> "a2"), Seq((10, 1, "b1"), (11, 2, "b2")), Seq((100, 10, "c1"))),
+        manifestOf("SM_JOBS"))
+      val (counts, jobs) = jobsDuring(
+        graft.runJdbc(url, props, "SM_JOBS", onConflict = Some(OnConflict.doUpdate),
+          upsertVia = Graft.UpsertPath.StageAndMerge)(chainSpecs: _*))
+      jobs shouldBe 3
+      counts shouldBe Map("A" -> 2L, "B" -> 2L, "C" -> 1L)
+      query("SELECT C.ID, B.ID, A.ID FROM SM_JOBS.C C JOIN SM_JOBS.B B ON C.B_ID = B.ID JOIN SM_JOBS.A A ON B.A_ID = A.ID") shouldBe
+        List(List(100, 10, 1))
+      stagingTablesLeft() shouldBe empty
+    }
+
+    it("returns the rows written for frames with empty partitions, on every write path") {
+      createChain("SM_COUNTS")
+      val manifest = manifestOf("SM_COUNTS").copy(tables = Seq("A"))
+      val a        = Seq(1 -> "a1", 2 -> "a2").toDF("ID", "V").repartition(3) // at least one empty partition
+      val graft    = new Graft(Map("A" -> a), manifest)
+      val spec     = "A" -> TableSpec.select(row => Seq(row.V))
+
+      // Plain append (the level-by-level path that InsertOnConflict also takes).
+      graft.runJdbc(url, props, "SM_COUNTS")(spec) shouldBe Map("A" -> 2L)
+      graft.runJdbc(url, props, "SM_COUNTS", onConflict = Some(OnConflict.doUpdate),
+        upsertVia = Graft.UpsertPath.StageAndMerge)(spec) shouldBe Map("A" -> 2L)
+      JdbcUpsertSink.upsertViaStagingMerge(a, url, props, "SM_COUNTS", "A", OnConflict.doUpdate,
+        pkColumns = Seq("ID")) shouldBe 2L
+      JdbcUpsertSink.writeDeferringSelfRefs(a.where("ID = 1").withColumn("ID", $"ID" + 100),
+        url, props, "SM_COUNTS", "A", onConflict = None) shouldBe 1L
+      query("SELECT ID FROM SM_COUNTS.A ORDER BY ID") shouldBe List(List(1), List(2), List(101))
+    }
+
+    it("rolls every MERGE back when a late one fails, and drops every staging table") {
+      createChain("SM_TXN")
+      exec("INSERT INTO SM_TXN.A VALUES (1, 'old')", "INSERT INTO SM_TXN.B VALUES (10, 1, 'old')")
+      // C's row points at a B key that exists nowhere: its MERGE, the last
+      // in FK order, fails the target's FK check after A's and B's ran.
+      val graft = new Graft(
+        chainCatalog(Seq(1 -> "new", 2 -> "new"), Seq((10, 1, "new")), Seq((100, 99, "dangling"))),
+        manifestOf("SM_TXN"))
+      an[java.sql.SQLException] should be thrownBy
+        graft.runJdbc(url, props, "SM_TXN", onConflict = Some(OnConflict.doUpdate),
+          upsertVia = Graft.UpsertPath.StageAndMerge)(chainSpecs: _*)
+      query("SELECT ID, V FROM SM_TXN.A ORDER BY ID") shouldBe List(List(1, "old"))
+      query("SELECT ID, V FROM SM_TXN.B ORDER BY ID") shouldBe List(List(10, "old"))
+      query("SELECT ID FROM SM_TXN.C") shouldBe empty
+      stagingTablesLeft() shouldBe empty
+    }
+
+    it("reports every table whose staging failed, not only the first") {
+      createChain("SM_SHAPE")
+      exec("CREATE SCHEMA SM_EMPTY") // none of the chain's tables exist here
+      val graft = new Graft(
+        chainCatalog(Seq(1 -> "a"), Seq((10, 1, "b")), Seq((100, 10, "c"))), manifestOf("SM_SHAPE"))
+      val e = the[java.sql.SQLException] thrownBy
+        graft.runJdbc(url, props, "SM_EMPTY", onConflict = Some(OnConflict.doUpdate),
+          upsertVia = Graft.UpsertPath.StageAndMerge)(chainSpecs: _*)
+      val messages = (e +: e.getSuppressed.toSeq).map(_.getMessage)
+      messages should have size 3
+      Seq("SM_EMPTY.A", "SM_EMPTY.B", "SM_EMPTY.C").foreach(t => messages.exists(_.contains(t)) shouldBe true)
+      stagingTablesLeft() shouldBe empty
     }
   }
 
