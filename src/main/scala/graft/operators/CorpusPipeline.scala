@@ -208,7 +208,11 @@ object CorpusPipeline {
   /** When is an index WORTH compacting — the operational policy
     * [[maintainIndexes]] evaluates. All three signals are cheap relative
     * to the rewrite they may trigger: segment pressure is a directory
-    * listing, tombstone mass is a parquet footer count, and the IVF
+    * listing, tombstone mass is a footer count over the tombstone files
+    * against a footer count over every data file (driver-side, no Spark
+    * job, each footer opened with the session's Hadoop conf — well under
+    * a millisecond of CPU apiece,
+    * [[graft.operators.IndexStore.footerRowCount]]), and the IVF
     * imbalance is one thin (cell, vec_id) scan.
     *
     * `maxTombstoneFraction` compares tombstoned IDS against index ROWS —
@@ -354,7 +358,9 @@ object CorpusPipeline {
       // denominator comes from the same driver-side metadata walk as the
       // other signals (a distributed count() here cost two scheduler
       // round-trips per index per sweep — per micro-batch in the
-      // maintain-stream gates).
+      // maintain-stream gates). One footer per data file, every batch:
+      // affordable only because each opens with the session's Hadoop
+      // conf instead of parsing a fresh one.
       val dataRows = rels.headOption.map { case (rel, partCol) =>
         val dp = new org.apache.hadoop.fs.Path(if (rel.isEmpty) live else s"$live/$rel")
         val manifested = man.exists(_.exists(_.rel == rel))

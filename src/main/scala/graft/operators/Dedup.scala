@@ -1352,7 +1352,10 @@ object Dedup {
     * via [[graft.operators.IndexStore.appendBatchExactlyOnce]], so a
     * foreachBatch retry — at ANY crash point, including between the data
     * commit and the batch-token create — converges to exactly one copy
-    * of the batch's band rows. Same meta contract as the plain append.
+    * of the batch's band rows. A batch the index's ledger already records
+    * (its token, which a compaction that folded it creates, or the
+    * stream's high-water mark — [[IndexStore.batchCommitted]]) is
+    * skipped. Same meta contract as the plain append.
     */
   def appendToSignatureIndexExactlyOnce(
       index: DataFrame,
@@ -1362,10 +1365,12 @@ object Dedup {
   ): Unit = {
     val spark = index.sparkSession
     IndexStore.withWriterLease(spark, path) {
-      val m = readSignatureIndexMeta(spark, path)
-      val banded = bandedSignatures(index, m.numHashes, m.bands)
-        .withColumn("bucket", bandBucket(m.keyBuckets))
-      IndexStore.appendBatchExactlyOnce(spark, path, "", "bucket", streamId, batchId)(banded)
+      if (!IndexStore.batchCommitted(spark, path, streamId, batchId)) {
+        val m = readSignatureIndexMeta(spark, path)
+        val banded = bandedSignatures(index, m.numHashes, m.bands)
+          .withColumn("bucket", bandBucket(m.keyBuckets))
+        IndexStore.appendBatchExactlyOnce(spark, path, "", "bucket", streamId, batchId)(banded)
+      }
     }
   }
 

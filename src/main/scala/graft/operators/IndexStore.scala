@@ -1,7 +1,16 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Options, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Generation-pointer storage layer shared by every persisted serving
   * index family (MinHash signature, image fingerprint, Jaccard prefix,
@@ -449,22 +458,16 @@ private[graft] object IndexStore {
     val byPart = resolvePartDirs(spark, dd, rel, partCol, manifest)
     if (byPart.isEmpty) return spark.read.parquet(relDir) // empty index: today's behavior
     val groups = byPart.values.flatten.toSeq.distinct.groupBy(_.getParent.toString)
-    // One driver-side footer read supplies every branch's schema (the
-    // exact schema inference with mergeSchema=false would compute — it
-    // too reads a single data file's footer — minus its per-branch
-    // Spark job; probes pay that job per relation per invocation).
-    val schema = footerDataSchema(spark,
-      groups.toSeq.sortBy(_._1).flatMap(_._2.sorted))
-      .map(s => org.apache.spark.sql.types.StructType(
+    // Driver-side footer reads supply every branch's schema (the exact
+    // schema inference with mergeSchema=false would compute — it too
+    // reads a single data file's footer — minus its per-branch Spark
+    // job; probes pay that job per relation per invocation). The first
+    // dir's schema is the global one, and every other partition dir must
+    // agree with it ([[uniformDirSchema]]).
+    val schema = uniformDirSchema(spark, groups.toSeq.sortBy(_._1).flatMap(_._2.sorted))
+      .map(s => StructType(
         s.fields :+ org.apache.spark.sql.types.StructField(
           partCol, org.apache.spark.sql.types.IntegerType)))
-    // Invariant pinned loudly: ALL donor generations share one file
-    // schema. mergeSchema=false inference resolves per BRANCH, this read
-    // path resolves ONCE globally — identical only while the invariant
-    // holds, so cross-generation drift must error here, not read a
-    // donor's missing column as silent nulls. One footer read per donor
-    // group (generations are few, driver-side, ~ms each).
-    assertUniformDonorSchema(spark, groups)
     groups.toSeq.sortBy(_._1).map { case (parent, dirs) =>
       val rd = spark.read.option("basePath", parent)
       schema.foreach(rd.schema)
@@ -527,43 +530,44 @@ private[graft] object IndexStore {
       spark: SparkSession, dir: String): Option[org.apache.spark.sql.types.StructType] =
     footerDataSchema(spark, Seq(new Path(dir)))
 
-  /** Fail loudly when donor groups (distinct parent dirs feeding one
-    * [[readRel]]) disagree on their EFFECTIVE Spark schema — the
-    * footer-derived, nullability-forced column name→type map of the
-    * FIRST data file of each group (parquet is read by NAME, so column
-    * order and required/optional repetition may legitimately differ
-    * between a fresh build and a compact rewrite; a MISSING or
-    * type-changed column is the drift that would otherwise read back as
-    * silent nulls / corrupt casts under the single global schema).
-    * No-op for a single group.
+  /** The schema every partition dir of one [[readRel]] shares, from ONE
+    * footer per dir (its first data file in name order), and a loud
+    * failure when two dirs disagree on their EFFECTIVE Spark schema —
+    * the nullability-forced column name→type map (parquet is read by
+    * NAME, so column order and required/optional repetition may
+    * legitimately differ between a fresh build and a compact rewrite; a
+    * MISSING or type-changed column is the drift that would otherwise
+    * read back as silent nulls / corrupt casts under the single global
+    * schema). Every dir is checked, not one per donor generation: a
+    * bucket rewritten with a drifted schema inside one generation reads
+    * through the same global schema as a drifted donor. The dirs are
+    * listed and their footers opened concurrently ([[footerParMap]]), so
+    * the check costs one listing and one footer round-trip, not one per
+    * dir. Only each dir's first file is read, so a drifted APPEND segment
+    * beside a conforming base is not caught. None when no dir holds a
+    * data file yet.
     */
-  private def assertUniformDonorSchema(
-      spark: SparkSession, groups: Map[String, Seq[Path]]): Unit = {
-    if (groups.size <= 1) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val conv = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    val reps = groups.toSeq.sortBy(_._1).flatMap { case (parent, dirs) =>
-      dirs.sorted.iterator.flatMap { d =>
-        val fs = fsOf(spark, d)
-        dataFilesOf(fs, d).map(_._1).sorted.headOption.map(n => fs.makeQualified(new Path(d, n)))
-      }.take(1).map(parent -> _).toSeq
+  private def uniformDirSchema(spark: SparkSession, dirs: Seq[Path]): Option[StructType] = {
+    val schemas = footerParMap(dirs)(d => firstDataFile(spark, d).map(f => f -> footerSchema(spark, f)))
+      .flatten
+    def typesByName(s: StructType) = s.fields.map(fl => fl.name -> fl.dataType).toMap
+    schemas.headOption.foreach { case (f0, s0) =>
+      schemas.drop(1).foreach { case (f, s) =>
+        if (typesByName(s) != typesByName(s0)) sys.error(
+          s"readRel: donor generations disagree on file schema — $f (under ${f.getParent.getParent}) " +
+            s"has\n${typesByName(s)}\nbut $f0 (under ${f0.getParent.getParent}) has\n${typesByName(s0)}\n" +
+            "Every partition dir of one relation, in every donor generation, must share one column " +
+            "name->type set; a staged generation that widens/narrows the schema must rewrite " +
+            "carried donors too.")
+      }
     }
-    val schemas = reps.map { case (parent, f) =>
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      val msg = try in.getFooter.getFileMetaData.getSchema finally in.close()
-      val typesByName = conv.convert(msg).fields
-        .map(fl => fl.name -> nullableDeep(fl.dataType)).toMap
-      (parent, f, typesByName)
-    }
-    schemas.drop(1).foreach { case (parent, f, s) =>
-      if (s != schemas.head._3) sys.error(
-        s"readRel: donor generations disagree on file schema — $f (under $parent) has\n$s\n" +
-          s"but ${schemas.head._2} (under ${schemas.head._1}) has\n${schemas.head._3}\n" +
-          "All donor files of one relation must share one column name->type set; a staged " +
-          "generation that widens/narrows the schema must rewrite carried donors too.")
-    }
+    schemas.headOption.map(_._2)
+  }
+
+  /** The FIRST data file of `d` in name order, qualified. */
+  private def firstDataFile(spark: SparkSession, d: Path): Option[Path] = {
+    val fs = fsOf(spark, d)
+    dataFilesOf(fs, d).map(_._1).sorted.headOption.map(n => fs.makeQualified(new Path(d, n)))
   }
 
   /** The Spark schema of the FIRST data file under `dirs` (name order),
@@ -571,24 +575,70 @@ private[graft] object IndexStore {
     * mergeSchema=false inference would read, without the Spark job it
     * launches to read it. None when no data file exists yet.
     */
-  private def footerDataSchema(
-      spark: SparkSession, dirs: Seq[Path]): Option[org.apache.spark.sql.types.StructType] = {
+  private def footerDataSchema(spark: SparkSession, dirs: Seq[Path]): Option[StructType] =
+    dirs.iterator.flatMap(firstDataFile(spark, _)).nextOption().map(footerSchema(spark, _))
+
+  /** One file's footer schema as Spark reads it. Nullability is forced on
+    * every field: file-source inference does the same to inferred
+    * schemas (HadoopFsRelation), so the explicit schema must match or
+    * branch schemas could disagree.
+    */
+  private def footerSchema(spark: SparkSession, f: Path): StructType = {
+    val msg = withFooter(spark, f)(_.getFooter.getFileMetaData.getSchema)
+    val converted = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(msg)
+    StructType(converted.fields.map(f =>
+      f.copy(nullable = true, dataType = nullableDeep(f.dataType))))
+  }
+
+  // ---------------------------------------------- driver-side parquet reads
+
+  /** Open `f`'s footer with the SESSION's Hadoop conf — the one way this
+    * object opens a parquet file on the driver (with [[withGroups]] for
+    * record reads). parquet-hadoop's one-argument
+    * `ParquetFileReader.open(InputFile)` and `ParquetReader.builder(
+    * readSupport, path)` each construct a fresh `new Configuration()`,
+    * which re-parses `core-default.xml`/`core-site.xml` from the
+    * classpath: 10–15 ms of driver CPU per file, against well under a
+    * millisecond for the footer itself. The maintenance sweep opens
+    * every data file's footer on every micro-batch ([[footerRowCount]]),
+    * so that parse was about a quarter of a streaming ingest's CPU.
+    */
+  private def withFooter[T](spark: SparkSession, f: Path)(read: ParquetFileReader => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
-    dirs.iterator.flatMap { d =>
-      val fs = fsOf(spark, d)
-      dataFilesOf(fs, d).map(_._1).sorted.headOption.map(n => fs.makeQualified(new Path(d, n)))
-    }.take(1).toSeq.headOption.map { f =>
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      val msg = try in.getFooter.getFileMetaData.getSchema finally in.close()
-      // Force nullability on every field: file-source inference does the
-      // same to inferred schemas (HadoopFsRelation), so the explicit
-      // schema must match or branch schemas could disagree.
-      val converted = new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(msg)
-      org.apache.spark.sql.types.StructType(converted.fields.map(f =>
-        f.copy(nullable = true, dataType = nullableDeep(f.dataType))))
-    }
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromPath(f, conf), HadoopReadOptions.builder(conf).build())
+    try read(in) finally in.close()
+  }
+
+  /** Every record of `f` as a parquet example [[Group]], read on the
+    * driver with the session's Hadoop conf (see [[withFooter]]). The
+    * iterator is valid only inside `read`.
+    */
+  private def withGroups[T](spark: SparkSession, f: Path)(read: Iterator[Group] => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rdr = new GroupReaderBuilder(HadoopInputFile.fromPath(f, conf), new HadoopParquetConfiguration(conf))
+      .build()
+    try read(Iterator.continually(rdr.read()).takeWhile(_ != null))
+    finally rdr.close()
+  }
+
+  /** `ParquetReader.Builder`'s (InputFile, conf) constructor is protected. */
+  private final class GroupReaderBuilder(f: InputFile, conf: ParquetConfiguration)
+      extends ParquetReader.Builder[Group](f, conf) {
+    override protected def getReadSupport: ReadSupport[Group] = new GroupReadSupport()
+  }
+
+  /** `read` applied to every path concurrently on the driver, results in
+    * input order — listings and footer opens are latency-bound metadata
+    * I/O (one round-trip each on an object store), not CPU.
+    */
+  private def footerParMap[T](paths: Seq[Path])(read: Path => T): Seq[T] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    if (paths.size <= 1) paths.map(read)
+    else Await.result(Future.sequence(paths.map(p => Future(read(p)))), Duration.Inf)
   }
 
   /** Recursively mark nested element/field types nullable — the shape
@@ -785,16 +835,6 @@ private[graft] object IndexStore {
     }
   }
 
-  /** Row count of a partCol-partitioned relation from PARQUET FOOTER
-    * metadata alone — the same number `readRel(...).count()` returns
-    * (footers record exact per-row-group counts; both count raw stored
-    * rows, tombstones included), without launching a Spark job: the
-    * maintenance sweep reads this once per index per micro-batch, where
-    * a distributed count's two scheduler round-trips dwarf the handful
-    * of footer reads. Footer opens run concurrently on the driver —
-    * O(files) metadata I/O, zero data pages, the same cost class as
-    * [[relStats]]' listings.
-    */
   /** Exact DISTINCT count of a tombstone relation's single `doc_id BIGINT`
     * column, cheapest-correct path first (guide §1/§6 — the sweep pays
     * this per index per micro-batch, and it previously cost a
@@ -809,6 +849,8 @@ private[graft] object IndexStore {
     *    Group API (~1 MB of longs at the bound) — no Spark job;
     *  - else: ONE distributed distinct-count with the explicit one-column
     *    schema (kills the former mergeSchema=true footer-reading job).
+    * Footers and records open with the session's Hadoop conf
+    * ([[withFooter]], [[withGroups]]): a sub-millisecond footer each.
     */
   def tombstoneDistinctCount(spark: SparkSession, dir: String): Long = {
     val dp = new Path(dir)
@@ -816,57 +858,46 @@ private[graft] object IndexStore {
     if (!fs.exists(dp)) return 0L
     val files = dataFilesOf(fs, dp).map { case (n, _) => fs.makeQualified(new Path(dp, n)) }
     if (files.isEmpty) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
-    def rowsOf(f: Path): Long = {
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try in.getRecordCount finally in.close()
-    }
+    def rowsOf(f: Path): Long = withFooter(spark, f)(_.getRecordCount)
     if (files.size == 1) return rowsOf(files.head)
     val total = files.map(rowsOf).sum
     if (total <= 131072L) {
       val seen = new java.util.HashSet[java.lang.Long]()
       var sawNull = false
       files.foreach { f =>
-        val rdr = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-          .withConf(conf).build()
-        try {
-          var g = rdr.read()
-          while (g != null) {
-            val pt = g.getType.getType(0)
-            require(pt.isPrimitive && pt.asPrimitiveType.getPrimitiveTypeName ==
-              org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
-              s"tombstoneDistinctCount: expected a single INT64 column in $f, found ${g.getType}")
-            if (g.getFieldRepetitionCount(0) == 0) sawNull = true
-            else seen.add(g.getLong(0, 0))
-            g = rdr.read()
-          }
-        } finally rdr.close()
+        withGroups(spark, f)(_.foreach { g =>
+          val pt = g.getType.getType(0)
+          require(pt.isPrimitive && pt.asPrimitiveType.getPrimitiveTypeName ==
+            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
+            s"tombstoneDistinctCount: expected a single INT64 column in $f, found ${g.getType}")
+          if (g.getFieldRepetitionCount(0) == 0) sawNull = true
+          else seen.add(g.getLong(0, 0))
+        })
       }
       seen.size.toLong + (if (sawNull) 1L else 0L)
     } else
       spark.read.schema("doc_id BIGINT").parquet(dir).distinct().count()
   }
 
+  /** Row count of a partCol-partitioned relation from PARQUET FOOTER
+    * metadata alone — the same number `readRel(...).count()` returns
+    * (footers record exact per-row-group counts; both count raw stored
+    * rows, tombstones included), without launching a Spark job: the
+    * maintenance sweep reads this once per index per micro-batch, where
+    * a distributed count's two scheduler round-trips dwarf the footer
+    * reads. Footers open concurrently on the driver with the session's
+    * Hadoop conf ([[withFooter]]) — O(files) metadata I/O at well under a
+    * millisecond of CPU each, zero data pages, the same cost class as
+    * [[relStats]]' listings.
+    */
   def footerRowCount(
       spark: SparkSession, dd: String, rel: String, partCol: String,
       manifest: Option[Seq[ManifestEntry]]): Long = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs   = fsOf(spark, new Path(dd))
-    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = fsOf(spark, new Path(dd))
     val files = resolvePartDirs(spark, dd, rel, partCol, manifest)
       .values.flatten.toSeq.distinct
-      .flatMap(d => dataFilesOf(fs, d).map { case (n, _) => new Path(d, n) })
-    Await.result(
-      Future.sequence(files.map { f => Future {
-        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(fs.makeQualified(f), conf))
-        try in.getRecordCount finally in.close()
-      }}),
-      Duration.Inf).sum
+      .flatMap(d => dataFilesOf(fs, d).map { case (n, _) => fs.makeQualified(new Path(d, n)) })
+    footerParMap(files)(f => withFooter(spark, f)(_.getRecordCount)).sum
   }
 
   // ------------------------------------------------- tiny metadata relations
@@ -879,7 +910,8 @@ private[graft] object IndexStore {
     * lifecycle gates pay that per micro-batch, per probe, per compact,
     * where it dominates the actual bytes by orders of magnitude. Reading
     * the handful of rows with parquet-hadoop's Group API on the driver
-    * is O(one footer + one page) of local I/O, the same class of
+    * ([[withGroups]], with the session's Hadoop conf — no per-file conf
+    * parse) is O(one footer + one page) of local I/O, the same class of
     * metadata walk as [[relStats]]. Returns one column→value map per
     * row, files in name order; INT32/INT64/DOUBLE/FLOAT/BOOLEAN/BINARY
     * (as UTF-8 String) columns only — exactly what the meta writers
@@ -887,11 +919,9 @@ private[graft] object IndexStore {
     * on the driver.
     */
   def readTinyMetaRows(spark: SparkSession, dir: String): Seq[Map[String, Any]] = {
-    import org.apache.parquet.example.data.Group
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val dp   = new Path(dir)
     val fs   = fsOf(spark, dp)
-    val conf = spark.sparkContext.hadoopConfiguration
     // BINARY decodes as UTF-8 ONLY when the footer annotates it a string —
     // an unannotated (raw bytes) column must fail loudly, not come back
     // mojibake (ADVICE r15).
@@ -946,12 +976,7 @@ private[graft] object IndexStore {
         sys.error(s"readTinyMetaRows: column $k is null or absent in $dir"))
     }
     dataFilesOf(fs, dp).map(_._1).sorted.flatMap { name =>
-      val rdr = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), new Path(dp, name))
-        .withConf(conf)
-        .build()
-      try Iterator.continually(rdr.read()).takeWhile(_ != null).map(rowOf).toList
-      finally rdr.close()
+      withGroups(spark, fs.makeQualified(new Path(dp, name)))(_.map(rowOf).toList)
     }
   }
 
@@ -1541,6 +1566,46 @@ private[graft] object IndexStore {
 
   // ------------------------------------------------ selective compaction
 
+  /** The stream's committed high-water mark; -1 when absent/unreadable
+    * (token-only behavior — the conservative fallback direction).
+    */
+  private def readHwmMark(fs: FileSystem, hwm: Path): Long =
+    try {
+      if (!fs.exists(hwm)) -1L
+      else {
+        val in = fs.open(hwm)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+        finally in.close()
+      }
+    } catch { case _: Exception => -1L }
+
+  /** Has (streamId, batchId) already committed into `root` — its token
+    * exists, or the stream's high-water mark is at or above it (the
+    * token was pruned)? [[withBatchToken]] asks it before running its
+    * write, and every family's public exactly-once append asks it once
+    * per batch, under the writer lease, before writing anything: a
+    * replay of a batch a compaction already folded (and adopted —
+    * [[adoptStreamBatchTokens]]) can no longer be recognized by its file
+    * names, so only the ledger can stop it from landing twice.
+    */
+  private[graft] def batchCommitted(
+      spark: SparkSession, root: String, streamId: String, batchId: Long): Boolean = {
+    require(!streamId.exists(c => c == '/' || c == '\\'), s"streamId must be path-safe: $streamId")
+    val ledger = new Path(root, BatchTokensName)
+    val token  = new Path(ledger, s"$streamId-$batchId")
+    val fs     = fsOf(spark, token)
+    if (fs.exists(token)) return true
+    val mark = readHwmMark(fs, new Path(ledger, s"$streamId.hwm"))
+    if (batchId <= mark) {
+      org.apache.log4j.Logger.getLogger(getClass).warn(
+        s"IndexStore: stream '$streamId' re-ran batch $batchId at $root, which the " +
+          s"high-water-mark ($mark) records as ALREADY COMMITTED though its token was pruned — " +
+          "skipping the write. If this is a NEW logical stream reusing a recreated checkpoint, " +
+          "give it a fresh streamId; replaying under the old id would duplicate-append.")
+      true
+    } else false
+  }
+
   /** At-most-once write per (streamId, batchId) — the foreachBatch retry
     * guard every index-mutating stream body needs: Structured Streaming
     * re-runs a failed batch with the SAME id, so `write` runs only if no
@@ -1569,38 +1634,13 @@ private[graft] object IndexStore {
     * Returns true if `write` ran, false if the token or mark
     * short-circuited.
     */
-  /** The stream's committed high-water mark; -1 when absent/unreadable
-    * (token-only behavior — the conservative fallback direction).
-    */
-  private def readHwmMark(fs: FileSystem, hwm: Path): Long =
-    try {
-      if (!fs.exists(hwm)) -1L
-      else {
-        val in = fs.open(hwm)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }
-    } catch { case _: Exception => -1L }
-
   def withBatchToken(
       spark: SparkSession, root: String, streamId: String, batchId: Long)(write: => Unit): Boolean = {
-    require(!streamId.exists(c => c == '/' || c == '\\'), s"streamId must be path-safe: $streamId")
-    val ledger = new Path(root, BatchTokensName)
-    val token  = new Path(ledger, s"$streamId-$batchId")
-    val hwm    = new Path(ledger, s"$streamId.hwm")
-    val fs     = fsOf(spark, token)
-    if (fs.exists(token)) return false
-    val mark = readHwmMark(fs, hwm)
-    if (batchId <= mark) {
-      org.apache.log4j.Logger.getLogger(getClass).warn(
-        s"IndexStore: stream '$streamId' re-ran batch $batchId at $root, which the " +
-          s"high-water-mark ($mark) records as ALREADY COMMITTED though its token was pruned — " +
-          "skipping the write. If this is a NEW logical stream reusing a recreated checkpoint, " +
-          "give it a fresh streamId; replaying under the old id would duplicate-append.")
-      return false
-    }
+    if (batchCommitted(spark, root, streamId, batchId)) return false
     write
     commitBatchToken(spark, root, streamId, batchId)
+    val ledger = new Path(root, BatchTokensName)
+    val fs     = fsOf(spark, ledger)
     val prefix = s"$streamId-"
     // Tail depth 16: a retry re-runs the current batch and a restart the
     // last committed one — anything deeper is covered by the mark, the
@@ -1690,6 +1730,7 @@ private[graft] object IndexStore {
             "silently losing the batch's remainder). Retry the batch.", e)
     }
     pendingHeld.set(pendingHeld.get() + key)
+    sweepStageDirs(spark, root, streamId, batchId)
     try {
       val r = body
       // Delete ONLY on success: the marker must survive a crash/exception
@@ -1697,6 +1738,26 @@ private[graft] object IndexStore {
       try fs.delete(marker, false) catch { case _: java.io.IOException => () }
       r
     } finally pendingHeld.set(pendingHeld.get() - key)
+  }
+
+  /** Delete every staged-write dir a previous attempt of (streamId,
+    * batchId) left at `root`: the relation-qualified
+    * `.stage-<streamId>-<batchId>-<rel>` dirs and the older unqualified
+    * `.stage-<streamId>-<batchId>`. Runs once per batch, at the outermost
+    * [[withPendingBatch]] and before any relation stages, so concurrent
+    * relation installs of this batch never delete each other's stage.
+    * Stage dirs are only live inside an install, and installs serialize
+    * on the writer lease, so whatever matches here is a crashed attempt's.
+    */
+  private def sweepStageDirs(spark: SparkSession, root: String, streamId: String, batchId: Long): Unit = {
+    val rp    = new Path(root)
+    val fs    = fsOf(spark, rp)
+    val stage = s".stage-$streamId-$batchId"
+    try fs.listStatus(rp).foreach { st =>
+      val name = st.getPath.getName
+      if (name == stage || name.startsWith(stage + "-")) fs.delete(st.getPath, true)
+    }
+    catch { case _: java.io.FileNotFoundException => () }
   }
 
   /** EXACTLY-ONCE streaming append of a partCol-partitioned relation:
@@ -1746,8 +1807,8 @@ private[graft] object IndexStore {
     // (e.g. BM25 postings/terms/docs) run CONCURRENTLY under the shared
     // lease ([[inParallel]]), so the stage path must be unique per
     // relation or the writes collide on PATH_ALREADY_EXISTS.
+    // A previous attempt's stage dirs are gone ([[sweepStageDirs]]).
     val stage  = new Path(root, s".stage-$streamId-$batchId-$rel")
-    fs.delete(stage, true)
     df.repartition(org.apache.spark.sql.functions.col(partCol))
       .write.partitionBy(partCol).parquet(stage.toString)
     // Sweep THIS batch's previous attempt (partial files under our names).
@@ -1796,7 +1857,6 @@ private[graft] object IndexStore {
     val target = new Path(dd, rel)
     val fs     = fsOf(spark, target)
     val stage  = new Path(root, s".stage-$streamId-$batchId-$rel")
-    fs.delete(stage, true)
     df.write.parquet(stage.toString)
     val pfx = s"$StreamBatchPrefix$streamId-$batchId-"
     if (fs.exists(target))
@@ -1895,9 +1955,11 @@ private[graft] object IndexStore {
           files.foreach(f => try fs.delete(f, false) catch { case _: java.io.IOException => () })
           try fs.delete(pending, false) catch { case _: java.io.IOException => () }
         } else {
-          org.apache.log4j.Logger.getLogger(getClass).warn(
-            s"IndexStore: adopting un-tokened stream batch ($sid, $bid) folded by compaction of $root " +
-              "(its writer crashed between data commit and token create — the fold commits it)")
+          org.apache.log4j.Logger.getLogger(getClass).info(
+            s"IndexStore: compaction of $root folds stream batch ($sid, $bid), which landed " +
+              "completely but has no batch token — it was appended outside withBatchToken (a " +
+              "public exactly-once append), or its writer stopped between data commit and token " +
+              "create. Recording its token so a replay is skipped.")
           commitBatchToken(spark, root, sid, bid)
         }
       }

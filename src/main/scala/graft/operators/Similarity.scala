@@ -1456,6 +1456,10 @@ object Similarity {
     * names ([[graft.operators.IndexStore.appendBatchExactlyOnce]]), so a
     * foreachBatch retry at ANY crash point — including between the data
     * commit and the batch-token create — converges to exactly one copy.
+    * A batch the index's ledger already records
+    * ([[graft.operators.IndexStore.batchCommitted]]: its token, or the
+    * stream's high-water mark) is skipped, so a replay after a compaction
+    * folded it does not land twice.
     */
   def appendToIvfIndexExactlyOnce(
       newBatch: DataFrame,
@@ -1467,22 +1471,24 @@ object Similarity {
   ): Unit = {
     val spark = newBatch.sparkSession
     graft.operators.IndexStore.withWriterLease(spark, path) {
-      val dd    = graft.operators.IndexStore.dataDir(spark, path)
-      val cents = loadCentroids(spark, s"$dd/_graft_centroids")
-      val pqPath = new org.apache.hadoop.fs.Path(s"$dd/_graft_pq")
-      val hasPq  = pqPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pqPath)
-      val base =
-        if (!hasPq) newBatch.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-        else {
-          val model = loadPqModel(spark, pqPath.toString)
-          newBatch
-            .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
-              pqEncoder(model)(col(vecCol)).as("__e"))
-            .select(col("vec_id"), col("vec"),
-              col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
-        }
-      graft.operators.IndexStore.appendBatchExactlyOnce(
-        spark, path, "", "cell", streamId, batchId)(ivfAssign(base, "vec", cents))
+      if (!graft.operators.IndexStore.batchCommitted(spark, path, streamId, batchId)) {
+        val dd    = graft.operators.IndexStore.dataDir(spark, path)
+        val cents = loadCentroids(spark, s"$dd/_graft_centroids")
+        val pqPath = new org.apache.hadoop.fs.Path(s"$dd/_graft_pq")
+        val hasPq  = pqPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pqPath)
+        val base =
+          if (!hasPq) newBatch.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+          else {
+            val model = loadPqModel(spark, pqPath.toString)
+            newBatch
+              .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
+                pqEncoder(model)(col(vecCol)).as("__e"))
+              .select(col("vec_id"), col("vec"),
+                col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
+          }
+        graft.operators.IndexStore.appendBatchExactlyOnce(
+          spark, path, "", "cell", streamId, batchId)(ivfAssign(base, "vec", cents))
+      }
     }
   }
 

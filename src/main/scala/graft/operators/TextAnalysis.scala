@@ -1049,6 +1049,10 @@ object TextAnalysis {
     * rename re-lands independently; the additive-statistics design
     * means a transiently part-landed batch under-scores exactly like
     * today's plain three-write append until the retry completes it).
+    * A batch the index's ledger already records
+    * ([[graft.operators.IndexStore.batchCommitted]], asked once for all
+    * three relations) is skipped, so a replay after a compaction folded
+    * it does not land twice.
     */
   def appendToBm25IndexExactlyOnce(
       newDocs: DataFrame,
@@ -1065,29 +1069,30 @@ object TextAnalysis {
       // then discards the landed subset so the retry re-lands the whole
       // batch) — per-relation markers would each clear on their own
       // relation's completion and mask the between-relations window.
-      graft.operators.IndexStore.withPendingBatch(spark, path, streamId, batchId) {
-        val dd = graft.operators.IndexStore.dataDir(spark, path)
-        val termBuckets = bm25TermBuckets(spark, dd)
-        val inc    = buildBm25Index(newDocs, textCol, idCol)
-        val bucket = pmod(xxhash64(col("term")), lit(termBuckets.toLong)).cast("int").as("bucket")
-        // The three per-relation installs target DISJOINT directories and
-        // overlap ([[graft.operators.IndexStore.inParallel]] — the lease
-        // and the pending marker above already bracket them as one batch;
-        // a concurrent partial land is the same observable state as the
-        // crash-between-relations window documented above).
-        graft.operators.IndexStore.inParallel(
-          () => graft.operators.IndexStore.appendBatchExactlyOnce(
-            spark, path, "postings", "bucket", streamId, batchId)(inc.postings.withColumn("bucket", bucket)),
-          () => graft.operators.IndexStore.appendBatchExactlyOnce(
-            spark, path, "terms", "bucket", streamId, batchId)(inc.terms.withColumn("bucket", bucket)),
-          // Natural write parallelism: the install stamps every shard with
-          // (streamId, batchId) (`sb-…-<k>.parquet`), and the sweep counts
-          // distinct BATCHES, not files ([[bm25DocsSegments]]) — so a
-          // billion-row daily batch lands multi-file instead of through
-          // one serial task.
-          () => graft.operators.IndexStore.appendBatchExactlyOnceFlat(
-            spark, path, "docs", streamId, batchId)(inc.docs))
-      }
+      if (!graft.operators.IndexStore.batchCommitted(spark, path, streamId, batchId))
+        graft.operators.IndexStore.withPendingBatch(spark, path, streamId, batchId) {
+          val dd = graft.operators.IndexStore.dataDir(spark, path)
+          val termBuckets = bm25TermBuckets(spark, dd)
+          val inc    = buildBm25Index(newDocs, textCol, idCol)
+          val bucket = pmod(xxhash64(col("term")), lit(termBuckets.toLong)).cast("int").as("bucket")
+          // The three per-relation installs target DISJOINT directories and
+          // overlap ([[graft.operators.IndexStore.inParallel]] — the lease
+          // and the pending marker above already bracket them as one batch;
+          // a concurrent partial land is the same observable state as the
+          // crash-between-relations window documented above).
+          graft.operators.IndexStore.inParallel(
+            () => graft.operators.IndexStore.appendBatchExactlyOnce(
+              spark, path, "postings", "bucket", streamId, batchId)(inc.postings.withColumn("bucket", bucket)),
+            () => graft.operators.IndexStore.appendBatchExactlyOnce(
+              spark, path, "terms", "bucket", streamId, batchId)(inc.terms.withColumn("bucket", bucket)),
+            // Natural write parallelism: the install stamps every shard with
+            // (streamId, batchId) (`sb-…-<k>.parquet`), and the sweep counts
+            // distinct BATCHES, not files ([[bm25DocsSegments]]) — so a
+            // billion-row daily batch lands multi-file instead of through
+            // one serial task.
+            () => graft.operators.IndexStore.appendBatchExactlyOnceFlat(
+              spark, path, "docs", streamId, batchId)(inc.docs))
+        }
     }
   }
 

@@ -54,10 +54,51 @@ object Lineage {
     * fires. Results are partitioning-independent (set/hash semantics),
     * and keyless round-robin repartition is retry-deterministic
     * (sort-before-repartition, SPARK-23207).
+    *
+    * The count comes from the PLANNED query ([[plannedPartitions]]), not
+    * `df.rdd`: on an adaptive plan with exchanges `.rdd` runs every
+    * upstream shuffle to finalize the plan, and the caller's action then
+    * runs them again. Streaming frames pass through unchanged (they have
+    * no `.rdd` and their partitioning is the source's per trigger).
     */
   def fanOutSmall(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    if (df.isStreaming) df
+    else plannedPartitions(df) match {
+      case Some(n) if n < target => df.repartition(target)
+      case _                     => df
+    }
+  }
+
+  /** How many partitions `df` will produce, read from its physical plan
+    * without running anything: an exchange or other known output
+    * partitioning gives its count, a union sums its children, an
+    * operator that keeps its input's partitioning takes its widest
+    * child's, and a leaf scan counts the splits of the RDD it would read
+    * (file listing and split planning only, no Spark job). For an
+    * adaptive plan this is the initial plan, before any stage runs, so
+    * a post-shuffle count is the configured shuffle partitions, not the
+    * coalesced one. None when a leaf cannot be sized that way (a scan
+    * still waiting on a dynamic-pruning subquery).
+    */
+  private def plannedPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    def count(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case u: UnionExec             => u.children.map(count).sum
+      case _ => p.outputPartitioning match {
+        case _: UnknownPartitioning =>
+          if (p.children.nonEmpty) p.children.map(count).max
+          else p match {
+            case c: CodegenSupport => c.inputRDDs().map(_.getNumPartitions).sum
+            case leaf              => leaf.execute().getNumPartitions
+          }
+        case known => known.numPartitions
+      }
+    }
+    scala.util.Try(count(df.queryExecution.executedPlan)).toOption
   }
 
   /** [[truncate]] plus an explicit RELEASE handle for the checkpoint's

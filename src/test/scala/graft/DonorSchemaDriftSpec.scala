@@ -5,11 +5,12 @@ import graft.operators.IndexStore
 
 /** Pins the footer-schema invariant of the manifest read path (VERDICT
   * r15, "What's wrong" #3): [[IndexStore.readRel]] resolves ONE schema
-  * from the first donor file globally, so every donor generation of one
-  * relation MUST share one file schema. mergeSchema=false inference
-  * (what the driver-side footer read replaced) resolved per branch and
-  * failed loudly on drift; this spec asserts the fast path fails loudly
-  * too instead of reading a donor's missing column as silent nulls.
+  * from the first donor file globally, so every partition dir of one
+  * relation, in every donor generation, MUST share one file schema.
+  * mergeSchema=false inference (what the driver-side footer read
+  * replaced) resolved per branch and failed loudly on drift; this spec
+  * asserts the fast path fails loudly too instead of reading a missing
+  * column as silent nulls.
   */
 class DonorSchemaDriftSpec extends SparkSpec {
   import IndexStore.ManifestEntry
@@ -51,5 +52,37 @@ class DonorSchemaDriftSpec extends SparkSpec {
       IndexStore.readRel(spark, s"$root/_gen-00002", "rel", "bucket", man).count()
     }
     e.getMessage should include("donor generations disagree on file schema")
+  }
+
+  it("fails loudly when one bucket dir drifted inside a generation whose first bucket conforms") {
+    import spark.implicits._
+    // Each donor's FIRST file agrees, so a check of one file per donor
+    // passes; bucket=1 lacks `v`, which the global schema would read as
+    // null for every row of that bucket.
+    val root = freshRoot()
+    Seq((1L, 10L)).toDF("doc_id", "v").write.parquet(s"$root/_gen-00001/rel/bucket=0")
+    Seq(2L).toDF("doc_id").write.parquet(s"$root/_gen-00001/rel/bucket=1")
+    Seq((3L, 30L)).toDF("doc_id", "v").write.parquet(s"$root/_gen-00002/rel/bucket=2")
+    IndexStore.writeManifest(spark, s"$root/_gen-00002", Seq(
+      ManifestEntry("rel", 0, "_gen-00001/rel/bucket=0", Seq.empty),
+      ManifestEntry("rel", 1, "_gen-00001/rel/bucket=1", Seq.empty),
+      ManifestEntry("rel", 2, "_gen-00002/rel/bucket=2", Seq.empty)))
+    val man = IndexStore.readManifest(spark, s"$root/_gen-00002")
+    val e = intercept[RuntimeException] {
+      IndexStore.readRel(spark, s"$root/_gen-00002", "rel", "bucket", man).count()
+    }
+    e.getMessage should include("donor generations disagree on file schema")
+    e.getMessage should include("bucket=1")
+    // The same drift with a single donor location fails too.
+    val one = freshRoot()
+    Seq((1L, 10L)).toDF("doc_id", "v").write.parquet(s"$one/_gen-00001/rel/bucket=0")
+    Seq(2L).toDF("doc_id").write.parquet(s"$one/_gen-00001/rel/bucket=1")
+    IndexStore.writeManifest(spark, s"$one/_gen-00001", Seq(
+      ManifestEntry("rel", 0, "_gen-00001/rel/bucket=0", Seq.empty),
+      ManifestEntry("rel", 1, "_gen-00001/rel/bucket=1", Seq.empty)))
+    intercept[RuntimeException] {
+      IndexStore.readRel(spark, s"$one/_gen-00001", "rel", "bucket",
+        IndexStore.readManifest(spark, s"$one/_gen-00001")).count()
+    }.getMessage should include("donor generations disagree on file schema")
   }
 }

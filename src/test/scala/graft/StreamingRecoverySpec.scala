@@ -599,4 +599,58 @@ class StreamingRecoverySpec extends SparkSpec {
     // …while stream b (own namespace, own mark) continues unaffected.
     IndexStore.withBatchToken(spark, dir, "b", 1L)(()) shouldBe true
   }
+
+  it("a public exactly-once append replayed after a compaction folded its batch is skipped") {
+    import graft.operators.{Dedup, IndexStore, TextAnalysis}
+    // Public callers append without withBatchToken; the compaction that
+    // folds the batch adopts its token. A replay of the same (stream,
+    // batch) after that must find the token and skip: the folded rows no
+    // longer carry the batch's file names, so the append's own sweep
+    // cannot recognize them.
+    def docs(ids: Range) = ids.map(i => (i.toLong, s"alpha beta doc$i w${i % 5}"))
+      .toDF("doc_id", "text")
+    val sig = java.nio.file.Files.createTempDirectory("replay_sig_").toString + "/idx"
+    Dedup.persistSignatureIndex(Dedup.buildSignatureIndex(docs(1 to 50), "text", "doc_id"), sig)
+    val batch = Dedup.buildSignatureIndex(docs(51 to 60), "text", "doc_id")
+    Dedup.appendToSignatureIndexExactlyOnce(batch, sig, "s", 1L)
+    Dedup.loadSignatureIndex(spark, sig).count() shouldBe 60L
+    Dedup.compactSignatureIndex(spark, sig)
+    Dedup.loadSignatureIndex(spark, sig).count() shouldBe 60L
+    Dedup.appendToSignatureIndexExactlyOnce(batch, sig, "s", 1L) // the replay
+    Dedup.loadSignatureIndex(spark, sig).count() shouldBe 60L
+    // A new batch of the same stream still lands.
+    Dedup.appendToSignatureIndexExactlyOnce(
+      Dedup.buildSignatureIndex(docs(61 to 65), "text", "doc_id"), sig, "s", 2L)
+    Dedup.loadSignatureIndex(spark, sig).count() shouldBe 65L
+    // BM25 lands three relations per batch; the replay skips all of them.
+    val bm = java.nio.file.Files.createTempDirectory("replay_bm_").toString + "/idx"
+    TextAnalysis.persistBm25Index(TextAnalysis.buildBm25Index(docs(1 to 30), "text", "doc_id"), bm)
+    TextAnalysis.appendToBm25IndexExactlyOnce(docs(31 to 60), "text", "doc_id", bm, "s", 1L)
+    TextAnalysis.compactBm25Index(spark, bm)
+    TextAnalysis.appendToBm25IndexExactlyOnce(docs(31 to 60), "text", "doc_id", bm, "s", 1L)
+    IndexStore.readRelFlat(spark, IndexStore.dataDir(spark, bm), "docs").count() shouldBe 60L
+  }
+
+  it("a retried append removes every stage dir its batch left, whatever the naming") {
+    import graft.operators.Dedup
+    // Earlier code staged a batch under `.stage-<stream>-<batch>`; the
+    // current name adds the relation. A retry must remove both, and
+    // leave another batch's stage alone.
+    val dir = java.nio.file.Files.createTempDirectory("stage_left_").toString + "/idx"
+    def docs(ids: Range) = ids.map(i => (i.toLong, s"alpha beta doc$i w${i % 5}"))
+      .toDF("doc_id", "text")
+    Dedup.persistSignatureIndex(Dedup.buildSignatureIndex(docs(1 to 20), "text", "doc_id"), dir)
+    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val leftovers = Seq(".stage-s-7", ".stage-s-7-")
+    val other = ".stage-s-70-"
+    (leftovers :+ other).foreach { n =>
+      fs.create(new org.apache.hadoop.fs.Path(s"$dir/$n/bucket=0", "part-00000.parquet"), true).close()
+    }
+    Dedup.appendToSignatureIndexExactlyOnce(
+      Dedup.buildSignatureIndex(docs(21 to 30), "text", "doc_id"), dir, "s", 7L)
+    leftovers.foreach(n => fs.exists(new org.apache.hadoop.fs.Path(dir, n)) shouldBe false)
+    fs.exists(new org.apache.hadoop.fs.Path(dir, other)) shouldBe true
+    fs.delete(new org.apache.hadoop.fs.Path(dir, other), true)
+    Dedup.loadSignatureIndex(spark, dir).count() shouldBe 30L
+  }
 }
