@@ -2303,7 +2303,7 @@ object SparkEntry {
           graft.operators.IvfPinned.centroids, model, p)
         Similarity.appendToIvfIndex(emb.where(col("vec_id") > mid), "vec_id", "embedding", p)
       }
-      Similarity.deleteFromIvfIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
+      Dedup.deleteFromPersistedIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
       Similarity.compactIvfIndex(s, tmp, pqRefresh = Similarity.PqRefreshMode.Always)
       Similarity.ivfPqTopKFromPersisted(s, tmp, emb.where("vec_id < 5"), "vec_id", "embedding",
           k = 10, nprobe = Similarity.ivfIndexNlist(s, tmp), shortlist = 128)
@@ -2881,7 +2881,7 @@ object SparkEntry {
       val tmp = graft.GateCache.privateCopy(s"ivfidx_full:$dir")(p =>
         Similarity.persistIvfIndex(emb, "vec_id", "embedding",
           graft.operators.IvfPinned.centroids, p))
-      Similarity.deleteFromIvfIndex(
+      Dedup.deleteFromPersistedIndex(
         emb.where(col("vec_id") % 97 === 0).select("vec_id"), "vec_id", tmp)
       Similarity.compactIvfIndex(s, tmp)
       Similarity.ivfTopKFromPersisted(s, tmp, emb.where("vec_id < 5"), "vec_id", "embedding",
@@ -2894,7 +2894,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val tmp = graft.GateCache.privateCopy(s"bm25idx_full:$dir")(p =>
         TextAnalysis.persistBm25Index(TextAnalysis.buildBm25Index(docs, "text", "doc_id"), p))
-      TextAnalysis.deleteFromBm25Index(
+      Dedup.deleteFromPersistedIndex(
         docs.where(col("doc_id") % 97 === 0).select("doc_id"), "doc_id", tmp)
       TextAnalysis.compactBm25Index(s, tmp)
       val q = Seq(
@@ -3508,7 +3508,7 @@ object SparkEntry {
       // Mutating gate: copy-on-write from the shared pristine full build.
       val tmp = graft.GateCache.privateCopy(s"bm25idx_full:$dir")(p =>
         TextAnalysis.persistBm25Index(TextAnalysis.buildBm25Index(docs, "text", "doc_id"), p))
-      TextAnalysis.deleteFromBm25Index(
+      Dedup.deleteFromPersistedIndex(
         docs.where(col("doc_id") % 3 === 0).select("doc_id"), "doc_id", tmp)
       val q = Seq(
         (1L, "spark join window"), (2L, "hash merge sort batch"),
@@ -3533,7 +3533,7 @@ object SparkEntry {
       Similarity.persistIvfIndex(emb.where(col("vec_id") <= mid), "vec_id", "embedding",
         graft.operators.IvfPinned.centroids, tmp)
       Similarity.appendToIvfIndex(emb.where(col("vec_id") > mid), "vec_id", "embedding", tmp)
-      Similarity.deleteFromIvfIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
+      Dedup.deleteFromPersistedIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
       Similarity.compactIvfIndex(s, tmp)
       Similarity.ivfTopKFromPersisted(s, tmp, emb.where("vec_id < 5"), "vec_id", "embedding",
           k = 10, nprobe = 4)
@@ -3560,7 +3560,7 @@ object SparkEntry {
           graft.operators.IvfPinned.centroids, p)
         Similarity.appendToIvfIndex(emb.where(col("vec_id") > mid), "vec_id", "embedding", p)
       }
-      Similarity.deleteFromIvfIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
+      Dedup.deleteFromPersistedIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
       Similarity.compactIvfIndex(s, tmp, retrain = Similarity.RetrainMode.Always)
       // Exhaustive probe (nprobe = the RETRAINED index's nlist — which
       // retrainNlistFor may have grown past the pinned build constant):
@@ -3598,7 +3598,7 @@ object SparkEntry {
           graft.operators.IvfPinned.centroids, p))
       Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", tmp)
       val union = emb.select(col("vec_id"), col("embedding")).unionByName(drifted)
-      Similarity.deleteFromIvfIndex(
+      Dedup.deleteFromPersistedIndex(
         union.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
       Similarity.compactIvfIndex(s, tmp,
         retrain = Similarity.RetrainMode.Auto(maxImbalance = 2.0))
@@ -3614,7 +3614,7 @@ object SparkEntry {
       // Mutating gate: copy-on-write from the shared pristine full build.
       val tmp = graft.GateCache.privateCopy(s"ivfidx_full:$dir")(p =>
         Similarity.persistIvfIndex(emb, "vec_id", "embedding", graft.operators.IvfPinned.centroids, p))
-      Similarity.deleteFromIvfIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
+      Dedup.deleteFromPersistedIndex(emb.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", tmp)
       Similarity.ivfTopKFromPersisted(s, tmp, emb.where("vec_id < 5"), "vec_id", "embedding",
           k = 10, nprobe = 4)
         .orderBy("query_id", "rnk")
@@ -3636,7 +3636,7 @@ object SparkEntry {
           TextAnalysis.buildBm25Index(docs.where(col("doc_id") <= mid), "text", "doc_id"), p)
         TextAnalysis.appendToBm25Index(docs.where(col("doc_id") > mid), "text", "doc_id", p)
       }
-      TextAnalysis.deleteFromBm25Index(
+      Dedup.deleteFromPersistedIndex(
         docs.where(col("doc_id") % 3 === 0).select("doc_id"), "doc_id", tmp)
       TextAnalysis.compactBm25Index(s, tmp)
       val q = Seq(

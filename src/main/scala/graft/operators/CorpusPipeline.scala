@@ -78,17 +78,18 @@ object CorpusPipeline {
       minTokens, maxDupTokenFrac, nllThreshold, splits)
   }
 
-  /** Stages 2–4 (quality → LM → split), shared by both dedup fronts. */
   /** Right-to-be-forgotten across every persisted SERVING surface in one
     * call. All five graft index families (MinHash signature, image
-    * fingerprint, Jaccard prefix, IVF cell, BM25 postings) share one
-    * tombstone contract — a `(doc_id)` parquet set under
-    * `<root>/_graft_tombstones` that every probe/load path anti-joins —
-    * so a forget request fans out as |paths| metadata appends: cost
-    * O(|ids|) PER SURFACE, zero index partitions touched, serving
-    * uninterrupted. Reclaim space later by rebuilding each index from the
-    * surviving docs (overwrite-persist clears tombstones); the erasure is
-    * effective at probe time immediately.
+    * fingerprint, Jaccard prefix, IVF cell, BM25 postings) keep their
+    * deletes in the one tombstone set [[IndexStore]] owns
+    * ([[IndexStore.appendTombstones]], masked on every probe/load path by
+    * [[IndexStore.minusTombstoned]]), so a forget request fans out as
+    * |paths| calls of [[Dedup.deleteFromPersistedIndex]]: cost O(|ids|)
+    * PER SURFACE, zero index partitions touched, serving uninterrupted.
+    * The erasure is effective at probe time immediately; the next
+    * compaction of each index ([[compactIndexes]], or a
+    * [[maintainIndexes]] sweep) rewrites the partitions holding forgotten
+    * rows and drops the set.
     *
     * Returns a receipt frame (index_path, forgotten_ids) for the audit
     * trail a deletion request needs. Spec-verified end-to-end across all
@@ -340,7 +341,6 @@ object CorpusPipeline {
         if (family != "bm25") 0
         else TextAnalysis.bm25DocsSegments(spark, live)
       val maxSegments = (segCounts ++ Seq(docsSegs)).foldLeft(0)(math.max)
-      val tsPath = new org.apache.hadoop.fs.Path(s"$live/_graft_tombstones")
       // DISTINCT ids: deleteFromPersistedIndex dedupes within a call but
       // appends across calls, so a re-deleted id would otherwise count
       // twice and fire the tombstone-fraction trigger spuriously (serving
@@ -352,7 +352,7 @@ object CorpusPipeline {
       // footer-inference job PLUS the distinct-count job, per index per
       // sweep per micro-batch).
       val tombstoneRows = graft.Jobs.labeled(spark, "idx:sweep:tombstones")(
-        IndexStore.tombstoneDistinctCount(spark, tsPath.toString))
+        IndexStore.tombstoneDistinctCount(spark, new org.apache.hadoop.fs.Path(live, IndexStore.TombstonesName).toString))
       // Parquet footer statistic — no data pages read, and no Spark job
       // either: footers record exact row counts, so the sweep's
       // denominator comes from the same driver-side metadata walk as the
@@ -456,6 +456,7 @@ object CorpusPipeline {
     rows.toDF("index_path", "family", "current_generation", "reclaimable_bytes", "action")
   }
 
+  /** Stages 2–4 (quality → LM → split), shared by both dedup fronts. */
   private def chain(
       deduped: DataFrame,
       minTokens: Long,

@@ -1374,54 +1374,24 @@ object Dedup {
     }
   }
 
-  private def tombstonePath(path: String) = s"$path/_graft_tombstones"
-
-  /** LOGICAL deletes for a persisted signature index — the
-    * right-to-be-forgotten lifecycle a long-lived dedup index needs. A
-    * doc's signature lives in EVERY band row, i.e. spread across ALL
-    * bucket partitions, so an eager delete would rewrite the whole index;
-    * instead the ids append to a tombstone file under the index root
-    * (`_`-prefixed — parquet readers of the index skip it as metadata,
-    * like the meta dir) and every read path anti-joins the
+  /** LOGICAL deletes for a persisted index of ANY family (signature,
+    * fingerprint, Jaccard, IVF, BM25) — the right-to-be-forgotten
+    * lifecycle a long-lived index needs. A doc's signature lives in EVERY
+    * band row, i.e. spread across ALL bucket partitions (and a BM25 doc
+    * across all its terms' buckets), so an eager delete would rewrite the
+    * whole index; instead the ids append to the index's tombstone set
+    * ([[IndexStore.appendTombstones]]) and every read path anti-joins the
     * broadcast-small set. Delete cost: O(|deleted ids|), zero index
-    * partitions touched. Reclaim space when the set grows by rebuilding
-    * the index from surviving docs (persist(overwrite) drops tombstones).
+    * partitions touched. A compaction rewrites the partitions holding
+    * deleted rows and drops the set; a rebuild (overwrite persist) drops
+    * it too.
     */
   def deleteFromPersistedIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexStore.withWriterLease(ids.sparkSession, path) {
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("append")
-        .parquet(tombstonePath(IndexStore.dataDir(ids.sparkSession, path)))
-    }
+    IndexStore.appendTombstones(ids, idCol, path)
 
-  /** The index's tombstoned ids, if any were ever deleted. */
+  /** The index's tombstoned ids (`doc_id`), if any were ever deleted. */
   def indexTombstones(spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    tombstonesAt(spark, IndexStore.dataDir(spark, path))
-
-  /** [[indexTombstones]] against an already-RESOLVED data directory —
-    * internal probe paths resolve the generation once at entry and must
-    * not re-resolve mid-operation (a concurrent compaction could flip the
-    * pointer between reads).
-    */
-  private def tombstonesAt(spark: org.apache.spark.sql.SparkSession, dataDir: String): Option[DataFrame] = {
-    val p  = new org.apache.hadoop.fs.Path(tombstonePath(dataDir))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // Explicit schema: the relation is written by deleteFromPersistedIndex
-    // as exactly one LONG column, and inference costs a footer-reading
-    // Spark job per call (probes + compacts pay it per invocation).
-    if (fs.exists(p)) Some(
-      spark.read.schema("doc_id BIGINT").parquet(p.toString).select(col("doc_id")).distinct())
-    else None
-  }
-
-  /** `path` must be a RESOLVED data dir (see [[tombstonesAt]]). */
-  private def dropTombstoned(idx: DataFrame, joinCol: String, path: String): DataFrame =
-    tombstonesAt(idx.sparkSession, path) match {
-      case Some(ts) =>
-        idx.join(org.apache.spark.sql.functions.broadcast(ts),
-          idx(joinCol) === ts("doc_id"), "left_anti")
-      case None => idx
-    }
+    IndexStore.tombstones(spark, IndexStore.dataDir(spark, path))
 
   /** COMPACT a persisted signature index: rewrite the banded rows minus
     * the tombstoned docs, fold every touched partition's append segments
@@ -1478,36 +1448,12 @@ object Dedup {
       keepGens: Int,
       minRetentionMs: Long
   ): Unit =
-    IndexStore.swapGeneration(spark, path, dropMeta = Set("_graft_tombstones"),
+    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
       keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val root  = IndexStore.rootOf(live)
-      val ts    = tombstonesAt(spark, live)
-      val man   = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
-      val stats = IndexStore.relStats(spark, live, "", "bucket", man)
-      val multi = stats.filter(_._2.dirty).keySet
-      val rel   = IndexStore.readRel(spark, live, "", "bucket", man)
-      val tsTouched = ts match {
-        case Some(t) =>
-          IndexStore.tombstoneTouchedParts(rel, "bucket", "doc_id", t, "doc_id")
-        case None => Set.empty[Int]
-      }
-      val dirty = multi ++ tsTouched
-      def minus(df: DataFrame): DataFrame = ts match {
-        case Some(t) => df.join(org.apache.spark.sql.functions.broadcast(t), Seq("doc_id"), "left_anti")
-        case None    => df
-      }
-      val full = !selective || stats.isEmpty || dirty.size * 5 >= stats.size * 4
-      if (full)
-        minus(rel).repartition(col("bucket")).write.partitionBy("bucket").parquet(staged)
-      else if (dirty.nonEmpty)
-        minus(rel.where(col("bucket").isin(dirty.toSeq.sorted.map(b => b: Any): _*)))
-          .repartition(col("bucket")).write.partitionBy("bucket").parquet(staged)
-      // Clean partitions carry as MANIFEST REFERENCES (one line each, any
-      // filesystem); rewritten ones record their fresh base files.
-      IndexStore.writeManifest(spark, staged,
-        IndexStore.stagedEntries(spark, root, staged, "", "bucket") ++
-          IndexStore.carriedEntries(spark, root, live, "", "bucket",
-            if (full) Nil else (stats.keySet -- dirty).toSeq.sorted, man))
+      val man = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
+      val (_, entries) = IndexStore.rewriteDirty(
+        spark, live, staged, man, "", "bucket", selective, idCol = Some("doc_id"))
+      IndexStore.writeManifest(spark, staged, entries)
     }
 
   /** Compact a persisted Jaccard prefix index: both data relations
@@ -1552,31 +1498,17 @@ object Dedup {
       minRetentionMs: Long = 0L,
       refresh: RefreshMode = RefreshMode.Never
   ): Unit =
-    IndexStore.swapGeneration(spark, path, dropMeta = Set("_graft_tombstones"),
+    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
       keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val ts = tombstonesAt(spark, live)
-      def minus(df: DataFrame): DataFrame = ts match {
-        case Some(t) => df.join(org.apache.spark.sql.functions.broadcast(t), Seq("doc_id"), "left_anti")
-        case None    => df
-      }
       val (tmI, keyBuckets, docBuckets) = readJaccardIndexMetaAt(spark, live)
       val root = IndexStore.rootOf(live)
       val man  = IndexStore.readManifest(spark, live) // parsed ONCE for both relations
-      def rewriteRel(rel: String, partCol: String, tsTouched: => Set[Int]): Seq[IndexStore.ManifestEntry] = {
-        val stagedRel = s"$staged/$rel"
-        val stats = IndexStore.relStats(spark, live, rel, partCol, man)
-        val src   = IndexStore.readRel(spark, live, rel, partCol, man)
-        val dirty = stats.filter(_._2.dirty).keySet ++ (if (ts.isDefined) tsTouched else Set.empty[Int])
-        val full  = !selective || stats.isEmpty || dirty.size * 5 >= stats.size * 4
-        if (full)
-          minus(src).repartition(col(partCol)).write.partitionBy(partCol).parquet(stagedRel)
-        else if (dirty.nonEmpty)
-          minus(src.where(col(partCol).isin(dirty.toSeq.sorted.map(b => b: Any): _*)))
-            .repartition(col(partCol)).write.partitionBy(partCol).parquet(stagedRel)
-        IndexStore.stagedEntries(spark, root, staged, rel, partCol) ++
-          IndexStore.carriedEntries(spark, root, live, rel, partCol,
-            if (full) Nil else (stats.keySet -- dirty).toSeq.sorted, man)
-      }
+      // `fullsets` is partitioned by `dbucket = pmod(xxhash64(doc_id),
+      // docBuckets)`: its tombstoned partitions follow from the ids alone.
+      def rewriteFullsets(): Seq[IndexStore.ManifestEntry] =
+        IndexStore.rewriteDirty(spark, live, staged, man, "fullsets", "dbucket", selective,
+          idCol = Some("doc_id"),
+          partOfId = Some(id => pmod(xxhash64(id), lit(docBuckets.toLong)).cast("int")))._2
       val fracOpt = readExciseFracAt(spark, live)
       val doRefresh = refresh match {
         case RefreshMode.Never  => false
@@ -1609,8 +1541,8 @@ object Dedup {
           // replacement dictionary installs in the SAME atomic generation
           // (a probe never ranks by one order against the other's
           // postings).
-          val liveToks0 = Lineage.truncate(
-            minus(IndexStore.readRel(spark, live, "fullsets", "dbucket", man)).select("doc_id", "tok"))
+          val liveToks0 = Lineage.truncate(IndexStore.minusTombstoned(
+            IndexStore.readRel(spark, live, "fullsets", "dbucket", man), "doc_id", live).select("doc_id", "tok"))
           // Excised index: re-evaluate HOTNESS against the live corpus
           // under the build's frozen fraction — boilerplate that arrived
           // after the build excises now, riding the rewrite being paid
@@ -1670,19 +1602,14 @@ object Dedup {
                 // `fullsets` content is order-independent: without a hot-set
                 // update its rewrite keeps the selective dirty-partition
                 // cost model even when the order refreshed.
-                rewriteRel("fullsets", "dbucket",
-                  ts.get.select(pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int").as("dbucket"))
-                    .distinct().collect().map(_.getInt(0)).toSet)
+                rewriteFullsets()
             })
           (pE, fE)
         } else {
           val Seq(pE, fE) = IndexStore.inParallel(
-            () => rewriteRel("postings", "bucket",
-              IndexStore.tombstoneTouchedParts(
-                IndexStore.readRel(spark, live, "postings", "bucket", man), "bucket", "doc_id", ts.get, "doc_id")),
-            () => rewriteRel("fullsets", "dbucket",
-              ts.get.select(pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int").as("dbucket"))
-                .distinct().collect().map(_.getInt(0)).toSet))
+            () => IndexStore.rewriteDirty(spark, live, staged, man, "postings", "bucket", selective,
+              idCol = Some("doc_id"))._2,
+            () => rewriteFullsets())
           (pE, fE)
         }
       IndexStore.writeManifest(spark, staged, postingsEntries ++ fullsetsEntries)
@@ -1696,7 +1623,7 @@ object Dedup {
     */
   def loadSignatureIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val dd = IndexStore.dataDir(spark, path) // resolve once — never mixes generations
-    dropTombstoned(
+    IndexStore.minusTombstoned(
       IndexStore.readRel(spark, dd, "", "bucket").where(col("band") === 0).select("doc_id", "sig"),
       "doc_id", dd)
   }
@@ -1735,7 +1662,7 @@ object Dedup {
     val empty = spark.emptyDataset[(Long, Long, Double)].toDF("doc_id", "matched_id", "est_jaccard")
     if (touched.isEmpty) empty
     else {
-      val idx = dropTombstoned(
+      val idx = IndexStore.minusTombstoned(
         IndexStore.readRel(spark, dd, "", "bucket")
           .where(col("bucket").isin(touched.map(b => b: Any): _*))
           .select(col("doc_id").as("oid"), col("sig").as("osig"), col("bucket"), col("band"), col("key")),
@@ -2064,17 +1991,13 @@ object Dedup {
   private def jaccardDictDriftAt(
       spark: org.apache.spark.sql.SparkSession, dd: String): Double = {
     import org.apache.spark.sql.expressions.Window
-    val ts = tombstonesAt(spark, dd)
-    def minus(df: DataFrame): DataFrame = ts match {
-      case Some(t) => df.join(org.apache.spark.sql.functions.broadcast(t), Seq("doc_id"), "left_anti")
-      case None    => df
-    }
+    def live(rel: String, partCol: String, man: Option[Seq[IndexStore.ManifestEntry]]): DataFrame =
+      IndexStore.minusTombstoned(
+        IndexStore.readRel(spark, dd, rel, partCol, man).select("doc_id", "tok"), "doc_id", dd)
     val frozen = readFrozenJaccardRel(spark, s"$dd/_graft_jidx_dict")
     val man = IndexStore.readManifest(spark, dd) // parsed ONCE for both relations
-    val fresh = minus(IndexStore.readRel(spark, dd, "fullsets", "dbucket", man).select("doc_id", "tok"))
-      .groupBy("tok").agg(count(lit(1)).as("dfreq"))
-    val mass = minus(IndexStore.readRel(spark, dd, "postings", "bucket", man).select("doc_id", "tok"))
-      .groupBy("tok").agg(count(lit(1)).as("mass"))
+    val fresh = live("fullsets", "dbucket", man).groupBy("tok").agg(count(lit(1)).as("dfreq"))
+    val mass = live("postings", "bucket", man).groupBy("tok").agg(count(lit(1)).as("mass"))
     // Percentile of each token in a dict's (dfreq asc) order via the
     // distinct-dfreq CDF: pct = |entries with strictly smaller dfreq| / |vocab|.
     def pct(dict: DataFrame, out: String): DataFrame = {
@@ -2141,12 +2064,8 @@ object Dedup {
     readExciseFracAt(spark, dd) match {
       case None => 0.0
       case Some(frac) =>
-        val ts = tombstonesAt(spark, dd)
-        def minus(df: DataFrame): DataFrame = ts match {
-          case Some(t) => df.join(org.apache.spark.sql.functions.broadcast(t), Seq("doc_id"), "left_anti")
-          case None    => df
-        }
-        val live = minus(IndexStore.readRel(spark, dd, "fullsets", "dbucket").select("doc_id", "tok"))
+        val live = IndexStore.minusTombstoned(
+          IndexStore.readRel(spark, dd, "fullsets", "dbucket").select("doc_id", "tok"), "doc_id", dd)
         val n = live.select("doc_id").distinct().count()
         if (n == 0L) return 0.0
         val cutoff = math.max(1L, math.floor(frac * n).toLong)
@@ -2188,7 +2107,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int) =
     readJaccardIndexMetaAt(spark, IndexStore.dataDir(spark, path))
 
-  /** Meta read against an already-resolved data dir (see [[tombstonesAt]]). */
+  /** Meta read against an already-resolved data dir (see [[IndexStore.tombstones]]). */
   private def readJaccardIndexMetaAt(
       spark: org.apache.spark.sql.SparkSession, dataDir: String): (Int, Int, Int) = {
     val r = IndexStore.readTinyMetaRow(spark, s"$dataDir/_graft_jidx_meta")
@@ -2257,7 +2176,7 @@ object Dedup {
         .select("bucket", "tok", "nid", "sa"))
     val touched = nprefix.select("bucket").distinct().as[Int].collect().sorted
     if (touched.isEmpty) return (ntok, None, tm, docBuckets)
-    val postings = dropTombstoned(
+    val postings = IndexStore.minusTombstoned(
       IndexStore.readRel(spark, dd, "postings", "bucket", man)
         .where(col("bucket").isin(touched.map(b => b: Any): _*))
         .select(col("bucket"), col("tok"), col("doc_id").as("oid"), col("sz").as("sb")),
@@ -2480,8 +2399,8 @@ object Dedup {
   /** Probe a [[persistFingerprintIndex]] with a new batch: the batch's
     * band keys prune to their partitions (planning-time `isin`), the
     * pigeonhole guarantees no ≤ maxHamming pair is missed, and the exact
-    * popcount verifies candidates. Honors `_graft_tombstones` under the
-    * index root ([[deleteFromPersistedIndex]]'s file — same lifecycle).
+    * popcount verifies candidates. Honors the index's tombstones
+    * ([[deleteFromPersistedIndex]] — same lifecycle).
     * Returns (doc_id, matched_id, hamming).
     */
   def matchVsFingerprintIndex(
@@ -2502,7 +2421,7 @@ object Dedup {
     val empty = spark.emptyDataset[(Long, Long, Int)].toDF("doc_id", "matched_id", "hamming")
     if (touched.isEmpty) empty
     else {
-      val idx = dropTombstoned(
+      val idx = IndexStore.minusTombstoned(
         IndexStore.readRel(spark, dd, "", "bucket")
           .where(col("bucket").isin(touched.map(b => b: Any): _*))
           .select(col("doc_id").as("oid"), col("fp").as("ofp"), col("bucket"), col("band"), col("key")),
@@ -2844,23 +2763,11 @@ object Dedup {
   ): Unit =
     IndexStore.swapGeneration(spark, path, dropMeta = Set.empty,
       keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val root  = IndexStore.rootOf(live)
-      val man   = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
-      val stats = IndexStore.relStats(spark, live, "", "bucket", man)
-      val dirty = stats.filter(_._2.dirty).keySet
-      val src   = IndexStore.readRel(spark, live, "", "bucket", man)
-      val full  = !selective || stats.isEmpty || dirty.size * 5 >= stats.size * 4
-      if (full)
-        src.select("g", "bucket").distinct()
-          .repartition(col("bucket")).write.partitionBy("bucket").parquet(staged)
-      else if (dirty.nonEmpty)
-        src.where(col("bucket").isin(dirty.toSeq.sorted.map(b => b: Any): _*))
-          .select("g", "bucket").distinct()
-          .repartition(col("bucket")).write.partitionBy("bucket").parquet(staged)
-      IndexStore.writeManifest(spark, staged,
-        IndexStore.stagedEntries(spark, root, staged, "", "bucket") ++
-          IndexStore.carriedEntries(spark, root, live, "", "bucket",
-            if (full) Nil else (stats.keySet -- dirty).toSeq.sorted, man))
+      val man = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
+      val (_, entries) = IndexStore.rewriteDirty(
+        spark, live, staged, man, "", "bucket", selective, idCol = None,
+        shape = _.select("g", "bucket").distinct())
+      IndexStore.writeManifest(spark, staged, entries)
     }
 
   /** Excise from NEW documents every maximal span covered by k-grams that

@@ -9,7 +9,8 @@ import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.InputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col}
 import org.apache.spark.sql.types.StructType
 
 /** Generation-pointer storage layer shared by every persisted serving
@@ -43,11 +44,20 @@ import org.apache.spark.sql.types.StructType
   *    mid-flip finish; it is reclaimed by the NEXT compaction or an
   *    explicit [[vacuum]].
   *
+  *  - '''Tombstones.''' A delete appends ids to the generation's one
+  *    tombstone set ([[TombstonesName]], [[appendTombstones]]) for every
+  *    family; every probe and load masks it ([[minusTombstoned]]), and
+  *    the compaction that rewrites the rows it touches drops it. The
+  *    families never touch the set's files themselves.
+  *
   *  - '''Selective (dirty-partition-only) compaction, MANIFEST-carried.'''
   *    A full-index rewrite at 10⁹ docs to purge 0.1% of rows inverts the
-  *    amortization argument, so the family compactors rewrite ONLY dirty
-  *    partitions — those holding append segments or tombstoned rows —
-  *    and carry every clean partition into the new generation BY
+  *    amortization argument, so the family compactors share one policy
+  *    ([[rewriteDirty]], its cutover in [[decideRewrite]]; an IVF retrain
+  *    or a Jaccard dictionary refresh still rewrites in full): rewrite
+  *    ONLY dirty partitions — those holding append segments or
+  *    tombstoned rows — unless 80% or more are dirty, and carry every
+  *    clean partition into the new generation BY
   *    REFERENCE: the generation's `_graft_manifest` lists, per
   *    (relation, partition), the partition's physical HOME directory
   *    (root-relative — possibly an older generation, possibly the
@@ -713,11 +723,6 @@ private[graft] object IndexStore {
     }
   }
 
-  /** [[relStats]] for an unpartitioned relation: (files present, bytes,
-    * base files recorded, base bytes). Falls back to (files, bytes,
-    * files, bytes) — "all base" — with no manifest, the conservative
-    * direction (callers with their own baseline artifact keep using it).
-    */
   /** Data-file NAMES of an unpartitioned relation, manifest-resolved —
     * for callers that derive segment identity from names (stream-batch
     * files carry (streamId, batchId); committer files carry their write
@@ -727,23 +732,6 @@ private[graft] object IndexStore {
   def relFileNamesFlat(spark: SparkSession, dd: String, rel: String): Seq[String] = {
     val fs = fsOf(spark, new Path(dd))
     resolveFlatDirs(spark, dd, rel, readManifest(spark, dd)).flatMap(d => dataFilesOf(fs, d)).map(_._1)
-  }
-
-  def relStatsFlat(spark: SparkSession, dd: String, rel: String): RelPartStat =
-    relStatsFlat(spark, dd, rel, readManifest(spark, dd))
-
-  def relStatsFlat(
-      spark: SparkSession, dd: String, rel: String,
-      manifest: Option[Seq[ManifestEntry]]): RelPartStat = {
-    val fs      = fsOf(spark, new Path(dd))
-    val dirs    = resolveFlatDirs(spark, dd, rel, manifest)
-    val present = dirs.flatMap(d => dataFilesOf(fs, d))
-    val rec = manifest
-      .flatMap(_.find(e => e.rel == rel && e.part == -1)).map(_.files)
-    rec match {
-      case Some(r) => RelPartStat(present.size, present.map(_._2).sum, r.size, r.map(_._2).sum)
-      case None    => RelPartStat(present.size, present.map(_._2).sum, present.size, present.map(_._2).sum)
-    }
   }
 
   /** Manifest entries for partitions REWRITTEN into the staged
@@ -789,11 +777,6 @@ private[graft] object IndexStore {
     */
   def carriedEntries(
       spark: SparkSession, root: String, live: String, rel: String, partCol: String,
-      parts: Iterable[Int]): Seq[ManifestEntry] =
-    carriedEntries(spark, root, live, rel, partCol, parts, readManifest(spark, live))
-
-  def carriedEntries(
-      spark: SparkSession, root: String, live: String, rel: String, partCol: String,
       parts: Iterable[Int], liveManifest: Option[Seq[ManifestEntry]]): Seq[ManifestEntry] = {
     val fs    = fsOf(spark, new Path(root))
     val rootQ = fs.makeQualified(new Path(root)).toString
@@ -816,10 +799,6 @@ private[graft] object IndexStore {
 
   /** [[carriedEntries]] for an unpartitioned relation carried whole. */
   def carriedFlatEntry(
-      spark: SparkSession, root: String, live: String, rel: String): Seq[ManifestEntry] =
-    carriedFlatEntry(spark, root, live, rel, readManifest(spark, live))
-
-  def carriedFlatEntry(
       spark: SparkSession, root: String, live: String, rel: String,
       liveManifest: Option[Seq[ManifestEntry]]): Seq[ManifestEntry] = {
     val fs    = fsOf(spark, new Path(root))
@@ -835,8 +814,65 @@ private[graft] object IndexStore {
     }
   }
 
-  /** Exact DISTINCT count of a tombstone relation's single `doc_id BIGINT`
-    * column, cheapest-correct path first (guide §1/§6 — the sweep pays
+  // ------------------------------------------------------------- tombstones
+
+  /** The generation's logical-delete set: parquet files of one BIGINT id
+    * column under the data dir (`_`-prefixed, so relation scans skip it).
+    * It dies with the rows it masks — every compaction drops it from the
+    * swap ([[swapGeneration]]'s `dropMeta`).
+    */
+  val TombstonesName = "_graft_tombstones"
+
+  /** LOGICAL delete: append `ids` (cast to `doc_id BIGINT`, distinct
+    * within the call, one file) to the live generation's tombstone set,
+    * under the writer lease. O(|ids|); no data partition is touched —
+    * every read path masks the set ([[minusTombstoned]]) until a
+    * compaction rewrites the rows it touches.
+    */
+  def appendTombstones(ids: DataFrame, idCol: String, root: String): Unit = {
+    val spark = ids.sparkSession
+    withWriterLease(spark, root) {
+      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
+        .coalesce(1).write.mode("append")
+        .parquet(new Path(dataDir(spark, root), TombstonesName).toString)
+    }
+  }
+
+  /** Every id row of a tombstone dir. The explicit schema skips the
+    * schema-inference job; it names both columns ever written, `doc_id`
+    * now and `vec_id` in older IVF tombstone files, and each file fills
+    * the one it has, so a dir mixing the two loses no id.
+    */
+  private def tombstoneIds(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema("doc_id BIGINT, vec_id BIGINT").parquet(dir)
+      .select(coalesce(col("doc_id"), col("vec_id")).as("doc_id"))
+
+  /** The distinct tombstoned ids (`doc_id`) of a RESOLVED data dir, None
+    * when nothing was ever deleted. Probe paths resolve the generation
+    * once at entry and pass that dir, so one operation never mixes the
+    * tombstones of one generation with the rows of another.
+    */
+  def tombstones(spark: SparkSession, dd: String): Option[DataFrame] = {
+    val p = new Path(dd, TombstonesName)
+    if (fsOf(spark, p).exists(p)) Some(tombstoneIds(spark, p.toString).distinct()) else None
+  }
+
+  /** `df` minus the rows whose `idCol` is tombstoned in the resolved data
+    * dir `dd` — the mask every probe, load and compaction applies. */
+  def minusTombstoned(df: DataFrame, idCol: String, dd: String): DataFrame =
+    minus(df, idCol, tombstones(df.sparkSession, dd))
+
+  /** The broadcast anti-join behind [[minusTombstoned]]: the tombstone set
+    * is small by construction (a compaction drops it). */
+  private def minus(df: DataFrame, idCol: String, ts: Option[DataFrame]): DataFrame = ts match {
+    case Some(t) =>
+      val ids = t.select(col("doc_id").as("_graft_ts_id"))
+      df.join(broadcast(ids), col(idCol) === ids("_graft_ts_id"), "left_anti")
+    case None => df
+  }
+
+  /** Exact DISTINCT count of a tombstone relation's ids, cheapest-correct
+    * path first (guide §1/§6 — the sweep pays
     * this per index per micro-batch, and it previously cost a
     * mergeSchema-inference job plus a distributed distinct-count job):
     *  - no dir / no data file: 0 — no Spark job;
@@ -847,8 +883,9 @@ private[graft] object IndexStore {
     *  - several files but few total rows (footer sum ≤ 131072): the ids
     *    are re-distincted across batches DRIVER-side via the parquet
     *    Group API (~1 MB of longs at the bound) — no Spark job;
-    *  - else: ONE distributed distinct-count with the explicit one-column
-    *    schema (kills the former mergeSchema=true footer-reading job).
+    *  - else: ONE distributed distinct-count through the tombstone
+    *    reader ([[tombstoneIds]]: explicit schema, no inference job, and
+    *    older `vec_id` files count by their ids).
     * Footers and records open with the session's Hadoop conf
     * ([[withFooter]], [[withGroups]]): a sub-millisecond footer each.
     */
@@ -876,7 +913,7 @@ private[graft] object IndexStore {
       }
       seen.size.toLong + (if (sawNull) 1L else 0L)
     } else
-      spark.read.schema("doc_id BIGINT").parquet(dir).distinct().count()
+      tombstoneIds(spark, dir).distinct().count()
   }
 
   /** Row count of a partCol-partitioned relation from PARQUET FOOTER
@@ -1966,23 +2003,92 @@ private[graft] object IndexStore {
     }
   }
 
-  /** Partitions holding at least one TOMBSTONED row — the delete
-    * criterion of dirtiness. One column-pruned scan of
-    * (partition column, id column) semi-joined to the broadcast-small
-    * tombstone set: at 10⁹ rows this reads one thin column, against the
-    * full-width rewrite it saves.
+  // ------------------------------------------------------ selective rewrite
+
+  /** What a compaction does with one partitioned relation: rewrite every
+    * partition (`full`), or rewrite only `dirty` and carry `carry` by
+    * manifest reference.
     */
-  def tombstoneTouchedParts(
-      rel: DataFrame,
+  final case class RewriteDecision(full: Boolean, dirty: Set[Int], carry: Seq[Int])
+
+  /** The cutover every family compactor shares: a full rewrite when the
+    * caller asks for one, when the relation has no partitions yet, or when
+    * at least 80% of its partitions are dirty, where the full rewrite is
+    * the cheaper one. Otherwise the dirty partitions are rewritten and
+    * every other one is carried.
+    */
+  private[graft] def decideRewrite(selective: Boolean, parts: Set[Int], dirty: Set[Int]): RewriteDecision = {
+    val full = !selective || parts.isEmpty || dirty.size * 5 >= parts.size * 4
+    RewriteDecision(full, dirty, if (full) Nil else (parts -- dirty).toSeq.sorted)
+  }
+
+  /** One compaction step of a `partCol`-partitioned relation (`rel = ""`
+    * for an index whose data sits at the generation root), from the live
+    * generation `live` into `staged`:
+    *
+    *  - dirty = partitions holding append segments ([[relStats]]) ∪
+    *    partitions holding a tombstoned row ∪ `alsoDirty`. With
+    *    `idCol = None` the relation has no per-document rows and no
+    *    tombstones are read. The tombstoned partitions come from one
+    *    column-pruned (partCol, idCol) scan semi-joined to the broadcast
+    *    tombstone set, or, when the partition is a function of the id
+    *    (`partOfId`), from the tombstone set alone;
+    *  - [[decideRewrite]] picks full or selective;
+    *  - the rewritten partitions are read (`isin(dirty)` when selective),
+    *    tombstone-masked, `shape`d, and written
+    *    `repartition(partCol).write.partitionBy(partCol)` to `staged/rel`;
+    *  - returns the decision and the relation's manifest entries: the
+    *    staged partitions as fresh bases plus the carried ones by
+    *    reference ([[carriedEntries]]).
+    *
+    * `man` is the live generation's parsed manifest, shared by every
+    * relation of one compaction.
+    */
+  def rewriteDirty(
+      spark: SparkSession,
+      live: String,
+      staged: String,
+      man: Option[Seq[ManifestEntry]],
+      rel: String,
       partCol: String,
-      idCol: String,
-      tombstones: DataFrame,
-      tsIdCol: String
-  ): Set[Int] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val r  = rel.select(col(partCol), col(idCol))
-    val ts = tombstones.select(col(tsIdCol).as("_graft_ts_id"))
-    r.join(broadcast(ts), r(idCol) === ts("_graft_ts_id"), "left_semi")
+      selective: Boolean,
+      idCol: Option[String],
+      partOfId: Option[Column => Column] = None,
+      alsoDirty: Set[Int] = Set.empty,
+      shape: DataFrame => DataFrame = identity
+  ): (RewriteDecision, Seq[ManifestEntry]) = {
+    val root  = rootOf(live)
+    val stats = relStats(spark, live, rel, partCol, man)
+    val src   = readRel(spark, live, rel, partCol, man)
+    val ts    = idCol.flatMap(_ => tombstones(spark, live))
+    val tombstoned = (idCol, ts) match {
+      case (Some(id), Some(t)) => partOfId match {
+        case Some(f) => t.select(f(col("doc_id"))).distinct().collect().map(_.getInt(0)).toSet
+        case None    => tombstonedParts(src, partCol, id, t)
+      }
+      case _ => Set.empty[Int]
+    }
+    val d = decideRewrite(selective, stats.keySet,
+      stats.filter(_._2.dirty).keySet ++ tombstoned ++ alsoDirty)
+    if (d.full || d.dirty.nonEmpty) {
+      val in = if (d.full) src else src.where(col(partCol).isin(d.dirty.toSeq.sorted.map(p => p: Any): _*))
+      shape(idCol.fold(in)(minus(in, _, ts)))
+        .repartition(col(partCol)).write.partitionBy(partCol)
+        .parquet(if (rel.isEmpty) staged else new Path(staged, rel).toString)
+    }
+    (d, stagedEntries(spark, root, staged, rel, partCol) ++
+      carriedEntries(spark, root, live, rel, partCol, d.carry, man))
+  }
+
+  /** Partitions holding at least one TOMBSTONED row. One column-pruned
+    * scan of (partition column, id column) semi-joined to the
+    * broadcast-small tombstone set: at 10⁹ rows this reads one thin
+    * column, against the full-width rewrite it saves.
+    */
+  private def tombstonedParts(rel: DataFrame, partCol: String, idCol: String, ts: DataFrame): Set[Int] = {
+    val r   = rel.select(col(partCol), col(idCol))
+    val ids = ts.select(col("doc_id").as("_graft_ts_id"))
+    r.join(broadcast(ids), r(idCol) === ids("_graft_ts_id"), "left_semi")
       .select(col(partCol).cast("int")).distinct()
       .collect().map(_.getInt(0)).toSet
   }

@@ -627,27 +627,36 @@ object Similarity {
   ): Unit = {
     val spark = newBatch.sparkSession
     graft.operators.IndexStore.withWriterLease(spark, path) { // appenders serialize
-      val dd    = graft.operators.IndexStore.dataDir(spark, path)
-      val cents = loadCentroids(spark, s"$dd/_graft_centroids")
-      // A PQ-bearing index ([[persistIvfPqIndex]]) encodes the batch with
-      // its FROZEN codebooks — same contract as the frozen centroids: an
-      // append never changes serving geometry, only adds rows to it.
-      val pqPath = new org.apache.hadoop.fs.Path(s"$dd/_graft_pq")
-      val hasPq  = pqPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pqPath)
-      val base =
-        if (!hasPq) newBatch.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-        else {
-          val model = loadPqModel(spark, pqPath.toString)
-          newBatch
-            .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
-              pqEncoder(model)(col(vecCol)).as("__e"))
-            .select(col("vec_id"), col("vec"),
-              col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
-        }
-      ivfAssign(base, "vec", cents)
+      val dd = graft.operators.IndexStore.dataDir(spark, path)
+      ivfAppendRows(newBatch, idCol, vecCol, dd)
         .repartition(col("cell"))
         .write.mode("append").partitionBy("cell").parquet(dd)
     }
+  }
+
+  /** An append batch in the stored row shape of the index at the resolved
+    * data dir `dd`: (vec_id, vec) assigned to a cell by the index's FROZEN
+    * centroids. A PQ-bearing index ([[persistIvfPqIndex]]) also encodes
+    * the batch with its FROZEN codebooks (`pq_code`, `pq_norm`) — same
+    * contract as the frozen centroids: an append never changes serving
+    * geometry, only adds rows to it.
+    */
+  private def ivfAppendRows(newBatch: DataFrame, idCol: String, vecCol: String, dd: String): DataFrame = {
+    val spark  = newBatch.sparkSession
+    val cents  = loadCentroids(spark, s"$dd/_graft_centroids")
+    val pqPath = new org.apache.hadoop.fs.Path(s"$dd/_graft_pq")
+    val hasPq  = pqPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pqPath)
+    val base =
+      if (!hasPq) newBatch.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+      else {
+        val model = loadPqModel(spark, pqPath.toString)
+        newBatch
+          .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
+            pqEncoder(model)(col(vecCol)).as("__e"))
+          .select(col("vec_id"), col("vec"),
+            col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
+      }
+    ivfAssign(base, "vec", cents)
   }
 
   /** [[ivfTopKWith]] served from a [[persistIvfIndex]] directory with
@@ -689,12 +698,10 @@ object Similarity {
     val empty = spark.emptyDataset[(Long, Long, Long)].toDF("query_id", "neighbor_id", "rnk")
     if (probed.isEmpty) empty
     else {
-      val pruned = graft.operators.IndexStore.readRel(spark, dd, "", "cell")
-        .where(col("cell").isin(probed.map(x => x: Any): _*))
-      val live = ivfTombstonesAt(spark, dd) match {
-        case Some(ts) => pruned.join(broadcast(ts), pruned("vec_id") === ts("vec_id"), "left_anti")
-        case None     => pruned
-      }
+      val live = graft.operators.IndexStore.minusTombstoned(
+        graft.operators.IndexStore.readRel(spark, dd, "", "cell")
+          .where(col("cell").isin(probed.map(x => x: Any): _*)),
+        "vec_id", dd)
       val c = live.select(col("vec_id").as("neighbor_id"), col("vec").as("c_vec"), col("cell"))
       val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
       q.join(c, "cell")
@@ -723,49 +730,6 @@ object Similarity {
     exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
       .join(hits, Seq("query_id"), "left")
       .select(col("query_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"), col("n_exact"))
-  }
-
-  private def ivfTombstonePath(path: String) = s"$path/_graft_tombstones"
-
-  /** Logical deletes for a persisted IVF index — same tombstone design as
-    * [[graft.operators.Dedup.deleteFromPersistedIndex]]: ids append to an
-    * `_`-prefixed file (O(|deleted|), no cell partition rewritten) and
-    * the probe anti-joins the broadcast set, so a deleted vector can
-    * never be returned as a neighbor. Rebuild-persist = compaction.
-    */
-  def deleteFromIvfIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    graft.operators.IndexStore.withWriterLease(ids.sparkSession, path) {
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("append")
-        .parquet(ivfTombstonePath(graft.operators.IndexStore.dataDir(ids.sparkSession, path)))
-    }
-
-  /** The IVF index's tombstoned ids, if any were ever deleted. The column
-    * is read tolerantly (`doc_id` now, `vec_id` in older tombstone files,
-    * coalesced when a dir mixes generations) so ONE tombstone contract
-    * serves every index family — [[graft.operators.CorpusPipeline
-    * .forgetDocuments]] fans a single forget request across all of them.
-    */
-  def ivfIndexTombstones(spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    ivfTombstonesAt(spark, graft.operators.IndexStore.dataDir(spark, path))
-
-  /** [[ivfIndexTombstones]] against an already-RESOLVED data dir — probe
-    * paths resolve the generation once at entry and never re-resolve.
-    */
-  private def ivfTombstonesAt(spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
-    val p  = new org.apache.hadoop.fs.Path(ivfTombstonePath(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      // mergeSchema: a dir mixing generations (doc_id vs vec_id files)
-      // must surface BOTH columns — default inference picks one file's
-      // schema and the other generation's ids would read as NULL,
-      // silently resurfacing deleted vectors in probes.
-      val raw  = spark.read.option("mergeSchema", "true").parquet(p.toString)
-      val idCs = raw.columns.filter(Set("doc_id", "vec_id")).map(col)
-      require(idCs.nonEmpty, s"no id column among ${raw.columns.mkString(",")} in $p")
-      Some(raw.select(coalesce(idCs.toSeq: _*).as("vec_id")).distinct())
-    }
   }
 
   /** When does an IVF compaction re-train the quantizer (Lloyd on the
@@ -843,13 +807,9 @@ object Similarity {
   private[graft] def ivfCellImbalanceFrame(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val live = graft.operators.IndexStore.dataDir(spark, path)
-    val ts   = ivfTombstonesAt(spark, live)
-    val df   = graft.operators.IndexStore.readRel(spark, live, "", "cell")
-      .select(col("cell"), col("vec_id"))
-    ts match {
-      case Some(t) => df.join(broadcast(t), df("vec_id") === t("vec_id"), "left_anti")
-      case None    => df
-    }
+    graft.operators.IndexStore.minusTombstoned(
+      graft.operators.IndexStore.readRel(spark, live, "", "cell").select(col("cell"), col("vec_id")),
+      "vec_id", live)
   }
 
   private def cellImbalanceOf(cells: DataFrame): Double = {
@@ -903,13 +863,9 @@ object Similarity {
       pqRefresh: PqRefreshMode = PqRefreshMode.Never
   ): Unit = {
     import graft.operators.IndexStore
-    IndexStore.swapGeneration(spark, path, dropMeta = Set("_graft_tombstones"),
+    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
       keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val ts = ivfTombstonesAt(spark, live)
-      def minus(df: DataFrame): DataFrame = ts match {
-        case Some(t) => df.join(broadcast(t), df("vec_id") === t("vec_id"), "left_anti")
-        case None    => df
-      }
+      def minus(df: DataFrame): DataFrame = IndexStore.minusTombstoned(df, "vec_id", live)
       val doRetrain = retrain match {
         case RetrainMode.Never  => false
         case RetrainMode.Always => true
@@ -1000,27 +956,10 @@ object Similarity {
         IndexStore.writeManifest(spark, staged,
           IndexStore.stagedEntries(spark, IndexStore.rootOf(live), staged, "", "cell"))
       } else {
-        val root  = IndexStore.rootOf(live)
-        val man   = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
-        val stats = IndexStore.relStats(spark, live, "", "cell", man)
-        val multi = stats.filter(_._2.dirty).keySet
-        val rel   = IndexStore.readRel(spark, live, "", "cell", man)
-        val tsTouched = ts match {
-          case Some(t) =>
-            IndexStore.tombstoneTouchedParts(rel, "cell", "vec_id", t, "vec_id")
-          case None => Set.empty[Int]
-        }
-        val dirty = multi ++ tsTouched
-        val full  = !selective || stats.isEmpty || dirty.size * 5 >= stats.size * 4
-        if (full)
-          minus(rel).repartition(col("cell")).write.partitionBy("cell").parquet(staged)
-        else if (dirty.nonEmpty)
-          minus(rel.where(col("cell").isin(dirty.toSeq.sorted.map(c => c: Any): _*)))
-            .repartition(col("cell")).write.partitionBy("cell").parquet(staged)
-        IndexStore.writeManifest(spark, staged,
-          IndexStore.stagedEntries(spark, root, staged, "", "cell") ++
-            IndexStore.carriedEntries(spark, root, live, "", "cell",
-              if (full) Nil else (stats.keySet -- dirty).toSeq.sorted, man))
+        val man = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
+        val (_, entries) = IndexStore.rewriteDirty(
+          spark, live, staged, man, "", "cell", selective, idCol = Some("vec_id"))
+        IndexStore.writeManifest(spark, staged, entries)
       }
     }
   }
@@ -1417,12 +1356,9 @@ object Similarity {
       case None | Some((0.0, _)) => 0.0
       case Some((baseline, _)) =>
         val model = loadPqModel(spark, pq.toString)
-        val live  = graft.operators.IndexStore.readRel(spark, dd, "", "cell")
-          .select(col("vec_id"), col("vec"))
-        val masked = ivfTombstonesAt(spark, dd) match {
-          case Some(t) => live.join(broadcast(t), live("vec_id") === t("vec_id"), "left_anti")
-          case None    => live
-        }
+        val masked = graft.operators.IndexStore.minusTombstoned(
+          graft.operators.IndexStore.readRel(spark, dd, "", "cell").select(col("vec_id"), col("vec")),
+          "vec_id", dd)
         val (now, _) = pqSampledMqe(masked, "vec_id", "vec", model)
         math.max(0.0, now / baseline - 1.0)
     }
@@ -1472,22 +1408,9 @@ object Similarity {
     val spark = newBatch.sparkSession
     graft.operators.IndexStore.withWriterLease(spark, path) {
       if (!graft.operators.IndexStore.batchCommitted(spark, path, streamId, batchId)) {
-        val dd    = graft.operators.IndexStore.dataDir(spark, path)
-        val cents = loadCentroids(spark, s"$dd/_graft_centroids")
-        val pqPath = new org.apache.hadoop.fs.Path(s"$dd/_graft_pq")
-        val hasPq  = pqPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pqPath)
-        val base =
-          if (!hasPq) newBatch.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-          else {
-            val model = loadPqModel(spark, pqPath.toString)
-            newBatch
-              .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
-                pqEncoder(model)(col(vecCol)).as("__e"))
-              .select(col("vec_id"), col("vec"),
-                col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
-          }
+        val dd = graft.operators.IndexStore.dataDir(spark, path)
         graft.operators.IndexStore.appendBatchExactlyOnce(
-          spark, path, "", "cell", streamId, batchId)(ivfAssign(base, "vec", cents))
+          spark, path, "", "cell", streamId, batchId)(ivfAppendRows(newBatch, idCol, vecCol, dd))
       }
     }
   }
@@ -1587,15 +1510,12 @@ object Similarity {
     val empty = spark.emptyDataset[(Long, Long, Long)].toDF("query_id", "neighbor_id", "rnk")
     if (probed.isEmpty) return empty
     val cellFilter = col("cell").isin(probed.map(x => x: Any): _*)
-    val ts = ivfTombstonesAt(spark, dd)
     // Stage 1: the THIN scan — codes and norms only, never the vectors.
-    val thin0 = graft.operators.IndexStore.readRel(spark, dd, "", "cell")
-      .where(cellFilter)
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("pq_code"), col("pq_norm"))
-    val thin = ts match {
-      case Some(t) => thin0.join(broadcast(t), thin0("neighbor_id") === t("vec_id"), "left_anti")
-      case None    => thin0
-    }
+    val thin = graft.operators.IndexStore.minusTombstoned(
+      graft.operators.IndexStore.readRel(spark, dd, "", "cell")
+        .where(cellFilter)
+        .select(col("cell"), col("vec_id").as("neighbor_id"), col("pq_code"), col("pq_norm")),
+      "neighbor_id", dd)
     val wA = Window.partitionBy("query_id").orderBy(col("adc").desc, col("neighbor_id").asc)
     val short = thin
       .join(broadcast(qs), Seq("cell"))

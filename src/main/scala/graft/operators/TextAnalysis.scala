@@ -1106,42 +1106,6 @@ object TextAnalysis {
     graft.operators.IndexStore.readTinyMetaRow(spark, s"$dd/_graft_meta")("termBuckets")
       .asInstanceOf[Int]
 
-  private def bm25TombstonePath(path: String) = s"$path/_graft_tombstones"
-
-  /** Logical document deletes for a persisted BM25 index — the tombstone
-    * design of the signature/IVF indexes, with one BM25-specific twist:
-    * doc_freq and avgdl are GLOBAL statistics that must exclude deleted
-    * docs, so when tombstones exist the serve path recomputes term
-    * doc-frequencies from the (pruned, tombstone-filtered) postings
-    * themselves — postings carry every doc of a term, so the recount over
-    * the query's buckets is exact — and derives corpus stats from the
-    * filtered docs relation. Delete cost O(|deleted ids|); no posting
-    * rewritten. Rebuild-persist = compaction.
-    */
-  def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String): Unit =
-    graft.operators.IndexStore.withWriterLease(ids.sparkSession, path) {
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("append")
-        .parquet(bm25TombstonePath(graft.operators.IndexStore.dataDir(ids.sparkSession, path)))
-    }
-
-  /** The BM25 index's tombstoned doc ids, if any were ever deleted. */
-  def bm25IndexTombstones(spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    bm25TombstonesAt(spark, graft.operators.IndexStore.dataDir(spark, path))
-
-  /** [[bm25IndexTombstones]] against an already-RESOLVED data dir — probe
-    * paths resolve the generation once at entry and never re-resolve.
-    */
-  private def bm25TombstonesAt(spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
-    val p  = new org.apache.hadoop.fs.Path(bm25TombstonePath(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // Explicit schema (one LONG column by construction): skips the
-    // schema-inference job probes and compacts would pay per call.
-    if (fs.exists(p)) Some(
-      spark.read.schema("doc_id BIGINT").parquet(p.toString).select(col("doc_id")).distinct())
-    else None
-  }
-
   /** Compact a persisted BM25 index — the third of the
     * build → append/delete → compact lifecycle. All three relations are
     * rewritten into ONE new generation behind ONE atomic pointer flip
@@ -1174,33 +1138,18 @@ object TextAnalysis {
       minRetentionMs: Long = 0L
   ): Unit = {
     import graft.operators.IndexStore
-    IndexStore.swapGeneration(spark, path, dropMeta = Set("_graft_tombstones"),
+    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
       keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val ts = bm25TombstonesAt(spark, live)
-      def minus(df: DataFrame): DataFrame = ts match {
-        case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-        case None    => df
-      }
       // ONE dirty set governs postings AND terms: both are partitioned by
       // the same term-bucket formula, an append touches the same buckets
       // in both, and a tombstoned doc changes doc_freq exactly in the
-      // buckets its postings live in — so terms-dirty ⊆ this set, and
-      // every recount below can read the freshly-rewritten staged
-      // postings of the same buckets.
-      val root    = IndexStore.rootOf(live)
-      val man     = IndexStore.readManifest(spark, live) // parsed ONCE for all relations
-      val pStats  = IndexStore.relStats(spark, live, "postings", "bucket", man)
-      val tStats  = IndexStore.relStats(spark, live, "terms", "bucket", man)
-      val tsTouched = ts match {
-        case Some(t) =>
-          IndexStore.tombstoneTouchedParts(
-            IndexStore.readRel(spark, live, "postings", "bucket", man), "bucket", "doc_id", t, "doc_id")
-        case None => Set.empty[Int]
-      }
-      val dirty = pStats.filter(_._2.dirty).keySet ++ tStats.filter(_._2.dirty).keySet ++ tsTouched
-      val full  = !selective || pStats.isEmpty || dirty.size * 5 >= pStats.size * 4
-      val carriedParts = if (full) Nil else (pStats.keySet -- dirty).toSeq.sorted
-      val carriedTerms = if (full) Nil else (tStats.keySet -- dirty).toSeq.sorted
+      // buckets its postings live in — so the postings rewrite decides
+      // over its own dirty buckets plus the terms-dirty ones, and every
+      // recount below can read the freshly-rewritten staged postings of
+      // the same buckets.
+      val root   = IndexStore.rootOf(live)
+      val man    = IndexStore.readManifest(spark, live) // parsed ONCE for all relations
+      val tStats = IndexStore.relStats(spark, live, "terms", "bucket", man)
       // The postings→terms chain (terms recounts from the STAGED postings,
       // so it must follow them) and the independent docs rewrite run
       // CONCURRENTLY ([[IndexStore.inParallel]] — the lease is held by the
@@ -1209,18 +1158,14 @@ object TextAnalysis {
       val Seq(postingsTermsEntries, docsEntries) = IndexStore.inParallel(
         () => {
           // 1. postings: live rows only, dirty buckets rewritten, clean carried.
-          if (full)
-            minus(IndexStore.readRel(spark, live, "postings", "bucket", man))
-              .repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$staged/postings")
-          else if (dirty.nonEmpty)
-            minus(IndexStore.readRel(spark, live, "postings", "bucket", man)
-                .where(col("bucket").isin(dirty.toSeq.sorted.map(b => b: Any): _*)))
-              .repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$staged/postings")
+          val (d, postingsEntries) = IndexStore.rewriteDirty(
+            spark, live, staged, man, "postings", "bucket", selective,
+            idCol = Some("doc_id"), alsoDirty = tStats.filter(_._2.dirty).keySet)
           // Schema of the just-written staged postings (data columns + the
           // directory-encoded bucket) — passing it to the recount re-reads
           // below skips their schema-inference jobs.
           lazy val stagedPostingsSchema = org.apache.spark.sql.types.StructType(
-            minus(IndexStore.readRel(spark, live, "postings", "bucket", man)).schema
+            IndexStore.readRel(spark, live, "postings", "bucket", man).schema
               .filter(_.name != "bucket") :+
               org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType))
           // 2. terms: doc-frequencies RECOUNTED from the compacted postings of
@@ -1228,19 +1173,14 @@ object TextAnalysis {
           //    merge-on-read becomes identity again; clean buckets carried.
           //    The recount reads the PHYSICAL staged postings — exactly the
           //    rewritten buckets, no manifest resolution needed or wanted.
-          if (full)
+          if (d.full || d.dirty.nonEmpty)
             spark.read.schema(stagedPostingsSchema).parquet(s"$staged/postings")
               .groupBy("bucket", "term").agg(count(lit(1)).as("doc_freq"))
               .repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$staged/terms")
-          else if (dirty.nonEmpty)
-            spark.read.schema(stagedPostingsSchema).parquet(s"$staged/postings")
-              .where(col("bucket").isin(dirty.toSeq.sorted.map(b => b: Any): _*))
-              .groupBy("bucket", "term").agg(count(lit(1)).as("doc_freq"))
-              .repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$staged/terms")
-          IndexStore.stagedEntries(spark, root, staged, "postings", "bucket") ++
-            IndexStore.carriedEntries(spark, root, live, "postings", "bucket", carriedParts, man) ++
+          postingsEntries ++
             IndexStore.stagedEntries(spark, root, staged, "terms", "bucket") ++
-            IndexStore.carriedEntries(spark, root, live, "terms", "bucket", carriedTerms, man)
+            IndexStore.carriedEntries(spark, root, live, "terms", "bucket",
+              if (d.full) Nil else (tStats.keySet -- d.dirty).toSeq.sorted, man)
         },
         () => {
           // 3. docs: unpartitioned thin relation (doc_id, len) — rewritten
@@ -1250,9 +1190,10 @@ object TextAnalysis {
           //    No explicit repartition: the parquet read packs small appended
           //    segments into maxPartitionBytes-sized splits, so the rewrite
           //    folds file count to ~bytes/128MB without paying a shuffle.
-          val docsDirty = ts.isDefined || bm25DocsSegments(spark, live) > 1
+          val docsDirty = IndexStore.tombstones(spark, live).isDefined || bm25DocsSegments(spark, live) > 1
           if (!selective || docsDirty) {
-            minus(IndexStore.readRelFlat(spark, live, "docs", man)).write.parquet(s"$staged/docs")
+            IndexStore.minusTombstoned(IndexStore.readRelFlat(spark, live, "docs", man), "doc_id", live)
+              .write.parquet(s"$staged/docs")
             IndexStore.stagedFlatEntry(spark, root, staged, "docs")
           } else
             IndexStore.carriedFlatEntry(spark, root, live, "docs", man)
@@ -1298,18 +1239,18 @@ object TextAnalysis {
     val terms = prune(graft.operators.IndexStore.readRel(spark, dd, "terms", "bucket", man)).drop("bucket")
       .groupBy("term").agg(sum("doc_freq").as("doc_freq"))
     val docs = graft.operators.IndexStore.readRelFlat(spark, dd, "docs", man)
-    val index = bm25TombstonesAt(spark, dd) match {
-      case Some(ts) =>
+    val index =
+      if (graft.operators.IndexStore.tombstones(spark, dd).isEmpty) Bm25Index(postings, terms, docs)
+      else {
         // Deletes invalidate the stored per-term doc counts; recount from
         // the filtered postings (exact — a term's postings name all its
         // docs), and drop deleted docs from the corpus-stats relation.
-        val livePostings = postings.join(broadcast(ts), Seq("doc_id"), "left_anti")
+        val livePostings = graft.operators.IndexStore.minusTombstoned(postings, "doc_id", dd)
         Bm25Index(
           livePostings,
           livePostings.groupBy("term").agg(count(lit(1)).as("doc_freq")),
-          docs.join(broadcast(ts), Seq("doc_id"), "left_anti"))
-      case None => Bm25Index(postings, terms, docs)
-    }
+          graft.operators.IndexStore.minusTombstoned(docs, "doc_id", dd))
+      }
     bm25TopKFromIndex(index, queries, queryIdCol, queryTextCol, k, k1, b)
   }
 

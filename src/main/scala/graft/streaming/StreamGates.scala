@@ -1569,7 +1569,7 @@ object StreamGates {
       policy: graft.operators.CorpusPipeline.IndexMaintenancePolicy,
       streamId: String
   )(b: DataFrame, batchId: Long): DataFrame = {
-    import graft.operators.{CorpusPipeline, IndexStore, IvfPinned, Similarity}
+    import graft.operators.{CorpusPipeline, Dedup, IndexStore, IvfPinned, Similarity}
     IndexStore.withBatchToken(spark, dir, streamId, batchId) {
       if (batchId == 0) {
         val model = Similarity.pqTrain(b, "vec_id", "embedding", m = 16, k = 64)
@@ -1577,7 +1577,7 @@ object StreamGates {
       } else
         Similarity.appendToIvfIndexExactlyOnce(b, "vec_id", "embedding", dir, streamId, batchId)
     }
-    Similarity.deleteFromIvfIndex(
+    Dedup.deleteFromPersistedIndex(
       b.where(col("vec_id") % 3 === 0).select("vec_id"), "vec_id", dir)
     val sweep = CorpusPipeline.maintainIndexes(spark, Seq(dir), policy)
     val sp = b.sparkSession
@@ -1605,7 +1605,7 @@ object StreamGates {
       policy: graft.operators.CorpusPipeline.IndexMaintenancePolicy,
       streamId: String
   )(b: DataFrame, batchId: Long): DataFrame = {
-    import graft.operators.{CorpusPipeline, IndexStore, TextAnalysis}
+    import graft.operators.{CorpusPipeline, Dedup, IndexStore, TextAnalysis}
     IndexStore.withBatchToken(spark, dir, streamId, batchId) {
       if (batchId == 0)
         TextAnalysis.persistBm25Index(
@@ -1613,7 +1613,7 @@ object StreamGates {
       else
         TextAnalysis.appendToBm25IndexExactlyOnce(b, "text", "doc_id", dir, streamId, batchId)
     }
-    TextAnalysis.deleteFromBm25Index(
+    Dedup.deleteFromPersistedIndex(
       b.where(col("doc_id") % 3 === 0).select("doc_id"), "doc_id", dir)
     val sweep = CorpusPipeline.maintainIndexes(spark, Seq(dir), policy)
     val sp = b.sparkSession

@@ -107,7 +107,7 @@ object CompactionSoak {
       TextAnalysis.appendToBm25Index(
         docs.select((col("doc_id") + lit(c * (maxId + 1))).as("doc_id"), col("text")),
         "text", "doc_id", bmDir)
-      TextAnalysis.deleteFromBm25Index(
+      Dedup.deleteFromPersistedIndex(
         docs.where(col("doc_id") % 3 === (c % 3)).select((col("doc_id") + lit(c * (maxId + 1))).as("doc_id")),
         "doc_id", bmDir)
       row(s"bm25 cycle$c", bmDir, bmProbe())

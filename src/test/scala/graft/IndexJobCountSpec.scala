@@ -1,0 +1,125 @@
+package graft
+
+import graft.operators.{Dedup, IndexStore, Similarity, TextAnalysis}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Spark job counts of one selective compaction per index family and of
+  * one tombstoned probe. Every family's tombstone mask and dirty-partition
+  * rewrite go through [[IndexStore]]; the counts pin that the shared path
+  * launches no more jobs than each family's own copy did. Each scenario
+  * dirties a minority of partitions, so the compaction takes its selective
+  * branch (checked: at least one partition is carried by reference).
+  */
+class IndexJobCountSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Runs `body` and counts the Spark jobs it started. The listener bus is
+    * asynchronous but delivers in order, so once a marker job run
+    * afterwards is seen, every earlier job's start has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc     = spark.sparkContext
+    val jobs   = new AtomicInteger(0)
+    val marker = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      marker.await(60, TimeUnit.SECONDS) shouldBe true
+      (out, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def docsDf(ids: Range): DataFrame =
+    ids.map(i => (i.toLong, s"alpha beta gamma delta epsilon zeta eta theta doc$i word${i % 7} tail${i % 3}"))
+      .toDF("doc_id", "text")
+
+  /** Manifest entries of the live generation that point into an older
+    * location — partitions the compaction carried instead of rewriting.
+    */
+  private def carried(root: String): Int = {
+    val dd  = IndexStore.dataDir(spark, root)
+    val gen = new org.apache.hadoop.fs.Path(dd).getName
+    IndexStore.readManifest(spark, dd).getOrElse(Nil).count(e => !e.dir.startsWith(gen))
+  }
+
+  /** Counts under the session settings the library documents. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    SessionTuning.tune(spark)
+  }
+
+  describe("Spark jobs per index operation") {
+    it("signature: one tombstoned probe and one selective compaction") {
+      val dir = tmpDir("jobs_sig_")
+      Dedup.persistSignatureIndex(Dedup.buildSignatureIndex(docsDf(1 to 60), "text", "doc_id"), dir)
+      Dedup.deleteFromPersistedIndex(Seq(7L).toDF("doc_id"), "doc_id", dir)
+      val (hits, probeJobs) = jobsDuring(
+        Dedup.matchVsPersistedIndex(docsDf(7 to 8), "text", "doc_id", dir).collect())
+      hits.map(_.getLong(1)).toSeq should (contain(8L) and not contain(7L)) // doc 7 is masked
+      Dedup.persistSignatureIndex(
+        Dedup.buildSignatureIndex(docsDf(61 to 61), "text", "doc_id"), dir, append = true)
+      val (_, compactJobs) = jobsDuring(Dedup.compactSignatureIndex(spark, dir))
+      carried(dir) should be > 0
+      (probeJobs, compactJobs) shouldBe ((9, 8))
+    }
+
+    it("jaccard: one selective compaction of both relations") {
+      val dir  = tmpDir("jobs_jac_")
+      val sets = docsDf(1 to 40).select(col("doc_id"), Dedup.wordNgrams(col("text"), 3).as("bg"))
+      Dedup.persistJaccardIndex(sets, "bg", "doc_id", dir, thresholdMilli = 600)
+      Dedup.deleteFromPersistedIndex(Seq(3L).toDF("doc_id"), "doc_id", dir)
+      val (_, jobs) = jobsDuring(Dedup.compactJaccardIndex(spark, dir))
+      carried(dir) should be > 0
+      jobs shouldBe 14
+    }
+
+    it("gram: one selective compaction") {
+      val dir = tmpDir("jobs_gram_")
+      Dedup.persistGramIndex(docsDf(1 to 20), "text", "doc_id", dir, k = 20)
+      Dedup.persistGramIndex(Seq((99L, "zzzzzzzzzzqqqqqqqqqqab")).toDF("doc_id", "text"),
+        "text", "doc_id", dir, k = 20, append = true)
+      val (_, jobs) = jobsDuring(Dedup.compactGramIndex(spark, dir))
+      carried(dir) should be > 0
+      jobs shouldBe 3
+    }
+
+    it("ivf: one selective compaction") {
+      val dir = tmpDir("jobs_ivf_")
+      val emb = (1 to 40).map { i =>
+        (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
+      }.toDF("vec_id", "embedding")
+      val cents = Array.tabulate(4)(c => Array.tabulate(8)(d => (c + d % 3).toDouble))
+      Similarity.persistIvfIndex(emb, "vec_id", "embedding", cents, dir)
+      Dedup.deleteFromPersistedIndex(Seq(5L).toDF("vec_id"), "vec_id", dir)
+      val (_, jobs) = jobsDuring(Similarity.compactIvfIndex(spark, dir))
+      carried(dir) should be > 0
+      // 9 while IVF read its tombstones with schema inference (mergeSchema
+      // = one footer-reading job); the shared reader names its schema.
+      jobs shouldBe 8
+    }
+
+    it("bm25: one selective compaction of postings, terms and docs") {
+      val dir = tmpDir("jobs_bm25_")
+      TextAnalysis.persistBm25Index(TextAnalysis.buildBm25Index(docsDf(1 to 30), "text", "doc_id"), dir)
+      Dedup.deleteFromPersistedIndex(Seq(4L).toDF("doc_id"), "doc_id", dir)
+      val (_, jobs) = jobsDuring(TextAnalysis.compactBm25Index(spark, dir))
+      carried(dir) should be > 0
+      jobs shouldBe 14
+    }
+  }
+}

@@ -516,7 +516,7 @@ class IndexLifecycleSpec extends SparkSpec {
         TextAnalysis.persistBm25Index(
           TextAnalysis.buildBm25Index(docsDf(1 to 30), "text", "doc_id"), dir)
         TextAnalysis.appendToBm25Index(docsDf(31 to 60), "text", "doc_id", dir)
-        TextAnalysis.deleteFromBm25Index(
+        Dedup.deleteFromPersistedIndex(
           (1 to 60).filter(_ % 3 == 0).map(_.toLong).toDF("doc_id"), "doc_id", dir)
       }
       val sel  = tmpDir("bmsel_");  build(sel)
@@ -550,7 +550,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val docs = (1 to 40).map(i => (i.toLong, s"w${i}a w${i}b w${i}c")).toDF("doc_id", "text")
       val dir = tmpDir("bmcarry_")
       TextAnalysis.persistBm25Index(TextAnalysis.buildBm25Index(docs, "text", "doc_id"), dir)
-      TextAnalysis.deleteFromBm25Index(Seq(7L).toDF("doc_id"), "doc_id", dir)
+      Dedup.deleteFromPersistedIndex(Seq(7L).toDF("doc_id"), "doc_id", dir)
 
       TextAnalysis.compactBm25Index(spark, dir, selective = true)
 
@@ -579,7 +579,7 @@ class IndexLifecycleSpec extends SparkSpec {
       def build(dir: String): Unit = {
         Similarity.persistIvfIndex(emb(1 to 40), "vec_id", "embedding", cents, dir)
         Similarity.appendToIvfIndex(emb(41 to 80), "vec_id", "embedding", dir)
-        Similarity.deleteFromIvfIndex(
+        Dedup.deleteFromPersistedIndex(
           (1 to 80).filter(_ % 3 == 0).map(_.toLong).toDF("vec_id"), "vec_id", dir)
       }
       val sel  = tmpDir("ivfsel_");  build(sel)
@@ -609,7 +609,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val cents = Similarity.ivfCentroids(base, "vec_id", "embedding", nlist = 4)
       Similarity.persistIvfIndex(base, "vec_id", "embedding", cents, dir)
       Similarity.appendToIvfIndex(drift, "vec_id", "embedding", dir)
-      Similarity.deleteFromIvfIndex(Seq(5L, 50L).toDF("vec_id"), "vec_id", dir)
+      Dedup.deleteFromPersistedIndex(Seq(5L, 50L).toDF("vec_id"), "vec_id", dir)
 
       Similarity.compactIvfIndex(spark, dir, retrain = Similarity.RetrainMode.Always)
 
@@ -646,7 +646,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val bal = tmpDir("ivfauto_bal_")
       Similarity.persistIvfIndex(base, "vec_id", "embedding", cents, bal)
       Similarity.appendToIvfIndex(emb(41 to 80, 0.0), "vec_id", "embedding", bal)
-      Similarity.deleteFromIvfIndex(Seq(5L).toDF("vec_id"), "vec_id", bal)
+      Dedup.deleteFromPersistedIndex(Seq(5L).toDF("vec_id"), "vec_id", bal)
       val centsBefore = sortedRows(spark.read.parquet(s"$bal/_graft_centroids"))
       Similarity.ivfCellImbalance(spark, bal) should be < 2.0
       Similarity.compactIvfIndex(spark, bal,
@@ -660,7 +660,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val dr = tmpDir("ivfauto_dr_")
       Similarity.persistIvfIndex(base, "vec_id", "embedding", cents, dr)
       Similarity.appendToIvfIndex(emb(41 to 80, 10.0), "vec_id", "embedding", dr)
-      Similarity.deleteFromIvfIndex(Seq(5L).toDF("vec_id"), "vec_id", dr)
+      Dedup.deleteFromPersistedIndex(Seq(5L).toDF("vec_id"), "vec_id", dr)
       val imbDrift = Similarity.ivfCellImbalance(spark, dr)
       imbDrift should be > 2.0
       Similarity.compactIvfIndex(spark, dr,
@@ -875,7 +875,7 @@ class IndexLifecycleSpec extends SparkSpec {
       Similarity.persistIvfPqIndex(emb(1 to 40), "vec_id", "embedding",
         Similarity.ivfCentroids(emb(1 to 40), "vec_id", "embedding", nlist = 2),
         Similarity.pqTrain(emb(1 to 40), "vec_id", "embedding", m = 4, k = 8), ivfpq)
-      Similarity.deleteFromIvfIndex(
+      Dedup.deleteFromPersistedIndex(
         (1 to 40).filter(_ % 3 == 0).map(_.toLong).toDF("vec_id"), "vec_id", ivfpq)
 
       val rows = CorpusPipeline.maintainIndexes(spark, Seq(jac, bm, gram, ivfpq))

@@ -441,7 +441,7 @@ class OperatorsSpec extends SparkSpec {
       val t1 = java.nio.file.Files.createTempDirectory("bm25_del_a_").toString
       val t2 = java.nio.file.Files.createTempDirectory("bm25_del_b_").toString
       TextAnalysis.persistBm25Index(TextAnalysis.buildBm25Index(docs, "text", "doc_id"), t1)
-      TextAnalysis.deleteFromBm25Index(victims.select("doc_id"), "doc_id", t1)
+      Dedup.deleteFromPersistedIndex(victims.select("doc_id"), "doc_id", t1)
       TextAnalysis.persistBm25Index(
         TextAnalysis.buildBm25Index(docs.where("doc_id % 3 <> 0"), "text", "doc_id"), t2)
       // Strong contract: df/avgdl/N all re-derive, so SCORES (not just
@@ -991,7 +991,7 @@ class OperatorsSpec extends SparkSpec {
       // k = corpus: full rankings, so delete = exact set difference.
       val before = Similarity.ivfTopKFromPersisted(spark, tmp, qs, "vec_id", "embedding", k = 40, nprobe = 4)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      Similarity.deleteFromIvfIndex(Seq(10L, 11L).toDF("vec_id"), "vec_id", tmp)
+      Dedup.deleteFromPersistedIndex(Seq(10L, 11L).toDF("vec_id"), "vec_id", tmp)
       val after = Similarity.ivfTopKFromPersisted(spark, tmp, qs, "vec_id", "embedding", k = 40, nprobe = 4)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
       after shouldBe before.filterNot { case (_, nb) => nb == 10L || nb == 11L }
@@ -1009,8 +1009,8 @@ class OperatorsSpec extends SparkSpec {
       Seq(10L).toDF("vec_id").coalesce(1)
         .write.mode("append").parquet(s"$tmp/_graft_tombstones")
       // Current-generation delete: writes doc_id.
-      Similarity.deleteFromIvfIndex(Seq(11L).toDF("vec_id"), "vec_id", tmp)
-      Similarity.ivfIndexTombstones(spark, tmp).get
+      Dedup.deleteFromPersistedIndex(Seq(11L).toDF("vec_id"), "vec_id", tmp)
+      Dedup.indexTombstones(spark, tmp).get
         .as[Long].collect().toSet shouldBe Set(10L, 11L)
       val qs = df.where("vec_id < 2")
       val nbs = Similarity.ivfTopKFromPersisted(spark, tmp, qs, "vec_id", "embedding", k = 40, nprobe = 4)
@@ -2313,7 +2313,7 @@ class OperatorsSpec extends SparkSpec {
       spark.read.parquet(dd0).where("vec_id >= 150 AND pq_code IS NULL").count() shouldBe 0
       val (g1, b1) = serve(qs, union); g1 shouldBe b1
       // Tombstoned vectors vanish from serving.
-      Similarity.deleteFromIvfIndex(union.where("vec_id % 7 = 6").select("vec_id"), "vec_id", tmp)
+      Dedup.deleteFromPersistedIndex(union.where("vec_id % 7 = 6").select("vec_id"), "vec_id", tmp)
       val survivors = union.where("vec_id % 7 != 6")
       val (g2, b2) = serve(qs, survivors); g2 shouldBe b2
       // Retrain compact: new coarse quantizer, codes CARRIED (they

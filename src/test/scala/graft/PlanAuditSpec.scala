@@ -846,13 +846,13 @@ class PlanAuditSpec extends SparkSpec {
 
     it("ivfCellImbalance's probe reads only (cell, vec_id) — the vector column never loads") {
       withoutAqe {
-        import graft.operators.Similarity
+        import graft.operators.{Dedup, Similarity}
         val dir = java.nio.file.Files.createTempDirectory("pa_ivf_imb_").toString
         val emb = (1 to 40).map(i =>
           (i.toLong, Array.tabulate(8)(d => ((i + d) % 5).toFloat))).toDF("vec_id", "embedding")
         val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", nlist = 4)
         Similarity.persistIvfIndex(emb, "vec_id", "embedding", cents, dir)
-        Similarity.deleteFromIvfIndex(Seq(3L).toDF("vec_id"), "vec_id", dir)
+        Dedup.deleteFromPersistedIndex(Seq(3L).toDF("vec_id"), "vec_id", dir)
         val plan = executed(
           Similarity.ivfCellImbalanceFrame(spark, dir).groupBy("cell").count())
         val scans = plan.collect {

@@ -49,4 +49,13 @@ class TombstoneCountSpec extends SparkSpec {
     IndexStore.tombstoneDistinctCount(spark, dir) shouldBe 140000L
     IndexStore.tombstoneDistinctCount(spark, dir) shouldBe distributedDistinct(dir)
   }
+
+  it("large set with legacy vec_id files: every id counts") {
+    import spark.implicits._
+    val dir = freshDir()
+    // Older IVF tombstone files name their one column vec_id.
+    (1L to 140000L).toDF("vec_id").coalesce(1).write.mode("append").parquet(dir)
+    appendBatch(dir, Seq(140001L))
+    IndexStore.tombstoneDistinctCount(spark, dir) shouldBe 140001L
+  }
 }
