@@ -1314,42 +1314,23 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = index.sparkSession
     import spark.implicits._
-    val banded = bandedSignatures(index, numHashes, bands)
-      .withColumn("bucket", bandBucket(keyBuckets))
-      // One shuffle on the partition column → each task owns whole buckets,
-      // so the write emits one file per (task, bucket) instead of
-      // tasks×buckets small files.
-      .repartition(col("bucket"))
+    val banded = IndexStore.Relation("", "bucket",
+      bandedSignatures(index, numHashes, bands).withColumn("bucket", bandBucket(keyBuckets)))
     if (append)
-      // Writer lease: two concurrent appenders (daily crawl × backfill)
-      // would interleave committer temporaries and silently lose files —
-      // they serialize here, the second waiting or failing loudly.
-      IndexStore.withWriterLease(spark, path) {
+      IndexStore.append(spark, path) { _ =>
         val m = readSignatureIndexMeta(spark, path)
         require(m == SignatureIndexMeta(n, numHashes, bands, keyBuckets),
           s"persistSignatureIndex(append): parameters $n/$numHashes/$bands/$keyBuckets do not match the existing index $m")
-        banded.write.mode("append").partitionBy("bucket")
-          .parquet(IndexStore.dataDir(spark, path))
+        Seq(banded)
       }
     else
-      // Flat roots write in place; a root that has been compacted (and so
-      // carries generations) rebuilds as a NEW generation + atomic flip,
-      // never interrupting concurrent probes.
-      IndexStore.overwriteRoot(spark, path) { dir =>
-        // SEQUENTIAL on purpose: the banded overwrite-write targets `dir`
-        // ITSELF and Spark's static overwrite deletes the whole dir at
-        // job start — a concurrently-written meta subdir would race that
-        // delete (cf. the BM25 build, whose relations live in disjoint
-        // subdirs and do overlap via [[IndexStore.inParallel]]).
-        banded.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-        Seq((n, numHashes, bands, keyBuckets)).toDF("n", "numHashes", "bands", "keyBuckets")
-          .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
-      }
+      IndexStore.build(spark, path, Seq(banded, IndexStore.Relation.flat("_graft_index_meta",
+        Seq((n, numHashes, bands, keyBuckets)).toDF("n", "numHashes", "bands", "keyBuckets").coalesce(1))))
   }
 
   /** [[persistSignatureIndex]]'s append for STREAMING bodies: the batch
     * lands under deterministic (streamId, batchId)-derived file names
-    * via [[graft.operators.IndexStore.appendBatchExactlyOnce]], so a
+    * via [[graft.operators.IndexStore.appendExactlyOnce]], so a
     * foreachBatch retry — at ANY crash point, including between the data
     * commit and the batch-token create — converges to exactly one copy
     * of the batch's band rows. A batch the index's ledger already records
@@ -1362,17 +1343,12 @@ object Dedup {
       path: String,
       streamId: String,
       batchId: Long
-  ): Unit = {
-    val spark = index.sparkSession
-    IndexStore.withWriterLease(spark, path) {
-      if (!IndexStore.batchCommitted(spark, path, streamId, batchId)) {
-        val m = readSignatureIndexMeta(spark, path)
-        val banded = bandedSignatures(index, m.numHashes, m.bands)
-          .withColumn("bucket", bandBucket(m.keyBuckets))
-        IndexStore.appendBatchExactlyOnce(spark, path, "", "bucket", streamId, batchId)(banded)
-      }
+  ): Unit =
+    IndexStore.appendExactlyOnce(index.sparkSession, path, streamId, batchId) { _ =>
+      val m = readSignatureIndexMeta(index.sparkSession, path)
+      Seq(IndexStore.Relation("", "bucket",
+        bandedSignatures(index, m.numHashes, m.bands).withColumn("bucket", bandBucket(m.keyBuckets))))
     }
-  }
 
   /** LOGICAL deletes for a persisted index of ANY family (signature,
     * fingerprint, Jaccard, IVF, BM25) — the right-to-be-forgotten
@@ -1571,11 +1547,10 @@ object Dedup {
           // writes below read shared materialized inputs — independent.
           val Seq(pE, fE) = IndexStore.inParallel(
             () => {
-              jaccardPrefix(liveToks, freshDict, tmI.toLong)
-                .withColumn("bucket", pmod(xxhash64(col("tok")), lit(keyBuckets.toLong)).cast("int"))
-                .repartition(col("bucket"))
-                .write.partitionBy("bucket").parquet(s"$staged/postings")
-              freshDict.write.parquet(s"$staged/_graft_jidx_dict") // wins over meta carry
+              IndexStore.writeStaged(spark, staged,
+                IndexStore.Relation("postings", "bucket", jaccardPrefix(liveToks, freshDict, tmI.toLong)
+                  .withColumn("bucket", pmod(xxhash64(col("tok")), lit(keyBuckets.toLong)).cast("int"))),
+                IndexStore.Relation.flat("_graft_jidx_dict", freshDict)) // wins over meta carry
               IndexStore.stagedEntries(spark, root, staged, "postings", "bucket")
             },
             () => newHot match {
@@ -1591,12 +1566,10 @@ object Dedup {
                   if (oldHotP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(oldHotP))
                     readFrozenJaccardRel(spark, oldHotP.toString).select("tok")
                   else h.limit(0)
-                oldHot.unionByName(h).distinct()
-                  .write.parquet(s"$staged/_graft_jidx_hot") // wins over meta carry
-                liveToks
-                  .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int"))
-                  .repartition(col("dbucket"))
-                  .write.partitionBy("dbucket").parquet(s"$staged/fullsets")
+                IndexStore.writeStaged(spark, staged,
+                  IndexStore.Relation.flat("_graft_jidx_hot", oldHot.unionByName(h).distinct()), // wins over meta carry
+                  IndexStore.Relation("fullsets", "dbucket", liveToks
+                    .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int"))))
                 IndexStore.stagedEntries(spark, root, staged, "fullsets", "dbucket")
               case None =>
                 // `fullsets` content is order-independent: without a hot-set
@@ -1856,88 +1829,56 @@ object Dedup {
       s"thresholdMilli must be in (0, 1000], got $thresholdMilli")
     exciseBoilerplateFrac.foreach(f => require(f > 0.0 && f <= 1.0,
       s"exciseBoilerplateFrac must be in (0, 1], got $f"))
-    import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     import spark.implicits._
-    val tm = thresholdMilli.toLong
     val tok0 = df
       .select(col(idCol).cast("long").as("doc_id"), explode(col(setCol)).as("tok"))
       .distinct()
-    // Appends hold the writer lease for the whole multi-relation write
-    // (postings + fullsets must land as one logical append) and resolve
-    // the generation inside it — see [[IndexStore.withWriterLease]].
-    def doPersist(dir: String): Unit = {
-    val hotPath = s"$dir/_graft_jidx_hot"
-    def minusHot(t: DataFrame): DataFrame =
-      t.join(org.apache.spark.sql.functions.broadcast(
-        readFrozenJaccardRel(spark, hotPath).select("tok")), Seq("tok"), "left_anti")
-    val tok =
-      if (append) {
-        // Excise by the FROZEN hot set (same universe as the index).
-        val hp = new org.apache.hadoop.fs.Path(hotPath)
-        if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)) minusHot(tok0)
-        else tok0
-      } else exciseBoilerplateFrac match {
-        case None =>
-          // A flat-root rebuild without excision must not leave stale
-          // excision artifacts from an earlier excised build steering
-          // probes or refresh compacts.
-          val fsX = new org.apache.hadoop.fs.Path(hotPath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fsX.delete(new org.apache.hadoop.fs.Path(hotPath), true)
-          fsX.delete(new org.apache.hadoop.fs.Path(s"$dir/_graft_jidx_excise"), true)
-          tok0
-        case Some(frac) =>
-          // Hot set is provably small (≤ avgElemsPerDoc / frac entries —
-          // N cancels), so freezing it is one tiny artifact and the
-          // subtraction broadcasts. The FRACTION persists beside it
-          // (`_graft_jidx_excise`) so a refresh compact can re-evaluate
-          // hotness against the live corpus under the same policy
-          // ([[jaccardHotDrift]] / [[compactJaccardIndex]]).
-          val n      = tok0.select("doc_id").distinct().count()
-          val cutoff = math.max(1L, math.floor(frac * n).toLong)
-          tok0.groupBy("tok").agg(count(lit(1)).as("dfreq"))
-            .where(col("dfreq") > cutoff).select("tok")
-            .write.mode("overwrite").parquet(hotPath)
-          Seq(frac).toDF("frac")
-            .coalesce(1).write.mode("overwrite").parquet(s"$dir/_graft_jidx_excise")
-          minusHot(tok0)
-      }
-    val dict =
-      if (append) {
+    def minusHot(t: DataFrame, hot: DataFrame): DataFrame =
+      t.join(org.apache.spark.sql.functions.broadcast(hot.select("tok")), Seq("tok"), "left_anti")
+    // postings and fullsets of the docs' (excised) elements `tok`, prefixes
+    // ranked by `dict`.
+    def relations(tok: DataFrame, dict: DataFrame): Seq[IndexStore.Relation] = Seq(
+      IndexStore.Relation("postings", "bucket", jaccardPrefix(tok, dict, thresholdMilli.toLong)
+        .withColumn("bucket", pmod(xxhash64(col("tok")), lit(keyBuckets.toLong)).cast("int"))),
+      IndexStore.Relation("fullsets", "dbucket", tok
+        .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int"))))
+    if (append)
+      IndexStore.append(spark, path) { dir =>
         val m = readJaccardIndexMetaAt(spark, dir)
         require(m == (thresholdMilli, keyBuckets, docBuckets),
           s"persistJaccardIndex(append): parameters ($thresholdMilli,$keyBuckets,$docBuckets) do not match the existing index $m")
-        readFrozenJaccardRel(spark, s"$dir/_graft_jidx_dict")
-      } else tok.groupBy("tok").agg(count(lit(1)).as("dfreq"))
-    val prefix = jaccardPrefix(tok, dict, tm) // checkpointed (Lineage.truncate)
-    // postings, fullsets, and (build only) dict+meta target disjoint
-    // paths and overlap ([[IndexStore.inParallel]] — appends hold the
-    // lease, which the worker threads share): the multi-relation persist's
-    // wall approaches max(relation writes) instead of their sum.
-    val writes = Seq(
-      () => prefix
-        .withColumn("bucket", pmod(xxhash64(col("tok")), lit(keyBuckets.toLong)).cast("int"))
-        .repartition(col("bucket"))
-        .write.mode(if (append) "append" else "overwrite")
-        .partitionBy("bucket").parquet(s"$dir/postings"),
-      () => tok
-        .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int"))
-        .repartition(col("dbucket"))
-        .write.mode(if (append) "append" else "overwrite")
-        .partitionBy("dbucket").parquet(s"$dir/fullsets")
-    ) ++ (if (append) Nil else Seq(
-      () => {
-        dict.write.mode("overwrite").parquet(s"$dir/_graft_jidx_dict")
-        Seq((thresholdMilli, keyBuckets, docBuckets))
-          .toDF("thresholdMilli", "keyBuckets", "docBuckets")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/_graft_jidx_meta")
-      }))
-    IndexStore.inParallel(writes: _*)
+        // Excise by the FROZEN hot set (same universe as the index).
+        val hotPath = new org.apache.hadoop.fs.Path(s"$dir/_graft_jidx_hot")
+        val tok =
+          if (hotPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hotPath))
+            minusHot(tok0, readFrozenJaccardRel(spark, hotPath.toString))
+          else tok0
+        relations(tok, readFrozenJaccardRel(spark, s"$dir/_graft_jidx_dict"))
+      }
+    else {
+      // Hot set is provably small (≤ avgElemsPerDoc / frac entries — N
+      // cancels), so it freezes on the driver: one tiny artifact, and the
+      // subtraction broadcasts a local relation. The FRACTION persists
+      // beside it (`_graft_jidx_excise`) so a refresh compact can
+      // re-evaluate hotness against the live corpus under the same policy
+      // ([[jaccardHotDrift]] / [[compactJaccardIndex]]).
+      val excision = exciseBoilerplateFrac.map { frac =>
+        val n      = tok0.select("doc_id").distinct().count()
+        val cutoff = math.max(1L, math.floor(frac * n).toLong)
+        val hot    = tok0.groupBy("tok").agg(count(lit(1)).as("dfreq")).where(col("dfreq") > cutoff).select("tok")
+        (frac, spark.createDataFrame(hot.collectAsList(), hot.schema))
+      }
+      val tok  = excision.fold(tok0) { case (_, hot) => minusHot(tok0, hot) }
+      val dict = tok.groupBy("tok").agg(count(lit(1)).as("dfreq"))
+      IndexStore.build(spark, path, relations(tok, dict) ++ Seq(
+        IndexStore.Relation.flat("_graft_jidx_dict", dict),
+        IndexStore.Relation.flat("_graft_jidx_meta", Seq((thresholdMilli, keyBuckets, docBuckets))
+          .toDF("thresholdMilli", "keyBuckets", "docBuckets").coalesce(1))) ++
+        excision.toSeq.flatMap { case (frac, hot) => Seq(
+          IndexStore.Relation.flat("_graft_jidx_hot", hot),
+          IndexStore.Relation.flat("_graft_jidx_excise", Seq(frac).toDF("frac").coalesce(1))) })
     }
-    if (append)
-      IndexStore.withWriterLease(spark, path)(doPersist(IndexStore.dataDir(spark, path)))
-    else IndexStore.overwriteRoot(spark, path)(doPersist)
   }
 
   /** The PPJoin prefix of every doc's element set under `dict`'s
@@ -2368,25 +2309,18 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming < fpBits, "need 0 <= maxHamming < fpBits")
     val spark = df.sparkSession
     import spark.implicits._
-    val banded = fingerprintBands(df, idCol, fpCol, maxHamming, fpBits)
-      .withColumn("bucket", pmod(xxhash64(col("band"), col("key")), lit(keyBuckets.toLong)).cast("int"))
-      .repartition(col("bucket"))
+    val banded = IndexStore.Relation("", "bucket", fingerprintBands(df, idCol, fpCol, maxHamming, fpBits)
+      .withColumn("bucket", pmod(xxhash64(col("band"), col("key")), lit(keyBuckets.toLong)).cast("int")))
     if (append)
-      IndexStore.withWriterLease(spark, path) { // concurrent appenders serialize
+      IndexStore.append(spark, path) { _ =>
         val m = readFingerprintIndexMeta(spark, path)
         require(m == (maxHamming, fpBits, keyBuckets),
           s"persistFingerprintIndex(append): parameters ($maxHamming,$fpBits,$keyBuckets) do not match the existing index $m")
-        banded.write.mode("append").partitionBy("bucket")
-          .parquet(IndexStore.dataDir(spark, path))
+        Seq(banded)
       }
     else
-      IndexStore.overwriteRoot(spark, path) { dir =>
-        // SEQUENTIAL on purpose: the overwrite-write targets `dir` itself
-        // and deletes the whole dir at job start (see persistSignatureIndex).
-        banded.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-        Seq((maxHamming, fpBits, keyBuckets)).toDF("maxHamming", "fpBits", "keyBuckets")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/_graft_fp_meta")
-      }
+      IndexStore.build(spark, path, Seq(banded, IndexStore.Relation.flat("_graft_fp_meta",
+        Seq((maxHamming, fpBits, keyBuckets)).toDF("maxHamming", "fpBits", "keyBuckets").coalesce(1))))
   }
 
   private def readFingerprintIndexMeta(
@@ -2721,26 +2655,18 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     val docs = df.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-    val grams = positionalGrams(docs, k)
-      .select("g").distinct()
-      .withColumn("bucket", gramBucket(gramBuckets))
-      .repartition(col("bucket"))
+    val grams = IndexStore.Relation("", "bucket",
+      positionalGrams(docs, k).select("g").distinct().withColumn("bucket", gramBucket(gramBuckets)))
     if (append)
-      IndexStore.withWriterLease(spark, path) { // concurrent appenders serialize
+      IndexStore.append(spark, path) { _ =>
         val m = readGramIndexMeta(spark, path)
         require(m == GramIndexMeta(k, gramBuckets),
           s"persistGramIndex(append): parameters $k/$gramBuckets do not match the existing index $m")
-        grams.write.mode("append").partitionBy("bucket")
-          .parquet(IndexStore.dataDir(spark, path))
+        Seq(grams)
       }
     else
-      IndexStore.overwriteRoot(spark, path) { dir =>
-        // SEQUENTIAL on purpose: the overwrite-write targets `dir` itself
-        // and deletes the whole dir at job start (see persistSignatureIndex).
-        grams.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-        Seq((k, gramBuckets)).toDF("k", "gramBuckets")
-          .coalesce(1).write.mode("overwrite").parquet(gramMetaPath(dir))
-      }
+      IndexStore.build(spark, path, Seq(grams, IndexStore.Relation.flat("_graft_gram_meta",
+        Seq((k, gramBuckets)).toDF("k", "gramBuckets").coalesce(1))))
   }
 
   /** Compact a persisted gram index: fold each partition's append

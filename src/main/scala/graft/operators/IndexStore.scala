@@ -80,8 +80,21 @@ import org.apache.spark.sql.types.StructType
   *    drift. Compact cost is proportional to the dirty fraction, not the
   *    index size ([[graft.tools.CompactionSoak]] measures exactly that).
   *
-  *  - '''Multi-writer safety.''' Appends, tombstone deletes, and
-  *    compactions serialize on a per-index writer LEASE
+  *  - '''One relation writer.''' A family only declares its relations
+  *    ([[Relation]]: name, partition column or none, rows; metadata and
+  *    frozen artifacts are flat `_`-prefixed relations), and the store
+  *    lands them. [[build]] takes the writer lease and empties the target
+  *    once, up front — a fresh staged generation, or a flat root cleared
+  *    in place but for the lease and the batch ledger — then writes every
+  *    relation concurrently; [[append]] resolves the live data dir once
+  *    under the lease and appends every relation concurrently;
+  *    [[appendExactlyOnce]] adds the batch ledger, one pending marker and
+  *    deterministic-name installs; a compaction writes its staged
+  *    generation through [[writeStaged]]. Every job the writer launches
+  *    carries an `idx:<kind>:<relation>` label.
+  *
+  *  - '''Multi-writer safety.''' Builds, appends, tombstone deletes,
+  *    and compactions serialize on a per-index writer LEASE
   *    (`_graft_writer_lock`, create-exclusive — the
   *    [[graft.sinks.VersionedTable]] commit-claim idea applied to a
   *    mutable directory): two jobs appending the same index (the
@@ -98,7 +111,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout compatibility: an index that has never been compacted keeps
   * the flat layout (data directly under its root — no pointer file) and
-  * every code path treats it identically; the first compaction
+  * every code path treats it identically; the first compaction (or a
+  * rebuild whose rows read the flat root itself, see [[build]])
   * transitions the root to generations. The pointer stores the
   * generation's RELATIVE name so a copied index directory (fixture
   * copy-on-write, DR restore) stays self-contained.
@@ -127,6 +141,8 @@ private[graft] object IndexStore {
     */
   val BatchTokensName = "_graft_stream_batches"
   val GenPrefix   = "_gen-"
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -199,7 +215,7 @@ private[graft] object IndexStore {
     * strongly-consistent stores), data-file installs fall back to
     * `FileSystem.rename` (copy+delete there — non-atomic, but the
     * deterministic-name install protocol converges on retry regardless,
-    * see [[appendBatchExactlyOnce]]), and generation PUBLISH never
+    * see [[install]]), and generation PUBLISH never
     * renames at all ([[flipPointer]] is create-exclusive).
     */
   private def fileContextOf(
@@ -829,33 +845,36 @@ private[graft] object IndexStore {
     * every read path masks the set ([[minusTombstoned]]) until a
     * compaction rewrites the rows it touches.
     */
-  def appendTombstones(ids: DataFrame, idCol: String, root: String): Unit = {
-    val spark = ids.sparkSession
-    withWriterLease(spark, root) {
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("append")
-        .parquet(new Path(dataDir(spark, root), TombstonesName).toString)
-    }
-  }
+  def appendTombstones(ids: DataFrame, idCol: String, root: String): Unit =
+    append(ids.sparkSession, root)(_ => Seq(Relation.flat(TombstonesName,
+      ids.select(col(idCol).cast("long").as("doc_id")).distinct().coalesce(1))))
 
-  /** Every id row of a tombstone dir. The explicit schema skips the
-    * schema-inference job; it names both columns ever written, `doc_id`
-    * now and `vec_id` in older IVF tombstone files, and each file fills
-    * the one it has, so a dir mixing the two loses no id.
+  /** Every id row of a tombstone dir, read from its data FILES: naming
+    * the `_`-prefixed dir itself makes Spark log "All paths were ignored"
+    * on every read. The explicit schema skips the schema-inference job;
+    * it names both columns ever written, `doc_id` now and `vec_id` in
+    * older IVF tombstone files, and each file fills the one it has, so a
+    * dir mixing the two loses no id. None when the dir holds no data file.
+    * Each file is one path for Spark to list, so past the session's
+    * parallel-discovery threshold (1024 under [[graft.SessionTuning.tune]])
+    * the listing itself becomes a Spark job; one delete call writes one
+    * file, and a compaction drops the set.
     */
-  private def tombstoneIds(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema("doc_id BIGINT, vec_id BIGINT").parquet(dir)
-      .select(coalesce(col("doc_id"), col("vec_id")).as("doc_id"))
+  private def tombstoneIds(spark: SparkSession, dir: Path): Option[DataFrame] = {
+    val fs    = fsOf(spark, dir)
+    val files = dataFilesOf(fs, dir).map { case (n, _) => fs.makeQualified(new Path(dir, n)).toString }
+    if (files.isEmpty) None
+    else Some(spark.read.schema("doc_id BIGINT, vec_id BIGINT").parquet(files.sorted: _*)
+      .select(coalesce(col("doc_id"), col("vec_id")).as("doc_id")))
+  }
 
   /** The distinct tombstoned ids (`doc_id`) of a RESOLVED data dir, None
     * when nothing was ever deleted. Probe paths resolve the generation
     * once at entry and pass that dir, so one operation never mixes the
     * tombstones of one generation with the rows of another.
     */
-  def tombstones(spark: SparkSession, dd: String): Option[DataFrame] = {
-    val p = new Path(dd, TombstonesName)
-    if (fsOf(spark, p).exists(p)) Some(tombstoneIds(spark, p.toString).distinct()) else None
-  }
+  def tombstones(spark: SparkSession, dd: String): Option[DataFrame] =
+    tombstoneIds(spark, new Path(dd, TombstonesName)).map(_.distinct())
 
   /** `df` minus the rows whose `idCol` is tombstoned in the resolved data
     * dir `dd` — the mask every probe, load and compaction applies. */
@@ -913,7 +932,7 @@ private[graft] object IndexStore {
       }
       seen.size.toLong + (if (sawNull) 1L else 0L)
     } else
-      tombstoneIds(spark, dir).distinct().count()
+      tombstoneIds(spark, dp).fold(0L)(_.distinct().count())
   }
 
   /** Row count of a partCol-partitioned relation from PARQUET FOOTER
@@ -1177,8 +1196,8 @@ private[graft] object IndexStore {
     }
   }
 
-  /** Run `body` holding the index's writer lease. Mutators (append,
-    * tombstone delete, compact) all pass through here; concurrent
+  /** Run `body` holding the index's writer lease. Mutators (build,
+    * append, tombstone delete, compact) all pass through here; concurrent
     * writers serialize, and one that cannot acquire within `waitMs`
     * fails loudly with the holder's identity instead of interleaving
     * writes.
@@ -1233,8 +1252,7 @@ private[graft] object IndexStore {
           val holder = readLock(fs, lock)
           val ts = "ts=(\\d+)".r.findFirstMatchIn(holder).map(_.group(1).toLong)
           if (ts.exists(System.currentTimeMillis() - _ > staleMs)) {
-            org.apache.log4j.Logger.getLogger(getClass)
-              .warn(s"IndexStore: breaking stale writer lease on $root (holder: $holder)")
+            log.warn(s"IndexStore: breaking stale writer lease on $root (holder: $holder)")
             // Rename-aside-verify-delete, NOT read-compare-delete: a live
             // holder's heartbeat renewing between the confirming read and
             // the delete must not lose its lease (see [[breakStaleLease]]).
@@ -1256,7 +1274,7 @@ private[graft] object IndexStore {
       val requested = if (heartbeatMs < 0) math.max(1L, staleMs / 3) else heartbeatMs
       if (requested > 0 && requested * 2 > staleMs) {
         val clamped = math.max(1L, staleMs / 3)
-        org.apache.log4j.Logger.getLogger(getClass).warn(
+        log.warn(
           s"IndexStore: heartbeat ${requested}ms cannot protect a ${staleMs}ms stale window " +
             s"(needs ≤ staleMs/2) — clamping to ${clamped}ms")
         clamped
@@ -1272,14 +1290,13 @@ private[graft] object IndexStore {
                   // re-acquired while we stalled. Never re-stamp — stop
                   // renewing and let fenceOrAbort / the release path fail
                   // safe off the rival's on-disk token.
-                  org.apache.log4j.Logger.getLogger(getClass).warn(
+                  log.warn(
                     s"IndexStore: writer lease on $root LOST (token no longer on disk) — " +
                       "heartbeat stopped; any install by this writer will be fenced")
                   Option(hbTaskRef.get()).foreach(_.cancel(false))
                 }
               } catch { case e: Exception =>
-                org.apache.log4j.Logger.getLogger(getClass)
-                  .warn(s"IndexStore: lease heartbeat on $root failed: $e") },
+                log.warn(s"IndexStore: lease heartbeat on $root failed: $e") },
         hbEvery, hbEvery, java.util.concurrent.TimeUnit.MILLISECONDS))
     hbTask.foreach(hbTaskRef.set)
     held.set(held.get() + (key -> token))
@@ -1441,16 +1458,6 @@ private[graft] object IndexStore {
           "its staged generation was discarded, NOT installed. Re-read the index state and retry.")
     }
   }
-
-  /** Overwrite-persist through the layout: flat roots write in place
-    * (today's behavior, fixtures unchanged); generational roots get a
-    * fresh generation + atomic flip — a REBUILD stops interrupting
-    * serving the moment the index has been compacted once.
-    */
-  def overwriteRoot(spark: SparkSession, root: String)(write: String => Unit): Unit =
-    if (dataDir(spark, root) == root) write(root) // flat: no pointer of either style
-    else swapGeneration(spark, root, dropMeta = Set.empty, carryMeta = false)(
-      (_, staged) => write(staged))
 
   /** PUBLISH a generation — rename-free: CREATE `_graft_current.<n>`
     * with create-exclusive semantics. The name alone is the commit
@@ -1634,7 +1641,7 @@ private[graft] object IndexStore {
     if (fs.exists(token)) return true
     val mark = readHwmMark(fs, new Path(ledger, s"$streamId.hwm"))
     if (batchId <= mark) {
-      org.apache.log4j.Logger.getLogger(getClass).warn(
+      log.warn(
         s"IndexStore: stream '$streamId' re-ran batch $batchId at $root, which the " +
           s"high-water-mark ($mark) records as ALREADY COMMITTED though its token was pruned — " +
           "skipping the write. If this is a NEW logical stream reusing a recreated checkpoint, " +
@@ -1650,7 +1657,7 @@ private[graft] object IndexStore {
     * the write commits (the [[graft.sinks.VersionedTable.commitIdempotent]]
     * pattern at the file layer). The once-residual window between job
     * commit and token create is closed when the body routes its append
-    * through [[appendBatchExactlyOnce]] (deterministic names make the
+    * through [[appendExactlyOnce]] (deterministic names make the
     * retry itself converge, and compaction ADOPTS folded stream files'
     * tokens) — the token is then a fast path and a late-replay guard,
     * never the sole correctness layer.
@@ -1797,119 +1804,178 @@ private[graft] object IndexStore {
     catch { case _: java.io.FileNotFoundException => () }
   }
 
-  /** EXACTLY-ONCE streaming append of a partCol-partitioned relation:
-    * closes the residual window [[withBatchToken]] documents (a crash
-    * between the parquet job commit and the token create re-appended
-    * once on retry) by making the DATA itself carry the claim —
+  // ------------------------------------------------------ relation writer
+
+  /** One relation of an index write: `name` under the data dir (`""` =
+    * the data dir itself), parquet-partitioned by `partCol` or flat, and
+    * its rows. Metadata and frozen artifacts (meta rows, centroids,
+    * codebooks, dictionaries) are flat relations with `_`-prefixed names,
+    * which relation scans skip.
+    */
+  final case class Relation(name: String, partCol: Option[String], rows: DataFrame)
+
+  object Relation {
+    def apply(name: String, partCol: String, rows: DataFrame): Relation = Relation(name, Some(partCol), rows)
+    def flat(name: String, rows: DataFrame): Relation = Relation(name, None, rows)
+  }
+
+  private def relPath(dir: String, name: String): String =
+    if (name.isEmpty) dir else new Path(dir, name).toString
+
+  /** The one way a relation lands on disk: `repartition(partCol)` (whole
+    * partitions per task, one file per partition per task) and
+    * `partitionBy(partCol)`, or a plain write for a flat relation, always
+    * APPENDING to `path` — a build or a compaction has emptied or freshly
+    * staged its target, so several relations can land in one directory
+    * tree at once without any write deleting another's. Every job carries
+    * the `idx:<kind>:<relation>` label.
+    */
+  private def writeRel(spark: SparkSession, kind: String, path: String, r: Relation): Unit =
+    graft.Jobs.labeled(spark, s"idx:$kind:${if (r.name.isEmpty) "data" else r.name}") {
+      val w = r.partCol match {
+        case Some(pc) => r.rows.repartition(col(pc)).write.partitionBy(pc)
+        case None     => r.rows.write
+      }
+      w.mode("append").parquet(path)
+    }
+
+  /** Every relation of `rels` into `dir`, concurrently ([[inParallel]]). */
+  private def writeAll(spark: SparkSession, kind: String, dir: String, rels: Seq[Relation]): Unit = {
+    inParallel(rels.map(r => () => writeRel(spark, kind, relPath(dir, r.name), r)): _*)
+    ()
+  }
+
+  /** BUILD: replace the index at `root` with exactly `rels`, under the
+    * writer lease. The target is emptied once, up front, and then every
+    * relation writes concurrently. A generational root gets a fresh
+    * staged generation ([[swapGeneration]], nothing carried), so a
+    * rebuild never interrupts serving. A flat root is cleared in place
+    * except for what lives above the generations — the lease and the
+    * batch ledger — so the old tombstone set and any artifact the new
+    * build does not write (an earlier build's PQ codebooks or Jaccard hot
+    * set) go with the old rows. A flat rebuild whose rows read the root
+    * itself ([[readsUnder]]) would read what the clear deleted, so it
+    * stages generation 1 instead and reads the flat data it replaces.
+    */
+  def build(spark: SparkSession, root: String, rels: Seq[Relation]): Unit =
+    withWriterLease(spark, root) {
+      if (dataDir(spark, root) != root || readsUnder(spark, root, rels))
+        swapGeneration(spark, root, dropMeta = Set.empty, carryMeta = false)(
+          (_, staged) => writeAll(spark, "build", staged, rels))
+      else {
+        val rp = new Path(root)
+        val fs = fsOf(spark, rp)
+        fs.listStatus(rp).foreach { st =>
+          val n = st.getPath.getName
+          if (!n.startsWith(LockName) && n != BatchTokensName) fs.delete(st.getPath, true)
+        }
+        writeAll(spark, "build", root, rels)
+      }
+    }
+
+  /** Does any relation's plan scan a path at or under `root`? */
+  private def readsUnder(spark: SparkSession, root: String, rels: Seq[Relation]): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val rq = fsOf(spark, new Path(root)).makeQualified(new Path(root)).toString
+    rels.exists(_.rows.queryExecution.analyzed.exists {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation =>
+          h.location.rootPaths.exists { p => val q = p.toString; q == rq || q.startsWith(rq + "/") }
+        case _ => false
+      }
+      case _ => false
+    })
+  }
+
+  /** PLAIN APPEND: under the writer lease, resolve the live data dir once
+    * and append every relation `rels(dataDir)` declares, concurrently. */
+  def append(spark: SparkSession, root: String)(rels: String => Seq[Relation]): Unit =
+    withWriterLease(spark, root) {
+      val dd = dataDir(spark, root)
+      writeAll(spark, "append", dd, rels(dd))
+    }
+
+  /** Relations written into a generation a compaction is staging (inside
+    * [[swapGeneration]]'s populate), concurrently. */
+  def writeStaged(spark: SparkSession, staged: String, rels: Relation*): Unit =
+    writeAll(spark, "compact", staged, rels)
+
+  /** EXACTLY-ONCE streaming append of every relation `rels(dataDir)`
+    * declares, as batch (streamId, batchId). Under the writer lease: a
+    * batch the ledger already records ([[batchCommitted]]) is skipped;
+    * otherwise ONE pending marker ([[withPendingBatch]]) brackets every
+    * relation — a crash between relations reads to a later compaction as
+    * a partial batch, whose landed subset it discards — and each relation
+    * installs concurrently under deterministic names ([[install]]), so a
+    * foreachBatch retry converges to exactly one copy of the batch at any
+    * crash point, token or no token.
+    */
+  def appendExactlyOnce(spark: SparkSession, root: String, streamId: String, batchId: Long)(
+      rels: String => Seq[Relation]): Unit =
+    withWriterLease(spark, root) {
+      if (!batchCommitted(spark, root, streamId, batchId))
+        withPendingBatch(spark, root, streamId, batchId) {
+          val dd = dataDir(spark, root)
+          inParallel(rels(dd).map(r => () => install(spark, root, dd, r, streamId, batchId)): _*)
+          ()
+        }
+    }
+
+  /** Install one relation of a stream batch — closes the residual window
+    * [[withBatchToken]] documents (a crash between the parquet job commit
+    * and the token create re-appended once on retry) by making the DATA
+    * itself carry the claim:
     *
-    *  1. the batch writes to a staged dir (`.stage-…`, invisible to
-    *     readers), then
-    *  2. its files move into the live partition dirs under DETERMINISTIC
-    *     names derived from (streamId, batchId, file index), after
-    *  3. sweeping any files of the same (streamId, batchId) left by a
-    *     previous (crashed, partial) attempt.
+    *  1. the batch writes to a staged dir (`.stage-<stream>-<batch>-<rel>`,
+    *     unique per relation so concurrent installs do not collide, and
+    *     invisible to readers; a previous attempt's is gone —
+    *     [[sweepStageDirs]]), then
+    *  2. any files of the same (streamId, batchId) a previous (crashed,
+    *     partial) attempt left in the live relation are swept, and
+    *  3. the staged files move into the live partition dirs (or the live
+    *     relation dir, for a flat relation) under DETERMINISTIC names
+    *     `sb-<streamId>-<batchId>-<k>.parquet`.
     *
     * A retry therefore converges: it re-stages the same rows (Structured
     * Streaming replays a batchId with identical data), deletes its own
-    * leftovers, and re-lands the same names — no duplicate rows at any
-    * crash point, token or no token. The per-file installs use the
+    * leftovers, and re-lands the same names. The per-file installs use the
     * atomic replace where the FS provides one and a converging
-    * copy+delete where it does not ([[installDataFile]] — on real object
-    * stores the destination object still appears atomically). Compactions
-    * complete the story:
-    * [[swapGeneration]] ADOPTS any stream-named files it is about to
-    * fold — creating their missing batch tokens and raising the
-    * high-water-mark — so a batch whose data landed but whose token
+    * copy+delete where it does not ([[installDataFile]]). Compactions
+    * complete the story: [[swapGeneration]] ADOPTS any stream-named files
+    * it is about to fold — creating their missing batch tokens and raising
+    * the high-water-mark — so a batch whose data landed but whose token
     * write crashed can never be re-appended after its rows were folded
     * beyond name-level recognition.
-    *
-    * `rel = ""` targets single-relation indexes (data at the generation
-    * root). Caller holds the writer lease via [[withWriterLease]]
-    * (re-entrant).
     */
-  def appendBatchExactlyOnce(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      partCol: String,
-      streamId: String,
-      batchId: Long
-  )(df: DataFrame): Unit = graft.Jobs.labeled(spark, s"idx:append:$rel") { withWriterLease(spark, root) {
-    require(!streamId.exists(c => c == '/' || c == '\\'), s"streamId must be path-safe: $streamId")
-    withPendingBatch(spark, root, streamId, batchId) {
-    val dd     = dataDir(spark, root)
-    val target = if (rel.isEmpty) new Path(dd) else new Path(dd, rel)
+  private def install(
+      spark: SparkSession, root: String, dd: String, r: Relation, streamId: String, batchId: Long): Unit = {
+    val target = new Path(relPath(dd, r.name))
     val fs     = fsOf(spark, target)
-    // Relation-qualified stage dir: one batch's THREE relation installs
-    // (e.g. BM25 postings/terms/docs) run CONCURRENTLY under the shared
-    // lease ([[inParallel]]), so the stage path must be unique per
-    // relation or the writes collide on PATH_ALREADY_EXISTS.
-    // A previous attempt's stage dirs are gone ([[sweepStageDirs]]).
-    val stage  = new Path(root, s".stage-$streamId-$batchId-$rel")
-    df.repartition(org.apache.spark.sql.functions.col(partCol))
-      .write.partitionBy(partCol).parquet(stage.toString)
-    // Sweep THIS batch's previous attempt (partial files under our names).
-    val pfx = s"$StreamBatchPrefix$streamId-$batchId-"
-    if (fs.exists(target))
-      fs.listStatus(target).foreach { pd =>
-        if (pd.isDirectory && pd.getPath.getName.startsWith(partCol + "="))
-          fs.listStatus(pd.getPath).foreach { f =>
-            if (f.isFile && f.getPath.getName.startsWith(pfx)) fs.delete(f.getPath, false)
-          }
-      }
-    // Install under deterministic names — atomic replace per file where
-    // the FS gives it, converging copy+delete where it does not (see
-    // [[installDataFile]]: the sweep above removed this batch's previous
-    // attempt, so either way the retry lands exactly one copy).
-    fs.listStatus(stage)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
-      .foreach { pd =>
-        val dstPart = new Path(target, pd.getPath.getName)
-        fs.mkdirs(dstPart)
-        fs.listStatus(pd.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-          .map(_.getPath).sortBy(_.getName).zipWithIndex
-          .foreach { case (src, k) =>
-            installDataFile(spark, fs, src, new Path(dstPart, s"$pfx$k.parquet"))
-          }
-      }
-    fs.delete(stage, true)
+    val stage  = new Path(root, s".stage-$streamId-$batchId-${r.name}")
+    writeRel(spark, "install", stage.toString, r)
+    // The dirs a batch lands in: every partition dir, or the relation dir.
+    def landingDirs(d: Path): Seq[Path] = r.partCol match {
+      case None => Seq(d)
+      case Some(pc) =>
+        if (!fs.exists(d)) Nil
+        else fs.listStatus(d).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith(pc + "=")).map(_.getPath)
     }
-  } }
-
-  /** [[appendBatchExactlyOnce]] for an UNPARTITIONED relation (BM25
-    * `docs/`): same staged-write → sweep-own-leftovers → deterministic-
-    * name install protocol, at whole-directory granularity.
-    */
-  def appendBatchExactlyOnceFlat(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      streamId: String,
-      batchId: Long
-  )(df: DataFrame): Unit = graft.Jobs.labeled(spark, s"idx:append-flat:$rel") { withWriterLease(spark, root) {
-    require(!streamId.exists(c => c == '/' || c == '\\'), s"streamId must be path-safe: $streamId")
-    withPendingBatch(spark, root, streamId, batchId) {
-    val dd     = dataDir(spark, root)
-    val target = new Path(dd, rel)
-    val fs     = fsOf(spark, target)
-    val stage  = new Path(root, s".stage-$streamId-$batchId-$rel")
-    df.write.parquet(stage.toString)
     val pfx = s"$StreamBatchPrefix$streamId-$batchId-"
-    if (fs.exists(target))
-      fs.listStatus(target).foreach { f =>
+    landingDirs(target).foreach { d =>
+      if (fs.exists(d)) fs.listStatus(d).foreach { f =>
         if (f.isFile && f.getPath.getName.startsWith(pfx)) fs.delete(f.getPath, false)
       }
-    fs.mkdirs(target)
-    fs.listStatus(stage)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      .map(_.getPath).sortBy(_.getName).zipWithIndex
-      .foreach { case (src, k) =>
-        installDataFile(spark, fs, src, new Path(target, s"$pfx$k.parquet"))
-      }
-    fs.delete(stage, true)
     }
-  } }
+    landingDirs(stage).foreach { sd =>
+      val dst = if (r.partCol.isEmpty) target else new Path(target, sd.getName)
+      fs.mkdirs(dst)
+      dataFilesOf(fs, sd).map(_._1).sorted.zipWithIndex.foreach { case (n, k) =>
+        installDataFile(spark, fs, new Path(sd, n), new Path(dst, s"$pfx$k.parquet"))
+      }
+    }
+    fs.delete(stage, true)
+  }
 
   /** Create the (streamId, batchId) token and raise the stream's
     * high-water-mark — shared by [[withBatchToken]]'s commit path and
@@ -1985,14 +2051,14 @@ private[graft] object IndexStore {
               s"IndexStore: writer lease on $root lost before discarding partial stream batch " +
                 s"($sid, $bid) — the marker may belong to a live rival's in-flight install; " +
                 "aborting the compaction instead of deleting its files.")
-          org.apache.log4j.Logger.getLogger(getClass).warn(
+          log.warn(
             s"IndexStore: discarding PARTIAL stream batch ($sid, $bid) at $root before compaction " +
               s"(its writer crashed mid-install — pending marker present; ${files.size} partial " +
               "file(s) removed so the retry re-lands the complete batch exactly once)")
           files.foreach(f => try fs.delete(f, false) catch { case _: java.io.IOException => () })
           try fs.delete(pending, false) catch { case _: java.io.IOException => () }
         } else {
-          org.apache.log4j.Logger.getLogger(getClass).info(
+          log.info(
             s"IndexStore: compaction of $root folds stream batch ($sid, $bid), which landed " +
               "completely but has no batch token — it was appended outside withBatchToken (a " +
               "public exactly-once append), or its writer stopped between data commit and token " +
@@ -2035,8 +2101,8 @@ private[graft] object IndexStore {
     *    (`partOfId`), from the tombstone set alone;
     *  - [[decideRewrite]] picks full or selective;
     *  - the rewritten partitions are read (`isin(dirty)` when selective),
-    *    tombstone-masked, `shape`d, and written
-    *    `repartition(partCol).write.partitionBy(partCol)` to `staged/rel`;
+    *    tombstone-masked, `shape`d, and written to `staged/rel` through
+    *    the relation writer ([[writeStaged]]);
     *  - returns the decision and the relation's manifest entries: the
     *    staged partitions as fresh bases plus the carried ones by
     *    reference ([[carriedEntries]]).
@@ -2072,9 +2138,7 @@ private[graft] object IndexStore {
       stats.filter(_._2.dirty).keySet ++ tombstoned ++ alsoDirty)
     if (d.full || d.dirty.nonEmpty) {
       val in = if (d.full) src else src.where(col(partCol).isin(d.dirty.toSeq.sorted.map(p => p: Any): _*))
-      shape(idCol.fold(in)(minus(in, _, ts)))
-        .repartition(col(partCol)).write.partitionBy(partCol)
-        .parquet(if (rel.isEmpty) staged else new Path(staged, rel).toString)
+      writeStaged(spark, staged, Relation(rel, partCol, shape(idCol.fold(in)(minus(in, _, ts)))))
     }
     (d, stagedEntries(spark, root, staged, rel, partCol) ++
       carriedEntries(spark, root, live, rel, partCol, d.carry, man))

@@ -555,14 +555,15 @@ object Similarity {
     * and clusters. The model is KBs; versioning/promotion is the caller's
     * lake convention, exactly like any other table.
     */
-  def saveCentroids(spark: org.apache.spark.sql.SparkSession, centroids: Array[Array[Double]], path: String): Unit = {
+  def saveCentroids(spark: org.apache.spark.sql.SparkSession, centroids: Array[Array[Double]], path: String): Unit =
+    centroidsRel(spark, centroids).rows.write.mode("overwrite").parquet(path)
+
+  /** The centroids as the index artifact `_graft_centroids`. */
+  private def centroidsRel(spark: org.apache.spark.sql.SparkSession, centroids: Array[Array[Double]]) = {
     import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }
-      .toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+    graft.operators.IndexStore.Relation.flat("_graft_centroids",
+      centroids.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
+        .toDF("cell", "centroid").coalesce(1))
   }
 
   /** Inverse of [[saveCentroids]]: cells come back in training order, so a
@@ -597,19 +598,10 @@ object Similarity {
       path: String
   ): Unit = {
     val spark = corpus.sparkSession
-    // Flat roots write in place; compacted (generational) roots rebuild
-    // as a new generation + atomic pointer flip — serving uninterrupted.
-    graft.operators.IndexStore.overwriteRoot(spark, path) { dir =>
-      // SEQUENTIAL on purpose: the cell overwrite-write targets `dir`
-      // itself and deletes the whole dir at job start — a concurrently
-      // written centroid subdir would race that delete.
-      ivfAssign(corpus.select(col(idCol).as("vec_id"), col(vecCol).as("vec")), "vec", centroids)
-        // One shuffle on the partition column → whole cells per task, one
-        // file per (task, cell) instead of tasks×cells small files.
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      saveCentroids(spark, centroids, s"$dir/_graft_centroids")
-    }
+    graft.operators.IndexStore.build(spark, path, Seq(
+      graft.operators.IndexStore.Relation("", "cell",
+        ivfAssign(corpus.select(col(idCol).as("vec_id"), col(vecCol).as("vec")), "vec", centroids)),
+      centroidsRel(spark, centroids)))
   }
 
   /** Incremental ingest into a [[persistIvfIndex]] directory: the new
@@ -624,15 +616,9 @@ object Similarity {
       idCol: String,
       vecCol: String,
       path: String
-  ): Unit = {
-    val spark = newBatch.sparkSession
-    graft.operators.IndexStore.withWriterLease(spark, path) { // appenders serialize
-      val dd = graft.operators.IndexStore.dataDir(spark, path)
-      ivfAppendRows(newBatch, idCol, vecCol, dd)
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(dd)
-    }
-  }
+  ): Unit =
+    graft.operators.IndexStore.append(newBatch.sparkSession, path)(dd =>
+      Seq(graft.operators.IndexStore.Relation("", "cell", ivfAppendRows(newBatch, idCol, vecCol, dd))))
 
   /** An append batch in the stored row shape of the index at the resolved
     * data dir `dd`: (vec_id, vec) assigned to a cell by the index's FROZEN
@@ -923,35 +909,35 @@ object Similarity {
               .drop("__e")
             (reencoded, Some(model))
           }
-        if (doRetrain) {
-          // √N-scaled quantizer: a grown corpus gets more cells, not
-          // fatter ones ([[retrainNlistFor]] — bounded growth, never
-          // shrinks).
-          val newNlist = retrainNlistFor(survivors.count(), oldCents.length)
-          if (newNlist != oldCents.length)
-            org.slf4j.LoggerFactory.getLogger(getClass).info(
-              s"compactIvfIndex($path): retrain grows nlist ${oldCents.length} -> $newNlist")
-          val cents = ivfCentroids(survivors, "vec_id", "vec", nlist = newNlist,
-            lloydIters = retrainLloydIters)
-          ivfAssign(survivors, "vec", cents)
-            .repartition(col("cell")).write.partitionBy("cell").parquet(staged)
-          saveCentroids(spark, cents, s"$staged/_graft_centroids") // wins over meta carry
-        } else
-          // PQ refresh without coarse retrain: cells are untouched — the
-          // rewrite only replaces codes/norms.
-          survivors.repartition(col("cell")).write.partitionBy("cell").parquet(staged)
-        // Refreshed books + their fresh drift baseline install in the SAME
-        // atomic generation as the re-encoded rows (written AFTER the data
-        // so the parquet job owns staged-dir creation); both win over the
-        // meta carry. The baseline's sample-sizing count reads from the
-        // JUST-WRITTEN staged parquet (footer statistics, no recompute of
-        // the re-encode lineage).
+        // PQ refresh without coarse retrain: cells are untouched — the
+        // rewrite only replaces codes/norms.
+        val (rows, newCents) =
+          if (!doRetrain) (survivors, None)
+          else {
+            // √N-scaled quantizer: a grown corpus gets more cells, not
+            // fatter ones ([[retrainNlistFor]] — bounded growth, never
+            // shrinks).
+            val newNlist = retrainNlistFor(survivors.count(), oldCents.length)
+            if (newNlist != oldCents.length)
+              org.slf4j.LoggerFactory.getLogger(getClass).info(
+                s"compactIvfIndex($path): retrain grows nlist ${oldCents.length} -> $newNlist")
+            val cents = ivfCentroids(survivors, "vec_id", "vec", nlist = newNlist,
+              lloydIters = retrainLloydIters)
+            (ivfAssign(survivors, "vec", cents), Some(cents))
+          }
+        // Retrained centroids and refreshed books install in the SAME
+        // atomic generation as the rewritten rows; both win over the meta
+        // carry.
+        IndexStore.writeStaged(spark, staged, (IndexStore.Relation("", "cell", rows) +:
+          (newCents.map(centroidsRel(spark, _)) ++ newModel.map(pqModelRel(spark, _))).toSeq): _*)
+        // The refreshed books' fresh drift baseline: its sample-sizing
+        // count reads from the JUST-WRITTEN staged parquet (footer
+        // statistics, no recompute of the re-encode lineage).
         newModel.foreach { m =>
-          savePqModel(spark, m, s"$staged/_graft_pq")
           val stagedRows = spark.read.parquet(staged)
           val (mqe, sampled) = pqSampledMqe(stagedRows, "vec_id", "vec", m,
             knownCount = Some(stagedRows.count()))
-          writePqStats(spark, staged, mqe, sampled)
+          IndexStore.writeStaged(spark, staged, pqStatsRel(spark, mqe, sampled))
         }
         IndexStore.writeManifest(spark, staged,
           IndexStore.stagedEntries(spark, IndexStore.rootOf(live), staged, "", "cell"))
@@ -1258,13 +1244,16 @@ object Similarity {
     * back in (sub, code) order so a loaded model reproduces the saving
     * session's encodings bit-for-bit.
     */
-  def savePqModel(spark: org.apache.spark.sql.SparkSession, model: PqModel, path: String): Unit = {
+  def savePqModel(spark: org.apache.spark.sql.SparkSession, model: PqModel, path: String): Unit =
+    pqModelRel(spark, model).rows.write.mode("overwrite").parquet(path)
+
+  /** The codebooks as the index artifact `_graft_pq`. */
+  private def pqModelRel(spark: org.apache.spark.sql.SparkSession, model: PqModel) = {
     import spark.implicits._
-    (for { sub <- 0 until model.m; code <- model.codebooks(sub).indices }
-      yield (sub, code, model.codebooks(sub)(code).toSeq))
-      .toDF("sub", "code", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+    graft.operators.IndexStore.Relation.flat("_graft_pq",
+      (for { sub <- 0 until model.m; code <- model.codebooks(sub).indices }
+        yield (sub, code, model.codebooks(sub)(code).toSeq))
+        .toDF("sub", "code", "centroid").coalesce(1))
   }
 
   /** Inverse of [[savePqModel]]. */
@@ -1317,11 +1306,11 @@ object Similarity {
 
   private def pqStatsPath(dd: String) = s"$dd/_graft_pq_stats"
 
-  private def writePqStats(
-      spark: org.apache.spark.sql.SparkSession, dd: String, mqe: Double, sampled: Long): Unit = {
+  /** The train-time quantization-error baseline as the index artifact
+    * `_graft_pq_stats`. */
+  private def pqStatsRel(spark: org.apache.spark.sql.SparkSession, mqe: Double, sampled: Long) = {
     import spark.implicits._
-    Seq((mqe, sampled)).toDF("mqe", "sampled")
-      .coalesce(1).write.mode("overwrite").parquet(pqStatsPath(dd))
+    graft.operators.IndexStore.Relation.flat("_graft_pq_stats", Seq((mqe, sampled)).toDF("mqe", "sampled").coalesce(1))
   }
 
   private def readPqStats(
@@ -1389,7 +1378,7 @@ object Similarity {
 
   /** [[appendToIvfIndex]] for STREAMING bodies: the encoded, cell-assigned
     * batch lands under deterministic (streamId, batchId)-derived file
-    * names ([[graft.operators.IndexStore.appendBatchExactlyOnce]]), so a
+    * names ([[graft.operators.IndexStore.appendExactlyOnce]]), so a
     * foreachBatch retry at ANY crash point — including between the data
     * commit and the batch-token create — converges to exactly one copy.
     * A batch the index's ledger already records
@@ -1404,16 +1393,9 @@ object Similarity {
       path: String,
       streamId: String,
       batchId: Long
-  ): Unit = {
-    val spark = newBatch.sparkSession
-    graft.operators.IndexStore.withWriterLease(spark, path) {
-      if (!graft.operators.IndexStore.batchCommitted(spark, path, streamId, batchId)) {
-        val dd = graft.operators.IndexStore.dataDir(spark, path)
-        graft.operators.IndexStore.appendBatchExactlyOnce(
-          spark, path, "", "cell", streamId, batchId)(ivfAppendRows(newBatch, idCol, vecCol, dd))
-      }
-    }
-  }
+  ): Unit =
+    graft.operators.IndexStore.appendExactlyOnce(newBatch.sparkSession, path, streamId, batchId)(dd =>
+      Seq(graft.operators.IndexStore.Relation("", "cell", ivfAppendRows(newBatch, idCol, vecCol, dd))))
 
   /** [[persistIvfIndex]] with the fine quantizer baked in: every row
     * stores its PQ code word and decoded norm BESIDE the full vector
@@ -1439,35 +1421,19 @@ object Similarity {
       path: String
   ): Unit = {
     val spark = corpus.sparkSession
-    graft.operators.IndexStore.overwriteRoot(spark, path) { dir =>
-      // ONE corpus pass: vector, codes, and norm from the same scan.
-      val coded = corpus
-        .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
-          pqEncoder(model)(col(vecCol)).as("__e"))
-        .select(col("vec_id"), col("vec"),
-          col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
-      // The cell overwrite-write targets `dir` itself and deletes the
-      // whole dir at job start, so the frozen artifacts must land AFTER
-      // it (a concurrent subdir write would race the delete). The three
-      // tiny artifact writes and the drift-baseline sampling ARE
-      // independent of one another once the data is down — they overlap
-      // ([[graft.operators.IndexStore.inParallel]]; the baseline samples
-      // the CORPUS, not the staged rows).
-      ivfAssign(coded, "vec", centroids)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      graft.operators.IndexStore.inParallel(
-        () => saveCentroids(spark, centroids, s"$dir/_graft_centroids"),
-        () => savePqModel(spark, model, s"$dir/_graft_pq"),
-        () => {
-          // Train-time quantization-error BASELINE — the reference point
-          // [[pqDrift]] measures codebook drift against.
-          val (mqe, sampled) = pqSampledMqe(
-            corpus.select(col(idCol).as("vec_id"), col(vecCol).as("vec")), "vec_id", "vec", model)
-          writePqStats(spark, dir, mqe, sampled)
-        })
-      ()
-    }
+    // ONE corpus pass: vector, codes, and norm from the same scan.
+    val coded = corpus
+      .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),
+        pqEncoder(model)(col(vecCol)).as("__e"))
+      .select(col("vec_id"), col("vec"),
+        col("__e._1").as("pq_code"), col("__e._2").as("pq_norm"))
+    // Train-time quantization-error BASELINE — the reference point
+    // [[pqDrift]] measures codebook drift against (samples the CORPUS).
+    val (mqe, sampled) = pqSampledMqe(
+      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("vec")), "vec_id", "vec", model)
+    graft.operators.IndexStore.build(spark, path, Seq(
+      graft.operators.IndexStore.Relation("", "cell", ivfAssign(coded, "vec", centroids)),
+      centroidsRel(spark, centroids), pqModelRel(spark, model), pqStatsRel(spark, mqe, sampled)))
   }
 
   /** Serve top-k from a [[persistIvfPqIndex]] directory: probe cells by

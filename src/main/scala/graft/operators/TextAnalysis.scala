@@ -934,25 +934,22 @@ object TextAnalysis {
   def persistBm25Index(index: Bm25Index, path: String, termBuckets: Int = 64): Unit = {
     val spark = index.postings.sparkSession
     import spark.implicits._
+    graft.operators.IndexStore.build(spark, path, bm25Relations(index, termBuckets) :+
+      graft.operators.IndexStore.Relation.flat("_graft_meta", Seq(termBuckets).toDF("termBuckets").coalesce(1)))
+  }
+
+  /** The three relations of a BM25 build or append batch: `postings` and
+    * `terms` partitioned by their term's bucket, `docs` flat. `docs` lands
+    * with its natural write parallelism — a billion-row batch must not
+    * serialize through one task; segment arithmetic stays exact because
+    * the sweep counts distinct WRITE GROUPS, not files ([[bm25DocsSegments]]).
+    */
+  private def bm25Relations(index: Bm25Index, termBuckets: Int): Seq[graft.operators.IndexStore.Relation] = {
     val bucket = pmod(xxhash64(col("term")), lit(termBuckets.toLong)).cast("int").as("bucket")
-    // Flat roots write in place; compacted (generational) roots rebuild
-    // as a new generation + atomic pointer flip — serving uninterrupted.
-    graft.operators.IndexStore.overwriteRoot(spark, path) { dir =>
-      // Four independent projections of one build into disjoint paths —
-      // the build wall approaches max(relation writes) instead of their
-      // sum ([[graft.operators.IndexStore.inParallel]]).
-      graft.operators.IndexStore.inParallel(
-        () => index.postings.withColumn("bucket", bucket)
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings"),
-        () => index.terms.withColumn("bucket", bucket)
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/terms"),
-        () => index.docs.write.mode("overwrite").parquet(s"$dir/docs"),
-        () => Seq(termBuckets).toDF("termBuckets")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/_graft_meta"))
-      ()
-    }
+    Seq(
+      graft.operators.IndexStore.Relation("postings", "bucket", index.postings.withColumn("bucket", bucket)),
+      graft.operators.IndexStore.Relation("terms", "bucket", index.terms.withColumn("bucket", bucket)),
+      graft.operators.IndexStore.Relation.flat("docs", index.docs))
   }
 
   /** The WRITE-GROUP identity of a `docs/` data file — what one append
@@ -1014,45 +1011,21 @@ object TextAnalysis {
       textCol: String,
       idCol: String,
       path: String
-  ): Unit = {
-    val spark = newDocs.sparkSession
-    graft.operators.IndexStore.withWriterLease(spark, path) { // appenders serialize
-      val dd = graft.operators.IndexStore.dataDir(spark, path)
-      val termBuckets = bm25TermBuckets(spark, dd)
-      val inc    = buildBm25Index(newDocs, textCol, idCol)
-      val bucket = pmod(xxhash64(col("term")), lit(termBuckets.toLong)).cast("int").as("bucket")
-      // The three relations are independent projections of the same build —
-      // their writes overlap ([[graft.operators.IndexStore.inParallel]],
-      // lease shared with the worker threads), so the append wall
-      // approaches max(relation writes) instead of their sum.
-      graft.operators.IndexStore.inParallel(
-        () => inc.postings.withColumn("bucket", bucket).repartition(col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(s"$dd/postings"),
-        () => inc.terms.withColumn("bucket", bucket).repartition(col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(s"$dd/terms"),
-        // Natural write parallelism — a billion-row daily batch must not
-        // serialize through one task. Segment arithmetic stays exact: all
-        // of one append's files share a write-job UUID, and the sweep
-        // counts distinct WRITE GROUPS, not files ([[bm25DocsSegments]]).
-        () => inc.docs.write.mode("append").parquet(s"$dd/docs"))
-    }
-  }
+  ): Unit =
+    graft.operators.IndexStore.append(newDocs.sparkSession, path)(dd =>
+      bm25Relations(buildBm25Index(newDocs, textCol, idCol), bm25TermBuckets(newDocs.sparkSession, dd)))
 
   /** [[appendToBm25Index]] for STREAMING bodies: all three relations'
     * batch files land under deterministic (streamId, batchId)-derived
-    * names ([[graft.operators.IndexStore.appendBatchExactlyOnce]] /
-    * `...Flat` for the unpartitioned `docs/`), so a foreachBatch retry
-    * converges to exactly one copy of the batch's postings, partial
+    * names, bracketed by ONE pending marker
+    * ([[graft.operators.IndexStore.appendExactlyOnce]]), so a foreachBatch
+    * retry converges to exactly one copy of the batch's postings, partial
     * term stats, and doc lengths at ANY crash point — including between
     * the last relation's commit and the batch-token create, and
-    * including a crash BETWEEN relations (each relation's sweep +
-    * rename re-lands independently; the additive-statistics design
-    * means a transiently part-landed batch under-scores exactly like
-    * today's plain three-write append until the retry completes it).
-    * A batch the index's ledger already records
-    * ([[graft.operators.IndexStore.batchCommitted]], asked once for all
-    * three relations) is skipped, so a replay after a compaction folded
-    * it does not land twice.
+    * including a crash BETWEEN relations (a later compaction discards
+    * the part-landed batch, and the retry re-lands it whole). A batch the
+    * index's ledger already records is skipped, so a replay after a
+    * compaction folded it does not land twice.
     */
   def appendToBm25IndexExactlyOnce(
       newDocs: DataFrame,
@@ -1061,40 +1034,9 @@ object TextAnalysis {
       path: String,
       streamId: String,
       batchId: Long
-  ): Unit = {
-    val spark = newDocs.sparkSession
-    graft.operators.IndexStore.withWriterLease(spark, path) {
-      // ONE pending marker brackets all three relations: a crash between
-      // them must read as a PARTIAL batch to a later compaction (which
-      // then discards the landed subset so the retry re-lands the whole
-      // batch) — per-relation markers would each clear on their own
-      // relation's completion and mask the between-relations window.
-      if (!graft.operators.IndexStore.batchCommitted(spark, path, streamId, batchId))
-        graft.operators.IndexStore.withPendingBatch(spark, path, streamId, batchId) {
-          val dd = graft.operators.IndexStore.dataDir(spark, path)
-          val termBuckets = bm25TermBuckets(spark, dd)
-          val inc    = buildBm25Index(newDocs, textCol, idCol)
-          val bucket = pmod(xxhash64(col("term")), lit(termBuckets.toLong)).cast("int").as("bucket")
-          // The three per-relation installs target DISJOINT directories and
-          // overlap ([[graft.operators.IndexStore.inParallel]] — the lease
-          // and the pending marker above already bracket them as one batch;
-          // a concurrent partial land is the same observable state as the
-          // crash-between-relations window documented above).
-          graft.operators.IndexStore.inParallel(
-            () => graft.operators.IndexStore.appendBatchExactlyOnce(
-              spark, path, "postings", "bucket", streamId, batchId)(inc.postings.withColumn("bucket", bucket)),
-            () => graft.operators.IndexStore.appendBatchExactlyOnce(
-              spark, path, "terms", "bucket", streamId, batchId)(inc.terms.withColumn("bucket", bucket)),
-            // Natural write parallelism: the install stamps every shard with
-            // (streamId, batchId) (`sb-…-<k>.parquet`), and the sweep counts
-            // distinct BATCHES, not files ([[bm25DocsSegments]]) — so a
-            // billion-row daily batch lands multi-file instead of through
-            // one serial task.
-            () => graft.operators.IndexStore.appendBatchExactlyOnceFlat(
-              spark, path, "docs", streamId, batchId)(inc.docs))
-        }
-    }
-  }
+  ): Unit =
+    graft.operators.IndexStore.appendExactlyOnce(newDocs.sparkSession, path, streamId, batchId)(dd =>
+      bm25Relations(buildBm25Index(newDocs, textCol, idCol), bm25TermBuckets(newDocs.sparkSession, dd)))
 
   /** The index's term-bucket count — a one-row meta relation, read
     * driver-side ([[graft.operators.IndexStore.readTinyMetaRows]]: no
@@ -1174,9 +1116,9 @@ object TextAnalysis {
           //    The recount reads the PHYSICAL staged postings — exactly the
           //    rewritten buckets, no manifest resolution needed or wanted.
           if (d.full || d.dirty.nonEmpty)
-            spark.read.schema(stagedPostingsSchema).parquet(s"$staged/postings")
-              .groupBy("bucket", "term").agg(count(lit(1)).as("doc_freq"))
-              .repartition(col("bucket")).write.partitionBy("bucket").parquet(s"$staged/terms")
+            IndexStore.writeStaged(spark, staged, IndexStore.Relation("terms", "bucket",
+              spark.read.schema(stagedPostingsSchema).parquet(s"$staged/postings")
+                .groupBy("bucket", "term").agg(count(lit(1)).as("doc_freq"))))
           postingsEntries ++
             IndexStore.stagedEntries(spark, root, staged, "terms", "bucket") ++
             IndexStore.carriedEntries(spark, root, live, "terms", "bucket",
@@ -1192,8 +1134,8 @@ object TextAnalysis {
           //    folds file count to ~bytes/128MB without paying a shuffle.
           val docsDirty = IndexStore.tombstones(spark, live).isDefined || bm25DocsSegments(spark, live) > 1
           if (!selective || docsDirty) {
-            IndexStore.minusTombstoned(IndexStore.readRelFlat(spark, live, "docs", man), "doc_id", live)
-              .write.parquet(s"$staged/docs")
+            IndexStore.writeStaged(spark, staged, IndexStore.Relation.flat("docs",
+              IndexStore.minusTombstoned(IndexStore.readRelFlat(spark, live, "docs", man), "doc_id", live)))
             IndexStore.stagedFlatEntry(spark, root, staged, "docs")
           } else
             IndexStore.carriedFlatEntry(spark, root, live, "docs", man)

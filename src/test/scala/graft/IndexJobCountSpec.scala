@@ -7,8 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Spark job counts of one selective compaction per index family and of
-  * one tombstoned probe. Every family's tombstone mask and dirty-partition
+/** Spark job counts of one selective compaction per index family, of
+  * one tombstoned probe, and of one build and one append per family. Every family's tombstone mask and dirty-partition
   * rewrite go through [[IndexStore]]; the counts pin that the shared path
   * launches no more jobs than each family's own copy did. Each scenario
   * dirties a minority of partitions, so the compaction takes its selective
@@ -120,6 +120,77 @@ class IndexJobCountSpec extends SparkSpec {
       val (_, jobs) = jobsDuring(TextAnalysis.compactBm25Index(spark, dir))
       carried(dir) should be > 0
       jobs shouldBe 14
+    }
+  }
+  /** Every build and append goes through [[IndexStore]]'s one relation
+    * writer; the counts are those each family's own writes launched. */
+  describe("Spark jobs per index build and append") {
+    def emb(ids: Range): DataFrame = ids.map { i =>
+      (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
+    }.toDF("vec_id", "embedding")
+    val cents = Array.tabulate(4)(c => Array.tabulate(8)(d => (c + d % 3).toDouble))
+    def fps(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, (i.toLong * 0x9E3779B97F4A7C15L) >>> 1)).toDF("doc_id", "fp")
+    def sets(ids: Range): DataFrame =
+      docsDf(ids).select(col("doc_id"), Dedup.wordNgrams(col("text"), 3).as("bg"))
+
+    it("signature: build, exactly-once append") {
+      val dir = tmpDir("jobs_sig_build_")
+      val (_, build) = jobsDuring(Dedup.persistSignatureIndex(
+        Dedup.buildSignatureIndex(docsDf(1 to 60), "text", "doc_id"), dir))
+      val (_, append) = jobsDuring(Dedup.appendToSignatureIndexExactlyOnce(
+        Dedup.buildSignatureIndex(docsDf(61 to 62), "text", "doc_id"), dir, "s", 0L))
+      Dedup.loadSignatureIndex(spark, dir).count() shouldBe 62L
+      (build, append) shouldBe ((3, 3))
+    }
+
+    it("fingerprint: build, plain append") {
+      val dir = tmpDir("jobs_fp_build_")
+      val (_, build) = jobsDuring(Dedup.persistFingerprintIndex(fps(1 to 40), "doc_id", "fp", dir, maxHamming = 3))
+      val (_, append) = jobsDuring(
+        Dedup.persistFingerprintIndex(fps(41 to 42), "doc_id", "fp", dir, maxHamming = 3, append = true))
+      (build, append) shouldBe ((3, 2))
+    }
+
+    it("jaccard: build, plain append") {
+      val dir = tmpDir("jobs_jac_build_")
+      val (_, build) = jobsDuring(Dedup.persistJaccardIndex(sets(1 to 40), "bg", "doc_id", dir, thresholdMilli = 600))
+      val (_, append) = jobsDuring(
+        Dedup.persistJaccardIndex(sets(41 to 42), "bg", "doc_id", dir, thresholdMilli = 600, append = true))
+      (build, append) shouldBe ((15, 9))
+    }
+
+    it("gram: build, plain append") {
+      val dir = tmpDir("jobs_gram_build_")
+      val (_, build) = jobsDuring(Dedup.persistGramIndex(docsDf(1 to 20), "text", "doc_id", dir, k = 20))
+      val (_, append) = jobsDuring(Dedup.persistGramIndex(
+        Seq((99L, "zzzzzzzzzzqqqqqqqqqqab")).toDF("doc_id", "text"), "text", "doc_id", dir, k = 20, append = true))
+      (build, append) shouldBe ((4, 3))
+    }
+
+    it("ivf: build, exactly-once append") {
+      val dir = tmpDir("jobs_ivf_build_")
+      val (_, build) = jobsDuring(Similarity.persistIvfIndex(emb(1 to 40), "vec_id", "embedding", cents, dir))
+      val (_, append) = jobsDuring(Similarity.appendToIvfIndexExactlyOnce(
+        emb(41 to 42), "vec_id", "embedding", dir, "s", 0L))
+      (build, append) shouldBe ((3, 2))
+    }
+
+    it("ivf-pq: build, plain append") {
+      val dir   = tmpDir("jobs_ivfpq_build_")
+      val model = Similarity.pqTrain(emb(1 to 40), "vec_id", "embedding", m = 4, k = 8)
+      val (_, build) = jobsDuring(Similarity.persistIvfPqIndex(emb(1 to 40), "vec_id", "embedding", cents, model, dir))
+      val (_, append) = jobsDuring(Similarity.appendToIvfIndex(emb(41 to 42), "vec_id", "embedding", dir))
+      (build, append) shouldBe ((9, 2))
+    }
+
+    it("bm25: build, exactly-once append") {
+      val dir = tmpDir("jobs_bm25_build_")
+      val (_, build) = jobsDuring(TextAnalysis.persistBm25Index(
+        TextAnalysis.buildBm25Index(docsDf(1 to 30), "text", "doc_id"), dir))
+      val (_, append) = jobsDuring(TextAnalysis.appendToBm25IndexExactlyOnce(
+        docsDf(31 to 32), "text", "doc_id", dir, "s", 0L))
+      (build, append) shouldBe ((10, 9))
     }
   }
 }
