@@ -8,9 +8,8 @@ import org.slf4j.LoggerFactory
 
 import java.sql.DriverManager
 import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.util.{Failure, Success, Try}
+import scala.concurrent.ExecutionContext
+import scala.util.Success
 
 /** High-level orchestrator: anonymized, optionally subsetted copies of a
   * multi-table catalog — the Spark-native analogue of the reference's
@@ -91,6 +90,8 @@ class Graft(
   /** Execute the plan into parquet at `outDir/<table>`, levels sequential,
     * tables within a level in parallel (reference DbCopier.scala:57-83);
     * returns per-table row counts (reference returns Map[table -> count]).
+    * A level fails only after every table of it has finished; the first
+    * failure is thrown with the others attached as suppressed exceptions.
     */
   def run(outDir: String, spark: SparkSession)(tableSpecs: (String, TableSpec)*): Map[String, Long] = {
     val plans  = plan(tableSpecs: _*)
@@ -101,18 +102,18 @@ class Graft(
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       levels.foldLeft(Map.empty[String, Long]) { (acc, level) =>
-        val futures = level.collect {
+        val writes = level.collect {
           case table if skippedTables.contains(table) =>
-            Future.successful(table -> 0L)
+            () => table -> 0L
           case table if plans.contains(table) =>
-            Future {
+            () => {
               val path = s"$outDir/$table"
               plans(table).write.mode("overwrite").parquet(path)
               // Parquet footer metadata makes this count a metadata-only read.
               table -> spark.read.parquet(path).count()
             }
         }
-        acc ++ Await.result(Future.sequence(futures), Duration.Inf).toMap
+        acc ++ Parallel.all(writes)
       }
     } finally pool.shutdown()
   }
@@ -176,13 +177,13 @@ class Graft(
       try onConflict match {
         case Some(oc) if upsertVia == Graft.UpsertPath.StageAndMerge =>
           val fkOrder = levels.flatten.filter(plans.contains)
-          val outcomes = Graft.awaitAll(fkOrder.map { table =>
+          val outcomes = Parallel.awaitAll(fkOrder.map { table =>
             () => table -> JdbcUpsertSink.stage(plans(table), url, connectionProperties, targetSchema, table, oc, pks(table))
           })
           val conn = DriverManager.getConnection(url, connectionProperties)
           try {
             try {
-              val staged = Graft.valuesOrFirstFailure(outcomes)
+              val staged = Parallel.valuesOrFirstFailure(outcomes)
               JdbcUpsertSink.mergeStaged(conn, staged.map(_._2))
               skipped ++ staged.map { case (table, s) => table -> s.rows }
             } finally JdbcUpsertSink.dropStaging(conn, outcomes.collect { case Success((_, s)) => s })
@@ -193,7 +194,7 @@ class Graft(
               () => table -> JdbcUpsertSink.writeDeferringSelfRefs(
                 plans(table), url, connectionProperties, targetSchema, table, onConflict, pks(table))
             }
-            acc ++ Graft.valuesOrFirstFailure(Graft.awaitAll(writes))
+            acc ++ Parallel.all(writes)
           }
       } finally pool.shutdown()
 
@@ -210,23 +211,6 @@ class Graft(
 }
 
 object Graft {
-
-  /** Runs every thunk on `ec` and waits for ALL of them — never returning
-    * while a sibling still runs — yielding each outcome in input order.
-    */
-  private def awaitAll[T](thunks: Seq[() => T])(implicit ec: ExecutionContext): Seq[Try[T]] =
-    thunks.map(t => Future(t())).map(f => Await.ready(f, Duration.Inf).value.get)
-
-  /** Every value, or the first failure with the others attached via
-    * `addSuppressed`.
-    */
-  private def valuesOrFirstFailure[T](outcomes: Seq[Try[T]]): Seq[T] =
-    outcomes.collect { case Failure(e) => e } match {
-      case Seq() => outcomes.map(_.get)
-      case first +: rest =>
-        rest.filter(_ ne first).foreach(first.addSuppressed)
-        throw first
-    }
 
   /** How [[Graft.runJdbc]] executes an [[graft.sinks.OnConflict]] strategy. */
   sealed trait UpsertPath

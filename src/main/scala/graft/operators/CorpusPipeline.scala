@@ -132,78 +132,69 @@ object CorpusPipeline {
   ): DataFrame = {
     require(indexPaths.nonEmpty, "compactIndexes: no index paths given")
     import spark.implicits._
+    import scala.concurrent.ExecutionContext.Implicits.global
     // Distinct indexes are independent rewrites over disjoint directories:
     // run them as CONCURRENT Spark jobs (one driver thread each) so the
     // cluster pipelines the five scans/shuffles instead of idling between
     // them — the same submit-parallelism Graft's level-parallel copy uses.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val report = Await.result(
-      Future.sequence(indexPaths.map { p =>
-        Future {
-          val family = detectFamily(spark, p)
-          compactFamily(spark, p, family, selective, ivfRetrain, jaccardRefresh)
-          (p, family)
-        }
-      }),
-      Duration.Inf)
-    report.toDF("index_path", "family")
+    // Every compaction finishes before the call returns or throws.
+    graft.Parallel.all(indexPaths.map { p => () =>
+      val family = detectFamily(spark, p)
+      family.compact(spark, p, CompactRequest(selective, ivfRetrain, jaccardRefresh))
+      (p, family.name)
+    }).toDF("index_path", "family")
   }
 
-  /** Which persisted-index family lives at `root`, detected from its
-    * distinctive frozen metadata artifact (resolved against the current
-    * generation — the artifact moves with the data once the index has
-    * been compacted).
-    */
-  private def detectFamily(spark: org.apache.spark.sql.SparkSession, root: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def has(child: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(IndexStore.dataDir(spark, root), child)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    if (has("_graft_index_meta")) "signature"
-    else if (has("_graft_fp_meta")) "fingerprint"
-    else if (has("_graft_jidx_meta")) "jaccard"
-    else if (has("_graft_centroids")) "ivf"
-    else if (has("_graft_meta")) "bm25"
-    else if (has("_graft_gram_meta")) "gram"
-    else throw new IllegalArgumentException(
-      s"$root carries no known index metadata artifact " +
-        "(_graft_index_meta / _graft_fp_meta / _graft_jidx_meta / _graft_centroids / _graft_meta / _graft_gram_meta)")
-  }
-
-  private def compactFamily(
-      spark: org.apache.spark.sql.SparkSession,
-      p: String,
-      family: String,
+  /** What one compaction of an index is asked to do: the family
+    * compactors' shared knobs and each family's own drift levers. */
+  private final case class CompactRequest(
       selective: Boolean,
       ivfRetrain: Similarity.RetrainMode,
-      jaccardRefresh: Dedup.RefreshMode = Dedup.RefreshMode.Never,
+      jaccardRefresh: Dedup.RefreshMode,
       keepGens: Int = 1,
       minRetentionMs: Long = 0L,
-      pqRefresh: Similarity.PqRefreshMode = Similarity.PqRefreshMode.Never
-  ): Unit = family match {
-    case "signature"   => Dedup.compactSignatureIndex(spark, p, selective, keepGens, minRetentionMs)
-    case "fingerprint" => Dedup.compactFingerprintIndex(spark, p, selective, keepGens, minRetentionMs)
-    case "jaccard"     => Dedup.compactJaccardIndex(spark, p, selective, keepGens, minRetentionMs,
-      refresh = jaccardRefresh)
-    case "ivf"         => Similarity.compactIvfIndex(spark, p, selective, retrain = ivfRetrain,
-      keepGens = keepGens, minRetentionMs = minRetentionMs, pqRefresh = pqRefresh)
-    case "bm25"        => TextAnalysis.compactBm25Index(spark, p, selective, keepGens, minRetentionMs)
-    case "gram"        => Dedup.compactGramIndex(spark, p, selective, keepGens, minRetentionMs)
-  }
+      pqRefresh: Similarity.PqRefreshMode = Similarity.PqRefreshMode.Never)
 
-  /** The partitioned data relations of each family (relation subpath,
-    * partition column — `""` for single-relation families whose data
-    * sits at the generation root) — what the maintenance sweep
-    * inspects for append-segment pressure.
+  /** One persisted-index family: its name, the distinctive frozen
+    * metadata artifact that identifies it (each family stores exactly one
+    * beside its data), its partitioned data relations (relation subpath,
+    * partition column — `""` for single-relation families whose data sits
+    * at the generation root — what the maintenance sweep inspects for
+    * append-segment pressure), and its compaction.
     */
-  private def familyRelations(family: String): Seq[(String, String)] = family match {
-    case "signature" | "fingerprint" | "gram" => Seq(("", "bucket"))
-    case "jaccard" => Seq(("postings", "bucket"), ("fullsets", "dbucket"))
-    case "bm25"    => Seq(("postings", "bucket"), ("terms", "bucket"))
-    case "ivf"     => Seq(("", "cell"))
+  private final case class Family(
+      name: String,
+      marker: String,
+      relations: Seq[(String, String)],
+      compact: (org.apache.spark.sql.SparkSession, String, CompactRequest) => Unit)
+
+  /** Every family, in detection order. */
+  private val families = Seq(
+    Family("signature", "_graft_index_meta", Seq(("", "bucket")),
+      (s, p, r) => Dedup.compactSignatureIndex(s, p, r.selective, r.keepGens, r.minRetentionMs)),
+    Family("fingerprint", "_graft_fp_meta", Seq(("", "bucket")),
+      (s, p, r) => Dedup.compactFingerprintIndex(s, p, r.selective, r.keepGens, r.minRetentionMs)),
+    Family("jaccard", "_graft_jidx_meta", Seq(("postings", "bucket"), ("fullsets", "dbucket")),
+      (s, p, r) => Dedup.compactJaccardIndex(s, p, r.selective, r.keepGens, r.minRetentionMs,
+        refresh = r.jaccardRefresh)),
+    Family("ivf", "_graft_centroids", Seq(("", "cell")),
+      (s, p, r) => Similarity.compactIvfIndex(s, p, r.selective, retrain = r.ivfRetrain,
+        keepGens = r.keepGens, minRetentionMs = r.minRetentionMs, pqRefresh = r.pqRefresh)),
+    Family("bm25", "_graft_meta", Seq(("postings", "bucket"), ("terms", "bucket")),
+      (s, p, r) => TextAnalysis.compactBm25Index(s, p, r.selective, r.keepGens, r.minRetentionMs)),
+    Family("gram", "_graft_gram_meta", Seq(("", "bucket")),
+      (s, p, r) => Dedup.compactGramIndex(s, p, r.selective, r.keepGens, r.minRetentionMs)))
+
+  /** Which persisted-index family lives at `root`, detected from its
+    * marker artifact (resolved against the current generation — the
+    * artifact moves with the data once the index has been compacted).
+    */
+  private def detectFamily(spark: org.apache.spark.sql.SparkSession, root: String): Family = {
+    val dd = new org.apache.hadoop.fs.Path(IndexStore.dataDir(spark, root))
+    val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    families.find(f => fs.exists(new org.apache.hadoop.fs.Path(dd, f.marker))).getOrElse(
+      throw new IllegalArgumentException(
+        s"$root carries no known index metadata artifact (${families.map(_.marker).mkString(" / ")})"))
   }
 
   /** When is an index WORTH compacting — the operational policy
@@ -301,17 +292,15 @@ object CorpusPipeline {
   ): DataFrame = {
     require(indexPaths.nonEmpty, "maintainIndexes: no index paths given")
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val conf = spark.sparkContext.hadoopConfiguration
 
     // Inspection is read-only (listings + footer counts + the IVF thin
     // scan) — run it concurrently across indexes like the compacts.
-    val audits = Await.result(Future.sequence(indexPaths.map { p => Future {
+    val audits = graft.Parallel.all(indexPaths.map { p => () =>
       val family = detectFamily(spark, p)
       val live   = IndexStore.dataDir(spark, p)
-      val rels   = familyRelations(family)
+      val rels   = family.relations
       // ONE listing per relation location yields both maintenance
       // signals: segment COUNT (file fan-out — what every probe's scan
       // pays) and append byte MASS (bytes beyond each partition's
@@ -338,7 +327,7 @@ object CorpusPipeline {
       // ([[TextAnalysis.bm25DocsSegments]] — one group per build/append
       // batch, however many shards each landed).
       val docsSegs =
-        if (family != "bm25") 0
+        if (family.name != "bm25") 0
         else TextAnalysis.bm25DocsSegments(spark, live)
       val maxSegments = (segCounts ++ Seq(docsSegs)).foldLeft(0)(math.max)
       // DISTINCT ids: deleteFromPersistedIndex dedupes within a call but
@@ -369,7 +358,7 @@ object CorpusPipeline {
         else 0L
       }.getOrElse(0L)
       val imbalance =
-        if (family == "ivf") Some(Similarity.ivfCellImbalance(spark, p)) else None
+        if (family.name == "ivf") Some(Similarity.ivfCellImbalance(spark, p)) else None
       val donorGens = IndexStore.donorGenerations(live, man)
 
       val action =
@@ -387,33 +376,28 @@ object CorpusPipeline {
       (p, family, maxSegments, tombstoneRows, dataRows,
         imbalance.map(i => math.rint(i * 1000) / 1000),
         math.rint(appendByteFrac * 1000) / 1000, donorGens, action)
-    }}), Duration.Inf)
+    })
 
-    if (!dryRun) {
-      Await.result(
-        Future.sequence(audits.filter(_._9 != "none").map { case (p, family, _, _, _, _, _, _, action) =>
-          Future {
-            // Imbalance was just measured; Always skips re-measuring it.
-            val mode =
-              if (action == "compact_retrain") Similarity.RetrainMode.Always
-              else Similarity.RetrainMode.Never
-            // A fired compact folds every frozen-artifact drift check in
-            // (Auto modes): the rewrite is being paid for anyway, so a
-            // drifted Jaccard order refreshes in the same pass — and a
-            // PQ-bearing IVF index whose sampled quantization error grew
-            // past the Auto threshold retrains its codebooks riding the
-            // same rewrite (the retrain-on-compact argument applied to
-            // the last frozen artifact).
-            compactFamily(spark, p, family, selective = action != "compact_full",
-              ivfRetrain = mode,
-              jaccardRefresh = Dedup.RefreshMode.Auto(),
-              keepGens = policy.keepGenerations, minRetentionMs = policy.minRetentionMs,
-              pqRefresh = Similarity.PqRefreshMode.Auto())
-          }
-        }),
-        Duration.Inf)
-    }
-    audits.toDF("index_path", "family", "max_segments", "tombstone_rows",
+    if (!dryRun)
+      graft.Parallel.all(audits.filter(_._9 != "none").map { case (p, family, _, _, _, _, _, _, action) => () =>
+        // Imbalance was just measured; Always skips re-measuring it.
+        val mode =
+          if (action == "compact_retrain") Similarity.RetrainMode.Always
+          else Similarity.RetrainMode.Never
+        // A fired compact folds every frozen-artifact drift check in
+        // (Auto modes): the rewrite is being paid for anyway, so a
+        // drifted Jaccard order refreshes in the same pass — and a
+        // PQ-bearing IVF index whose sampled quantization error grew
+        // past the Auto threshold retrains its codebooks riding the
+        // same rewrite (the retrain-on-compact argument applied to
+        // the last frozen artifact).
+        family.compact(spark, p, CompactRequest(selective = action != "compact_full",
+          ivfRetrain = mode,
+          jaccardRefresh = Dedup.RefreshMode.Auto(),
+          keepGens = policy.keepGenerations, minRetentionMs = policy.minRetentionMs,
+          pqRefresh = Similarity.PqRefreshMode.Auto()))
+      })
+    audits.map(a => a.copy(_2 = a._2.name)).toDF("index_path", "family", "max_segments", "tombstone_rows",
       "data_rows", "ivf_imbalance", "append_byte_frac", "donor_gens", "action")
   }
 
@@ -440,11 +424,9 @@ object CorpusPipeline {
   ): DataFrame = {
     require(indexPaths.nonEmpty, "vacuumIndexes: no index paths given")
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = Await.result(Future.sequence(indexPaths.map { p => Future {
-      val family = detectFamily(spark, p)
+    val rows = graft.Parallel.all(indexPaths.map { p => () =>
+      val family = detectFamily(spark, p).name
       val cur    = IndexStore.currentGeneration(spark, p)
       val bytes  = IndexStore.vacuum(spark, p,
         minRetentionMs = policy.minRetentionMs,
@@ -452,7 +434,7 @@ object CorpusPipeline {
       val action =
         if (bytes == 0L) "none" else if (dryRun) "vacuum_dry_run" else "vacuum"
       (p, family, cur.toLong, bytes, action)
-    }}), Duration.Inf)
+    })
     rows.toDF("index_path", "family", "current_generation", "reclaimable_bytes", "action")
   }
 

@@ -1387,7 +1387,7 @@ object Dedup {
     * full-corpus rewrite. When ≥80% of partitions are dirty the full
     * rewrite is cheaper and runs instead. Either way the result installs
     * as a NEW GENERATION behind an atomic pointer flip
-    * ([[IndexStore.swapGeneration]]): concurrent probes resolve a
+    * ([[IndexStore.compact]]): concurrent probes resolve a
     * complete generation at every instant — no absence window, no mixed
     * state, crash-safe at every point — and writers serialize on the
     * index lease.
@@ -1424,12 +1424,8 @@ object Dedup {
       keepGens: Int,
       minRetentionMs: Long
   ): Unit =
-    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
-      keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val man = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
-      val (_, entries) = IndexStore.rewriteDirty(
-        spark, live, staged, man, "", "bucket", selective, idCol = Some("doc_id"))
-      IndexStore.writeManifest(spark, staged, entries)
+    IndexStore.compact(spark, path, keepGens, minRetentionMs) {
+      _.rewrite("", "bucket", selective, idCol = Some("doc_id"))
     }
 
   /** Compact a persisted Jaccard prefix index: both data relations
@@ -1460,7 +1456,7 @@ object Dedup {
     * docBuckets)` — ID-derived, so its tombstone-touched partitions
     * compute from the tombstone set alone, no scan at all. Both
     * relations land in ONE new generation behind ONE atomic pointer flip
-    * ([[IndexStore.swapGeneration]]), so a concurrent probe can never
+    * ([[IndexStore.compact]]), so a concurrent probe can never
     * see compacted postings against un-compacted fullsets — the
     * per-relation in-place rewrite this replaces had exactly that
     * window (tombstone-masked, so correct, but now impossible by
@@ -1474,17 +1470,14 @@ object Dedup {
       minRetentionMs: Long = 0L,
       refresh: RefreshMode = RefreshMode.Never
   ): Unit =
-    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
-      keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
+    IndexStore.compact(spark, path, keepGens, minRetentionMs) { c =>
+      val live = c.live
       val (tmI, keyBuckets, docBuckets) = readJaccardIndexMetaAt(spark, live)
-      val root = IndexStore.rootOf(live)
-      val man  = IndexStore.readManifest(spark, live) // parsed ONCE for both relations
       // `fullsets` is partitioned by `dbucket = pmod(xxhash64(doc_id),
       // docBuckets)`: its tombstoned partitions follow from the ids alone.
-      def rewriteFullsets(): Seq[IndexStore.ManifestEntry] =
-        IndexStore.rewriteDirty(spark, live, staged, man, "fullsets", "dbucket", selective,
-          idCol = Some("doc_id"),
-          partOfId = Some(id => pmod(xxhash64(id), lit(docBuckets.toLong)).cast("int")))._2
+      def rewriteFullsets(): Unit =
+        c.rewrite("fullsets", "dbucket", selective, idCol = Some("doc_id"),
+          partOfId = Some(id => pmod(xxhash64(id), lit(docBuckets.toLong)).cast("int")))
       val fracOpt = readExciseFracAt(spark, live)
       val doRefresh = refresh match {
         case RefreshMode.Never  => false
@@ -1506,86 +1499,72 @@ object Dedup {
       }
       // The two relations (and the refresh path's frozen artifacts) land in
       // DISJOINT staged directories, so their rewrites overlap
-      // ([[IndexStore.inParallel]] — the enclosing swap's lease is shared
-      // with the worker threads): compact wall ≈ max(postings, fullsets)
-      // instead of their sum.
-      val (postingsEntries, fullsetsEntries) =
-        if (doRefresh) {
-          // Fresh frequencies from the survivors' FULL sets, prefixes
-          // re-derived under the new (dfreq, tok) order — a changed order
-          // moves prefix membership, so postings rewrite entirely; the
-          // replacement dictionary installs in the SAME atomic generation
-          // (a probe never ranks by one order against the other's
-          // postings).
-          val liveToks0 = Lineage.truncate(IndexStore.minusTombstoned(
-            IndexStore.readRel(spark, live, "fullsets", "dbucket", man), "doc_id", live).select("doc_id", "tok"))
-          // Excised index: re-evaluate HOTNESS against the live corpus
-          // under the build's frozen fraction — boilerplate that arrived
-          // after the build excises now, riding the rewrite being paid
-          // for anyway (the retrain-on-compact argument applied to the
-          // hot set). Monotone: the updated frozen set is old ∪ new.
-          val newHot = fracOpt.flatMap { frac =>
-            val n = liveToks0.select("doc_id").distinct().count()
-            if (n == 0L) None
-            else {
-              val cutoff = math.max(1L, math.floor(frac * n).toLong)
-              val h = Lineage.truncate(
-                liveToks0.groupBy("tok").agg(count(lit(1)).as("dfreq"))
-                  .where(col("dfreq") > cutoff).select("tok"))
-              if (h.isEmpty) None else Some(h)
-            }
+      // ([[IndexStore.inParallel]] — the enclosing compaction's lease is
+      // shared with the worker threads): compact wall ≈ max(postings,
+      // fullsets) instead of their sum.
+      if (doRefresh) {
+        // Fresh frequencies from the survivors' FULL sets, prefixes
+        // re-derived under the new (dfreq, tok) order — a changed order
+        // moves prefix membership, so postings rewrite entirely; the
+        // replacement dictionary installs in the SAME atomic generation
+        // (a probe never ranks by one order against the other's
+        // postings).
+        val liveToks0 = Lineage.truncate(IndexStore.minusTombstoned(
+          IndexStore.readRel(spark, live, "fullsets", "dbucket", c.manifest), "doc_id", live).select("doc_id", "tok"))
+        // Excised index: re-evaluate HOTNESS against the live corpus
+        // under the build's frozen fraction — boilerplate that arrived
+        // after the build excises now, riding the rewrite being paid
+        // for anyway (the retrain-on-compact argument applied to the
+        // hot set). Monotone: the updated frozen set is old ∪ new.
+        val newHot = fracOpt.flatMap { frac =>
+          val n = liveToks0.select("doc_id").distinct().count()
+          if (n == 0L) None
+          else {
+            val cutoff = math.max(1L, math.floor(frac * n).toLong)
+            val h = Lineage.truncate(
+              liveToks0.groupBy("tok").agg(count(lit(1)).as("dfreq"))
+                .where(col("dfreq") > cutoff).select("tok"))
+            if (h.isEmpty) None else Some(h)
           }
-          val liveToks = newHot match {
-            case Some(h) =>
-              Lineage.truncate(liveToks0.join(
-                org.apache.spark.sql.functions.broadcast(h), Seq("tok"), "left_anti"))
-            case None => liveToks0
-          }
-          val freshDict = Lineage.truncate(
-            liveToks.groupBy("tok").agg(count(lit(1)).as("dfreq")))
-          // liveToks/freshDict are checkpointed above, so the two staged
-          // writes below read shared materialized inputs — independent.
-          val Seq(pE, fE) = IndexStore.inParallel(
-            () => {
-              IndexStore.writeStaged(spark, staged,
-                IndexStore.Relation("postings", "bucket", jaccardPrefix(liveToks, freshDict, tmI.toLong)
-                  .withColumn("bucket", pmod(xxhash64(col("tok")), lit(keyBuckets.toLong)).cast("int"))),
-                IndexStore.Relation.flat("_graft_jidx_dict", freshDict)) // wins over meta carry
-              IndexStore.stagedEntries(spark, root, staged, "postings", "bucket")
-            },
-            () => newHot match {
-              case Some(h) =>
-                // Newly-hot tokens must leave the FULL SETS too (sizes and
-                // intersections live in the shared excised universe), so
-                // the selective cost model escalates to a full fullsets
-                // rewrite and the UPDATED frozen hot set installs in the
-                // same atomic generation — a probe never excises by one set
-                // against the other's relations.
-                val oldHotP = new org.apache.hadoop.fs.Path(s"$live/_graft_jidx_hot")
-                val oldHot =
-                  if (oldHotP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(oldHotP))
-                    readFrozenJaccardRel(spark, oldHotP.toString).select("tok")
-                  else h.limit(0)
-                IndexStore.writeStaged(spark, staged,
-                  IndexStore.Relation.flat("_graft_jidx_hot", oldHot.unionByName(h).distinct()), // wins over meta carry
-                  IndexStore.Relation("fullsets", "dbucket", liveToks
-                    .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int"))))
-                IndexStore.stagedEntries(spark, root, staged, "fullsets", "dbucket")
-              case None =>
-                // `fullsets` content is order-independent: without a hot-set
-                // update its rewrite keeps the selective dirty-partition
-                // cost model even when the order refreshed.
-                rewriteFullsets()
-            })
-          (pE, fE)
-        } else {
-          val Seq(pE, fE) = IndexStore.inParallel(
-            () => IndexStore.rewriteDirty(spark, live, staged, man, "postings", "bucket", selective,
-              idCol = Some("doc_id"))._2,
-            () => rewriteFullsets())
-          (pE, fE)
         }
-      IndexStore.writeManifest(spark, staged, postingsEntries ++ fullsetsEntries)
+        val liveToks = newHot match {
+          case Some(h) =>
+            Lineage.truncate(liveToks0.join(
+              org.apache.spark.sql.functions.broadcast(h), Seq("tok"), "left_anti"))
+          case None => liveToks0
+        }
+        val freshDict = Lineage.truncate(
+          liveToks.groupBy("tok").agg(count(lit(1)).as("dfreq")))
+        // liveToks/freshDict are checkpointed above, so the two staged
+        // writes below read shared materialized inputs — independent.
+        IndexStore.inParallel(
+          () => c.write(
+            IndexStore.Relation("postings", "bucket", jaccardPrefix(liveToks, freshDict, tmI.toLong)
+              .withColumn("bucket", pmod(xxhash64(col("tok")), lit(keyBuckets.toLong)).cast("int"))),
+            IndexStore.Relation.flat("_graft_jidx_dict", freshDict)), // wins over meta carry
+          () => newHot match {
+            case Some(h) =>
+              // Newly-hot tokens must leave the FULL SETS too (sizes and
+              // intersections live in the shared excised universe), so
+              // the selective cost model escalates to a full fullsets
+              // rewrite and the UPDATED frozen hot set installs in the
+              // same atomic generation — a probe never excises by one set
+              // against the other's relations.
+              val oldHot = readJaccardHot(spark, live).fold(h.limit(0))(_.select("tok"))
+              c.write(
+                IndexStore.Relation.flat("_graft_jidx_hot", oldHot.unionByName(h).distinct()), // wins over meta carry
+                IndexStore.Relation("fullsets", "dbucket", liveToks
+                  .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)).cast("int"))))
+            case None =>
+              // `fullsets` content is order-independent: without a hot-set
+              // update its rewrite keeps the selective dirty-partition
+              // cost model even when the order refreshed.
+              rewriteFullsets()
+          })
+      } else
+        IndexStore.inParallel(
+          () => c.rewrite("postings", "bucket", selective, idCol = Some("doc_id")),
+          () => rewriteFullsets())
     }
 
   /** Reload the COMPACT `(doc_id, sig)` index from a persisted banded one
@@ -1849,12 +1828,8 @@ object Dedup {
         require(m == (thresholdMilli, keyBuckets, docBuckets),
           s"persistJaccardIndex(append): parameters ($thresholdMilli,$keyBuckets,$docBuckets) do not match the existing index $m")
         // Excise by the FROZEN hot set (same universe as the index).
-        val hotPath = new org.apache.hadoop.fs.Path(s"$dir/_graft_jidx_hot")
-        val tok =
-          if (hotPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hotPath))
-            minusHot(tok0, readFrozenJaccardRel(spark, hotPath.toString))
-          else tok0
-        relations(tok, readFrozenJaccardRel(spark, s"$dir/_graft_jidx_dict"))
+        val tok = readJaccardHot(spark, dir).fold(tok0)(minusHot(tok0, _))
+        relations(tok, readJaccardDict(spark, dir))
       }
     else {
       // Hot set is provably small (≤ avgElemsPerDoc / frac entries — N
@@ -1935,7 +1910,7 @@ object Dedup {
     def live(rel: String, partCol: String, man: Option[Seq[IndexStore.ManifestEntry]]): DataFrame =
       IndexStore.minusTombstoned(
         IndexStore.readRel(spark, dd, rel, partCol, man).select("doc_id", "tok"), "doc_id", dd)
-    val frozen = readFrozenJaccardRel(spark, s"$dd/_graft_jidx_dict")
+    val frozen = readJaccardDict(spark, dd)
     val man = IndexStore.readManifest(spark, dd) // parsed ONCE for both relations
     val fresh = live("fullsets", "dbucket", man).groupBy("tok").agg(count(lit(1)).as("dfreq"))
     val mass = live("postings", "bucket", man).groupBy("tok").agg(count(lit(1)).as("mass"))
@@ -2056,18 +2031,20 @@ object Dedup {
       r("docBuckets").asInstanceOf[Int])
   }
 
-  /** Read a small frozen Jaccard artifact (the dictionary / hot set) with
-    * its OWN footer-derived schema: `tok` is whatever element type the
-    * build's set column had (strings and long hashed shingles are both
-    * idiomatic), so a hardcoded `tok STRING` DDL would fail the read on a
-    * non-string index with a parquet conversion error. Costs one driver
-    * footer read — same no-schema-inference-job property as the DDL.
+  /** The frozen Jaccard artifacts of the data dir `dd`, each read with its
+    * OWN footer-derived schema ([[IndexStore.readArtifact]]): `tok` is
+    * whatever element type the build's set column had (strings and long
+    * hashed shingles are both idiomatic), so a hardcoded `tok STRING` DDL
+    * would fail the read on a non-string index with a parquet conversion
+    * error. The hot set exists only for an excised build; every index
+    * carries the dictionary.
     */
-  private def readFrozenJaccardRel(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.schema(IndexStore.footerSchemaOf(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"readFrozenJaccardRel: no data file under frozen index artifact $dir"))).parquet(dir)
+  private def readJaccardHot(spark: org.apache.spark.sql.SparkSession, dd: String): Option[DataFrame] =
+    IndexStore.readArtifact(spark, s"$dd/_graft_jidx_hot")
+
+  private def readJaccardDict(spark: org.apache.spark.sql.SparkSession, dd: String): DataFrame =
+    IndexStore.readArtifact(spark, s"$dd/_graft_jidx_dict").getOrElse(
+      throw new IllegalStateException(s"no data file under the frozen Jaccard dictionary $dd/_graft_jidx_dict"))
 
   /** Probe a [[persistJaccardIndex]] with a new batch: every (new, indexed)
     * pair with set-Jaccard ≥ the index's threshold, exactly. Two pruned
@@ -2092,20 +2069,16 @@ object Dedup {
     import spark.implicits._
     val (tmI, keyBuckets, docBuckets) = readJaccardIndexMetaAt(spark, dd)
     val tm = tmI.toLong
-    val dict = readFrozenJaccardRel(spark, s"$dd/_graft_jidx_dict")
+    val dict = readJaccardDict(spark, dd)
     // Excise by the index's FROZEN hot set when one exists
     // ([[persistJaccardIndex]]'s exciseBoilerplateFrac): probe sets must
     // live in the same excised universe as the indexed sets — sizes,
     // prefixes, and intersections all derive post-excision, so the
     // pigeonhole prefix guarantee and the exact threshold test stay
     // sound under the shared semantics ("similar modulo boilerplate").
-    val hotP = new org.apache.hadoop.fs.Path(s"$dd/_graft_jidx_hot")
     val ntok0 = newDf.select(col(idCol).cast("long").as("nid"), explode(col(setCol)).as("tok")).distinct()
-    val ntok = Lineage.truncate(
-      if (hotP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hotP))
-        ntok0.join(org.apache.spark.sql.functions.broadcast(
-          readFrozenJaccardRel(spark, hotP.toString).select("tok")), Seq("tok"), "left_anti")
-      else ntok0)
+    val ntok = Lineage.truncate(readJaccardHot(spark, dd).fold(ntok0)(hot =>
+      ntok0.join(org.apache.spark.sql.functions.broadcast(hot.select("tok")), Seq("tok"), "left_anti")))
     val nprefix = Lineage.truncate(
       ntok.withColumn("sa", count(lit(1)).over(Window.partitionBy("nid")))
         .join(dict, Seq("tok"), "left")
@@ -2687,13 +2660,8 @@ object Dedup {
       keepGens: Int = 1,
       minRetentionMs: Long = 0L
   ): Unit =
-    IndexStore.swapGeneration(spark, path, dropMeta = Set.empty,
-      keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
-      val man = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
-      val (_, entries) = IndexStore.rewriteDirty(
-        spark, live, staged, man, "", "bucket", selective, idCol = None,
-        shape = _.select("g", "bucket").distinct())
-      IndexStore.writeManifest(spark, staged, entries)
+    IndexStore.compact(spark, path, keepGens, minRetentionMs) {
+      _.rewrite("", "bucket", selective, idCol = None, shape = _.select("g", "bucket").distinct())
     }
 
   /** Excise from NEW documents every maximal span covered by k-grams that

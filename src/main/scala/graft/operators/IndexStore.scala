@@ -47,14 +47,20 @@ import org.apache.spark.sql.types.StructType
   *  - '''Tombstones.''' A delete appends ids to the generation's one
   *    tombstone set ([[TombstonesName]], [[appendTombstones]]) for every
   *    family; every probe and load masks it ([[minusTombstoned]]), and
-  *    the compaction that rewrites the rows it touches drops it. The
-  *    families never touch the set's files themselves.
+  *    every compaction drops it ([[compact]]). The families never touch
+  *    the set's files themselves.
   *
   *  - '''Selective (dirty-partition-only) compaction, MANIFEST-carried.'''
-  *    A full-index rewrite at 10⁹ docs to purge 0.1% of rows inverts the
-  *    amortization argument, so the family compactors share one policy
-  *    ([[rewriteDirty]], its cutover in [[decideRewrite]]; an IVF retrain
-  *    or a Jaccard dictionary refresh still rewrites in full): rewrite
+  *    Every family compacts through ONE path, [[compact]]: it takes the
+  *    lease and stages the next generation ([[swapGeneration]]), parses
+  *    the live manifest once, hands the family a [[Compaction]] whose
+  *    `rewrite`/`write`/`carry`/`carryFlat` record the staged
+  *    generation's manifest entries, drops the tombstone set, and writes
+  *    the manifest itself. A full-index rewrite at 10⁹ docs to purge 0.1%
+  *    of rows inverts the amortization argument, so the families share
+  *    one policy ([[Compaction.rewrite]], its cutover in
+  *    [[decideRewrite]]; an IVF retrain or a Jaccard dictionary refresh
+  *    still rewrites in full through [[Compaction.write]]): rewrite
   *    ONLY dirty partitions — those holding append segments or
   *    tombstoned rows — unless 80% or more are dirty, and carry every
   *    clean partition into the new generation BY
@@ -90,7 +96,7 @@ import org.apache.spark.sql.types.StructType
   *    under the lease and appends every relation concurrently;
   *    [[appendExactlyOnce]] adds the batch ledger, one pending marker and
   *    deterministic-name installs; a compaction writes its staged
-  *    generation through [[writeStaged]]. Every job the writer launches
+  *    generation through [[Compaction.write]]. Every job the writer launches
   *    carries an `idx:<kind>:<relation>` label.
   *
   *  - '''Multi-writer safety.''' Builds, appends, tombstone deletes,
@@ -200,7 +206,7 @@ private[graft] object IndexStore {
     * root-relative paths, so readers recover the root from the dir they
     * already hold.
     */
-  def rootOf(dd: String): String = {
+  private def rootOf(dd: String): String = {
     val p = new Path(dd)
     if (p.getName.startsWith(GenPrefix)) p.getParent.toString else dd
   }
@@ -417,12 +423,7 @@ private[graft] object IndexStore {
     val root   = rootOf(dd)
     val relDir = if (rel.isEmpty) new Path(dd) else new Path(dd, rel)
     val fs     = fsOf(spark, relDir)
-    val physical: Map[Int, Path] =
-      if (!fs.exists(relDir)) Map.empty
-      else fs.listStatus(relDir).iterator
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
-        .map(st => st.getPath.getName.substring(partCol.length + 1).toInt -> st.getPath)
-        .toMap
+    val physical = partDirs(fs, relDir, partCol).toMap
     manifest match {
       case None => physical.map { case (p, d) => p -> Seq(d) }
       case Some(entries) =>
@@ -472,7 +473,7 @@ private[graft] object IndexStore {
     readRel(spark, dd, rel, partCol, readManifest(spark, dd))
 
   /** [[readRel]] against an already-PARSED manifest — one manifest read
-    * serves every relStats/readRel/carriedEntries call a compactor makes
+    * serves every relStats/readRel/carry call a compactor makes
     * against the same generation (several driver-side open/read
     * round-trips saved per probe on HDFS/object stores).
     */
@@ -522,39 +523,47 @@ private[graft] object IndexStore {
     * Byte-for-byte `spark.read.parquet(dir)` otherwise — same file set,
     * same partition-column discovery semantics (the explicit schema
     * types `partCol` int, which is what directory inference yields for
-    * every layout the index writers produce).
+    * every layout the index writers produce). It names the partition
+    * dirs under `basePath` = `dir`, not `dir` itself: a rebuilt
+    * generation carries no manifest, and naming its `_`-prefixed
+    * `_gen-N` dir makes Spark log "All paths were ignored".
     */
   private def readPartitionedDirFast(
       spark: SparkSession, dir: String, partCol: String): DataFrame = {
-    val dp = new Path(dir)
-    val fs = fsOf(spark, dp)
-    val partDirs =
-      try fs.listStatus(dp).iterator
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
-        .map(_.getPath).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    footerDataSchema(spark, partDirs.sortBy(_.getName)) match {
+    val dp    = new Path(dir)
+    val parts = partDirs(fsOf(spark, dp), dp, partCol).map(_._2).sortBy(_.getName)
+    footerDataSchema(spark, parts) match {
       case Some(s) =>
         spark.read.schema(org.apache.spark.sql.types.StructType(
           s.fields :+ org.apache.spark.sql.types.StructField(
             partCol, org.apache.spark.sql.types.IntegerType)))
-          .parquet(dir)
+          .option("basePath", dir).parquet(parts.map(_.toString): _*)
       case None => spark.read.parquet(dir)
     }
   }
 
-  /** Driver-side footer-derived schema of one (small, flat) parquet dir —
-    * for tiny frozen artifacts whose column types FOLLOW the caller's
-    * data (e.g. the Jaccard dictionary/hot set: `tok` is whatever the
-    * build's set-element type was — long hashed shingles are as
-    * idiomatic as strings). Callers use this instead of a hardcoded DDL
-    * string so a non-string index reads back with its own types; the
-    * no-schema-inference-job property is identical (one driver footer
-    * read). None when the dir has no data file yet.
+  /** The `partCol=N` partition dirs directly under `dir`, with their N;
+    * none when `dir` does not exist. */
+  private def partDirs(fs: FileSystem, dir: Path, partCol: String): Seq[(Int, Path)] =
+    try fs.listStatus(dir).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
+      .map(st => st.getPath.getName.substring(partCol.length + 1).toInt -> st.getPath).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** A small flat `_`-prefixed artifact (the Jaccard dictionary or hot
+    * set) read from its data FILES with the first file's footer schema:
+    * the artifact's column types follow the caller's data (`tok` is
+    * whatever the build's set-element type was — long hashed shingles are
+    * as idiomatic as strings), and one driver footer read replaces the
+    * schema-inference job. Naming the `_`-prefixed dir itself would make
+    * Spark log "All paths were ignored". None when the dir is absent or
+    * holds no data file.
     */
-  def footerSchemaOf(
-      spark: SparkSession, dir: String): Option[org.apache.spark.sql.types.StructType] =
-    footerDataSchema(spark, Seq(new Path(dir)))
+  def readArtifact(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val dp    = new Path(dir)
+    val files = dataFilePaths(fsOf(spark, dp), dp)
+    files.headOption.map(f => spark.read.schema(footerSchema(spark, f)).parquet(files.map(_.toString): _*))
+  }
 
   /** The schema every partition dir of one [[readRel]] shares, from ONE
     * footer per dir (its first data file in name order), and a loud
@@ -591,10 +600,8 @@ private[graft] object IndexStore {
   }
 
   /** The FIRST data file of `d` in name order, qualified. */
-  private def firstDataFile(spark: SparkSession, d: Path): Option[Path] = {
-    val fs = fsOf(spark, d)
-    dataFilesOf(fs, d).map(_._1).sorted.headOption.map(n => fs.makeQualified(new Path(d, n)))
-  }
+  private def firstDataFile(spark: SparkSession, d: Path): Option[Path] =
+    dataFilePaths(fsOf(spark, d), d).headOption
 
   /** The Spark schema of the FIRST data file under `dirs` (name order),
     * converted from its parquet footer on the driver — the same file
@@ -700,6 +707,10 @@ private[graft] object IndexStore {
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
       .map(f => f.getPath.getName -> f.getLen).toSeq
 
+  /** The data files of `dir`, qualified, in name order. */
+  private def dataFilePaths(fs: FileSystem, dir: Path): Seq[Path] =
+    dataFilesOf(fs, dir).map(_._1).sorted.map(n => fs.makeQualified(new Path(dir, n)))
+
   def relStats(
       spark: SparkSession, dd: String, rel: String, partCol: String): Map[Int, RelPartStat] =
     relStats(spark, dd, rel, partCol, readManifest(spark, dd))
@@ -750,92 +761,12 @@ private[graft] object IndexStore {
     resolveFlatDirs(spark, dd, rel, readManifest(spark, dd)).flatMap(d => dataFilesOf(fs, d)).map(_._1)
   }
 
-  /** Manifest entries for partitions REWRITTEN into the staged
-    * generation: list the staged relation's physical partition dirs and
-    * record their files as the new base.
-    */
-  def stagedEntries(
-      spark: SparkSession, root: String, staged: String, rel: String, partCol: String): Seq[ManifestEntry] = {
-    val relDir = if (rel.isEmpty) new Path(staged) else new Path(staged, rel)
-    val fs     = fsOf(spark, relDir)
-    val rootQ  = fs.makeQualified(new Path(root)).toString
-    if (!fs.exists(relDir)) Seq.empty
-    else fs.listStatus(relDir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
-      .map { st =>
-        val part = st.getPath.getName.substring(partCol.length + 1).toInt
-        val dir  = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ).stripPrefix("/")
-        ManifestEntry(rel, part, dir, dataFilesOf(fs, st.getPath))
-      }
-  }
-
-  /** [[stagedEntries]] for an unpartitioned relation written physically
-    * into the staged generation.
-    */
-  def stagedFlatEntry(
-      spark: SparkSession, root: String, staged: String, rel: String): Seq[ManifestEntry] = {
-    val relDir = new Path(staged, rel)
-    val fs     = fsOf(spark, relDir)
-    val rootQ  = fs.makeQualified(new Path(root)).toString
-    if (!fs.exists(relDir)) Seq.empty
-    else Seq(ManifestEntry(rel, -1,
-      fs.makeQualified(relDir).toString.stripPrefix(rootQ).stripPrefix("/"),
-      dataFilesOf(fs, relDir)))
-  }
-
-  /** Manifest entries CARRYING clean partitions by reference: each
-    * partition keeps its current physical home — the live manifest's
-    * recorded entry when one exists (so reference chains never deepen:
-    * homes are always physical locations), the live generation's own
-    * dir otherwise (flat-era/legacy source, all present files becoming
-    * the recorded base — legal because a CLEAN partition has no
-    * segments by definition).
-    */
-  def carriedEntries(
-      spark: SparkSession, root: String, live: String, rel: String, partCol: String,
-      parts: Iterable[Int], liveManifest: Option[Seq[ManifestEntry]]): Seq[ManifestEntry] = {
-    val fs    = fsOf(spark, new Path(root))
-    val rootQ = fs.makeQualified(new Path(root)).toString
-    val prior: Map[Int, ManifestEntry] = liveManifest
-      .map(_.filter(e => e.rel == rel && e.part >= 0).map(e => e.part -> e).toMap)
-      .getOrElse(Map.empty)
-    parts.toSeq.sorted.flatMap { p =>
-      prior.get(p) match {
-        case Some(e) => Some(e)
-        case None =>
-          val relDir = if (rel.isEmpty) new Path(live) else new Path(live, rel)
-          val pd     = new Path(relDir, s"$partCol=$p")
-          if (!fs.exists(pd)) None
-          else Some(ManifestEntry(rel, p,
-            fs.makeQualified(pd).toString.stripPrefix(rootQ).stripPrefix("/"),
-            dataFilesOf(fs, pd)))
-      }
-    }
-  }
-
-  /** [[carriedEntries]] for an unpartitioned relation carried whole. */
-  def carriedFlatEntry(
-      spark: SparkSession, root: String, live: String, rel: String,
-      liveManifest: Option[Seq[ManifestEntry]]): Seq[ManifestEntry] = {
-    val fs    = fsOf(spark, new Path(root))
-    val rootQ = fs.makeQualified(new Path(root)).toString
-    liveManifest.flatMap(_.find(e => e.rel == rel && e.part == -1)) match {
-      case Some(e) => Seq(e)
-      case None =>
-        val relDir = new Path(live, rel)
-        if (!fs.exists(relDir)) Seq.empty
-        else Seq(ManifestEntry(rel, -1,
-          fs.makeQualified(relDir).toString.stripPrefix(rootQ).stripPrefix("/"),
-          dataFilesOf(fs, relDir)))
-    }
-  }
-
   // ------------------------------------------------------------- tombstones
 
   /** The generation's logical-delete set: parquet files of one BIGINT id
     * column under the data dir (`_`-prefixed, so relation scans skip it).
-    * It dies with the rows it masks — every compaction drops it from the
-    * swap ([[swapGeneration]]'s `dropMeta`).
+    * It dies with the rows it masks — every compaction drops it
+    * ([[compact]]), and a build carries nothing.
     */
   val TombstonesName = "_graft_tombstones"
 
@@ -861,10 +792,9 @@ private[graft] object IndexStore {
     * file, and a compaction drops the set.
     */
   private def tombstoneIds(spark: SparkSession, dir: Path): Option[DataFrame] = {
-    val fs    = fsOf(spark, dir)
-    val files = dataFilesOf(fs, dir).map { case (n, _) => fs.makeQualified(new Path(dir, n)).toString }
+    val files = dataFilePaths(fsOf(spark, dir), dir).map(_.toString)
     if (files.isEmpty) None
-    else Some(spark.read.schema("doc_id BIGINT, vec_id BIGINT").parquet(files.sorted: _*)
+    else Some(spark.read.schema("doc_id BIGINT, vec_id BIGINT").parquet(files: _*)
       .select(coalesce(col("doc_id"), col("vec_id")).as("doc_id")))
   }
 
@@ -912,7 +842,7 @@ private[graft] object IndexStore {
     val dp = new Path(dir)
     val fs = fsOf(spark, dp)
     if (!fs.exists(dp)) return 0L
-    val files = dataFilesOf(fs, dp).map { case (n, _) => fs.makeQualified(new Path(dp, n)) }
+    val files = dataFilePaths(fs, dp)
     if (files.isEmpty) return 0L
     def rowsOf(f: Path): Long = withFooter(spark, f)(_.getRecordCount)
     if (files.size == 1) return rowsOf(files.head)
@@ -952,7 +882,7 @@ private[graft] object IndexStore {
     val fs = fsOf(spark, new Path(dd))
     val files = resolvePartDirs(spark, dd, rel, partCol, manifest)
       .values.flatten.toSeq.distinct
-      .flatMap(d => dataFilesOf(fs, d).map { case (n, _) => fs.makeQualified(new Path(d, n)) })
+      .flatMap(d => dataFilePaths(fs, d))
     footerParMap(files)(f => withFooter(spark, f)(_.getRecordCount)).sum
   }
 
@@ -1321,8 +1251,9 @@ private[graft] object IndexStore {
   /** Install a new generation: `populate(liveDataDir, stagedGenDir)`
     * writes the COMPLETE replacement (reading from the live dir is fine —
     * it is a sibling, never overwritten), `_`-prefixed metadata artifacts
-    * the populate did not itself write are carried over (minus `dropMeta`
-    * — the tombstones, which must die with the rows they mask), the
+    * the populate did not itself write are carried over when `carryMeta`
+    * (a compaction; a build carries nothing) — never the tombstone set,
+    * which dies with the rows it masks — the
     * pointer flips atomically, and generations older than `keepGens`
     * behind are reclaimed. Crash story: a populate that dies leaves an
     * orphan staged dir the next swap deletes and rewrites; a crash after
@@ -1332,11 +1263,10 @@ private[graft] object IndexStore {
     * object-store-safe), so a reader resolves the old or the new
     * generation, never neither, at every crash point.
     */
-  def swapGeneration(
+  private def swapGeneration(
       spark: SparkSession,
       root: String,
-      dropMeta: Set[String],
-      carryMeta: Boolean = true,
+      carryMeta: Boolean,
       keepGens: Int = 1,
       minRetentionMs: Long = 0L
   )(populate: (String, String) => Unit): Unit =
@@ -1373,8 +1303,7 @@ private[graft] object IndexStore {
             // describe the outgoing generation. The populate writes the
             // staged generation's own (or none — legacy directory reads).
             name != ManifestName && name != RetiredMarker &&
-            !name.startsWith(GenPrefix) && !name.endsWith(".tmp") &&
-            !dropMeta.contains(name)
+            !name.startsWith(GenPrefix) && !name.endsWith(".tmp") && name != TombstonesName
           // populate may have written a REPLACEMENT artifact (retrained
           // centroids, refreshed dictionary) — never clobber it.
           if (isMeta && !fs.exists(new Path(staged, name)))
@@ -1860,7 +1789,7 @@ private[graft] object IndexStore {
   def build(spark: SparkSession, root: String, rels: Seq[Relation]): Unit =
     withWriterLease(spark, root) {
       if (dataDir(spark, root) != root || readsUnder(spark, root, rels))
-        swapGeneration(spark, root, dropMeta = Set.empty, carryMeta = false)(
+        swapGeneration(spark, root, carryMeta = false)(
           (_, staged) => writeAll(spark, "build", staged, rels))
       else {
         val rp = new Path(root)
@@ -1894,11 +1823,6 @@ private[graft] object IndexStore {
       val dd = dataDir(spark, root)
       writeAll(spark, "append", dd, rels(dd))
     }
-
-  /** Relations written into a generation a compaction is staging (inside
-    * [[swapGeneration]]'s populate), concurrently. */
-  def writeStaged(spark: SparkSession, staged: String, rels: Relation*): Unit =
-    writeAll(spark, "compact", staged, rels)
 
   /** EXACTLY-ONCE streaming append of every relation `rels(dataDir)`
     * declares, as batch (streamId, batchId). Under the writer lease: a
@@ -1955,11 +1879,8 @@ private[graft] object IndexStore {
     writeRel(spark, "install", stage.toString, r)
     // The dirs a batch lands in: every partition dir, or the relation dir.
     def landingDirs(d: Path): Seq[Path] = r.partCol match {
-      case None => Seq(d)
-      case Some(pc) =>
-        if (!fs.exists(d)) Nil
-        else fs.listStatus(d).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(pc + "=")).map(_.getPath)
+      case None     => Seq(d)
+      case Some(pc) => partDirs(fs, d, pc).map(_._2)
     }
     val pfx = s"$StreamBatchPrefix$streamId-$batchId-"
     landingDirs(target).foreach { d =>
@@ -2069,7 +1990,7 @@ private[graft] object IndexStore {
     }
   }
 
-  // ------------------------------------------------------ selective rewrite
+  // ------------------------------------------------------------ compaction
 
   /** What a compaction does with one partitioned relation: rewrite every
     * partition (`full`), or rewrite only `dirty` and carry `carry` by
@@ -2088,60 +2009,144 @@ private[graft] object IndexStore {
     RewriteDecision(full, dirty, if (full) Nil else (parts -- dirty).toSeq.sorted)
   }
 
-  /** One compaction step of a `partCol`-partitioned relation (`rel = ""`
-    * for an index whose data sits at the generation root), from the live
-    * generation `live` into `staged`:
-    *
-    *  - dirty = partitions holding append segments ([[relStats]]) ∪
-    *    partitions holding a tombstoned row ∪ `alsoDirty`. With
-    *    `idCol = None` the relation has no per-document rows and no
-    *    tombstones are read. The tombstoned partitions come from one
-    *    column-pruned (partCol, idCol) scan semi-joined to the broadcast
-    *    tombstone set, or, when the partition is a function of the id
-    *    (`partOfId`), from the tombstone set alone;
-    *  - [[decideRewrite]] picks full or selective;
-    *  - the rewritten partitions are read (`isin(dirty)` when selective),
-    *    tombstone-masked, `shape`d, and written to `staged/rel` through
-    *    the relation writer ([[writeStaged]]);
-    *  - returns the decision and the relation's manifest entries: the
-    *    staged partitions as fresh bases plus the carried ones by
-    *    reference ([[carriedEntries]]).
-    *
-    * `man` is the live generation's parsed manifest, shared by every
-    * relation of one compaction.
+  /** COMPACT the index at `root` — the one compaction path of every
+    * family. Under the writer lease it stages the next generation
+    * ([[swapGeneration]]: stream-batch adoption, the install fences, the
+    * pointer flip, retention by `keepGens` and `minRetentionMs`), parses
+    * the live manifest ONCE, and runs `body` against a [[Compaction]]:
+    * the family rewrites, writes and carries its relations through the
+    * handle, which records each one's manifest entries. Then the staged
+    * manifest is written from those entries, sorted by (relation,
+    * partition). `_`-prefixed artifacts the body did not write are
+    * carried, except the tombstone set: a compaction always drops it, so
+    * the body must mask it from every per-document relation it rewrites
+    * ([[Compaction.rewrite]] does) and carry only clean partitions.
     */
-  def rewriteDirty(
+  def compact(spark: SparkSession, root: String, keepGens: Int, minRetentionMs: Long)(
+      body: Compaction => Unit): Unit =
+    swapGeneration(spark, root, carryMeta = true, keepGens, minRetentionMs) { (live, staged) =>
+      val c = new Compaction(spark, root, live, staged, readManifest(spark, live))
+      body(c)
+      writeManifest(spark, staged, c.entries)
+    }
+
+  /** One compaction in progress ([[compact]]): the live generation it
+    * replaces, the generation it stages, the live manifest parsed once,
+    * and the four ways a relation reaches the staged generation, each
+    * recording its manifest entries. Safe to use from concurrent
+    * [[inParallel]] branches (the entries are a concurrent queue; the
+    * branches must still write disjoint relations).
+    */
+  final class Compaction private[IndexStore] (
       spark: SparkSession,
-      live: String,
-      staged: String,
-      man: Option[Seq[ManifestEntry]],
-      rel: String,
-      partCol: String,
-      selective: Boolean,
-      idCol: Option[String],
-      partOfId: Option[Column => Column] = None,
-      alsoDirty: Set[Int] = Set.empty,
-      shape: DataFrame => DataFrame = identity
-  ): (RewriteDecision, Seq[ManifestEntry]) = {
-    val root  = rootOf(live)
-    val stats = relStats(spark, live, rel, partCol, man)
-    val src   = readRel(spark, live, rel, partCol, man)
-    val ts    = idCol.flatMap(_ => tombstones(spark, live))
-    val tombstoned = (idCol, ts) match {
-      case (Some(id), Some(t)) => partOfId match {
-        case Some(f) => t.select(f(col("doc_id"))).distinct().collect().map(_.getInt(0)).toSet
-        case None    => tombstonedParts(src, partCol, id, t)
+      root: String,
+      val live: String,
+      val staged: String,
+      val manifest: Option[Seq[ManifestEntry]]) {
+
+    private val fs       = fsOf(spark, new Path(root))
+    private val rootQ    = fs.makeQualified(new Path(root)).toString
+    private val recorded = new java.util.concurrent.ConcurrentLinkedQueue[ManifestEntry]()
+
+    private[IndexStore] def entries: Seq[ManifestEntry] = {
+      import scala.jdk.CollectionConverters._
+      recorded.asScala.toSeq.sortBy(e => (e.rel, e.part))
+    }
+
+    /** `dir` as the base of (rel, part): root-relative, its data files recorded. */
+    private def record(rel: String, part: Int, dir: Path): Unit = {
+      recorded.add(ManifestEntry(rel, part,
+        fs.makeQualified(dir).toString.stripPrefix(rootQ).stripPrefix("/"), dataFilesOf(fs, dir)))
+      ()
+    }
+
+    /** Write `rels` into the staged generation, concurrently, and record
+      * every data relation (a name not starting with `_`) as a fresh
+      * base: one entry per partition dir, or one for a flat relation.
+      * Artifacts (`_`-prefixed) win over the carry of the live ones.
+      */
+    def write(rels: Relation*): Unit = {
+      writeAll(spark, "compact", staged, rels)
+      rels.filterNot(_.name.startsWith("_")).foreach { r =>
+        val relDir = new Path(relPath(staged, r.name))
+        r.partCol match {
+          case Some(pc) => partDirs(fs, relDir, pc).foreach { case (p, d) => record(r.name, p, d) }
+          case None     => if (fs.exists(relDir)) record(r.name, -1, relDir)
+        }
       }
-      case _ => Set.empty[Int]
     }
-    val d = decideRewrite(selective, stats.keySet,
-      stats.filter(_._2.dirty).keySet ++ tombstoned ++ alsoDirty)
-    if (d.full || d.dirty.nonEmpty) {
-      val in = if (d.full) src else src.where(col(partCol).isin(d.dirty.toSeq.sorted.map(p => p: Any): _*))
-      writeStaged(spark, staged, Relation(rel, partCol, shape(idCol.fold(in)(minus(in, _, ts)))))
+
+    /** Carry the clean partitions `parts` of `rel` by reference: each
+      * keeps its current physical home — the live manifest's entry when
+      * one exists (so reference chains never deepen), the live
+      * generation's own dir otherwise (flat-era source, all present files
+      * becoming the recorded base — legal because a CLEAN partition has
+      * no segments).
+      */
+    def carry(rel: String, partCol: String, parts: Iterable[Int]): Unit = {
+      val prior = manifest.getOrElse(Nil).filter(e => e.rel == rel && e.part >= 0).map(e => e.part -> e).toMap
+      parts.foreach { p =>
+        prior.get(p) match {
+          case Some(e) => recorded.add(e)
+          case None =>
+            val pd = new Path(new Path(relPath(live, rel)), s"$partCol=$p")
+            if (fs.exists(pd)) record(rel, p, pd)
+        }
+      }
     }
-    (d, stagedEntries(spark, root, staged, rel, partCol) ++
-      carriedEntries(spark, root, live, rel, partCol, d.carry, man))
+
+    /** [[carry]] for an unpartitioned relation, carried whole. */
+    def carryFlat(rel: String): Unit =
+      manifest.flatMap(_.find(e => e.rel == rel && e.part == -1)) match {
+        case Some(e) => recorded.add(e); ()
+        case None =>
+          val d = new Path(live, rel)
+          if (fs.exists(d)) record(rel, -1, d)
+      }
+
+    /** One compaction step of a `partCol`-partitioned relation (`rel =
+      * ""` for an index whose data sits at the generation root):
+      *
+      *  - dirty = partitions holding append segments ([[relStats]]) ∪
+      *    partitions holding a tombstoned row ∪ `alsoDirty`. With
+      *    `idCol = None` the relation has no per-document rows and no
+      *    tombstones are read. The tombstoned partitions come from one
+      *    column-pruned (partCol, idCol) scan semi-joined to the broadcast
+      *    tombstone set, or, when the partition is a function of the id
+      *    (`partOfId`), from the tombstone set alone;
+      *  - [[decideRewrite]] picks full or selective;
+      *  - the rewritten partitions are read (`isin(dirty)` when
+      *    selective), tombstone-masked, `shape`d and [[write]]n; the
+      *    others are [[carry]]d.
+      */
+    def rewrite(
+        rel: String,
+        partCol: String,
+        selective: Boolean,
+        idCol: Option[String],
+        partOfId: Option[Column => Column] = None,
+        alsoDirty: Set[Int] = Set.empty,
+        shape: DataFrame => DataFrame = identity
+    ): RewriteDecision = {
+      val stats = relStats(spark, live, rel, partCol, manifest)
+      val src   = readRel(spark, live, rel, partCol, manifest)
+      val ts    = idCol.flatMap(_ => tombstones(spark, live))
+      val tombstoned = (idCol, ts) match {
+        case (Some(id), Some(t)) => partOfId match {
+          case Some(f) => t.select(f(col("doc_id"))).distinct().collect().map(_.getInt(0)).toSet
+          case None    => tombstonedParts(src, partCol, id, t)
+        }
+        case _ => Set.empty[Int]
+      }
+      val d = decideRewrite(selective, stats.keySet,
+        stats.filter(_._2.dirty).keySet ++ tombstoned ++ alsoDirty)
+      if (d.full || d.dirty.nonEmpty) {
+        val in = if (d.full) src else src.where(col(partCol).isin(d.dirty.toSeq.sorted.map(p => p: Any): _*))
+        write(Relation(rel, partCol, shape(idCol.fold(in)(minus(in, _, ts)))))
+      }
+      carry(rel, partCol, d.carry)
+      d
+    }
   }
 
   /** Partitions holding at least one TOMBSTONED row. One column-pruned

@@ -849,15 +849,15 @@ object Similarity {
       pqRefresh: PqRefreshMode = PqRefreshMode.Never
   ): Unit = {
     import graft.operators.IndexStore
-    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
-      keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
+    IndexStore.compact(spark, path, keepGens, minRetentionMs) { c =>
+      val live = c.live
       def minus(df: DataFrame): DataFrame = IndexStore.minusTombstoned(df, "vec_id", live)
       val doRetrain = retrain match {
         case RetrainMode.Never  => false
         case RetrainMode.Always => true
         case RetrainMode.Auto(maxImb) =>
           val imb = cellImbalanceOf(minus(
-            IndexStore.readRel(spark, live, "", "cell").select(col("cell"), col("vec_id"))))
+            IndexStore.readRel(spark, live, "", "cell", c.manifest).select(col("cell"), col("vec_id"))))
           val fire = imb > maxImb
           org.slf4j.LoggerFactory.getLogger(getClass).info(
             s"compactIvfIndex($path): surviving-cell imbalance ${f"$imb%.1f"}× vs " +
@@ -888,7 +888,7 @@ object Similarity {
         // re-trains the codebooks on the survivors and re-encodes every
         // row riding this same full rewrite (and records a fresh drift
         // baseline, so Auto re-arms at the new distribution).
-        val liveRel  = IndexStore.readRel(spark, live, "", "cell")
+        val liveRel  = IndexStore.readRel(spark, live, "", "cell", c.manifest)
         val dataCols = liveRel.columns.filterNot(_ == "cell").map(col)
         val withOldCols = minus(liveRel)
         val (survivors, newModel) =
@@ -928,25 +928,18 @@ object Similarity {
         // Retrained centroids and refreshed books install in the SAME
         // atomic generation as the rewritten rows; both win over the meta
         // carry.
-        IndexStore.writeStaged(spark, staged, (IndexStore.Relation("", "cell", rows) +:
+        c.write((IndexStore.Relation("", "cell", rows) +:
           (newCents.map(centroidsRel(spark, _)) ++ newModel.map(pqModelRel(spark, _))).toSeq): _*)
         // The refreshed books' fresh drift baseline: its sample-sizing
         // count reads from the JUST-WRITTEN staged parquet (footer
         // statistics, no recompute of the re-encode lineage).
         newModel.foreach { m =>
-          val stagedRows = spark.read.parquet(staged)
+          val stagedRows = IndexStore.readRel(spark, c.staged, "", "cell", None)
           val (mqe, sampled) = pqSampledMqe(stagedRows, "vec_id", "vec", m,
             knownCount = Some(stagedRows.count()))
-          IndexStore.writeStaged(spark, staged, pqStatsRel(spark, mqe, sampled))
+          c.write(pqStatsRel(spark, mqe, sampled))
         }
-        IndexStore.writeManifest(spark, staged,
-          IndexStore.stagedEntries(spark, IndexStore.rootOf(live), staged, "", "cell"))
-      } else {
-        val man = IndexStore.readManifest(spark, live) // parsed ONCE for stats+read+carry
-        val (_, entries) = IndexStore.rewriteDirty(
-          spark, live, staged, man, "", "cell", selective, idCol = Some("vec_id"))
-        IndexStore.writeManifest(spark, staged, entries)
-      }
+      } else c.rewrite("", "cell", selective, idCol = Some("vec_id"))
     }
   }
 

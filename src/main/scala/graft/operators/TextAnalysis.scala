@@ -987,13 +987,6 @@ object TextAnalysis {
     graft.operators.IndexStore.relFileNamesFlat(spark, dataDir, "docs")
       .map(docsWriteGroupOf).distinct.size
 
-  /** Serve BM25 from a [[persistBm25Index]] directory with PARTITION-PRUNED
-    * postings/terms reads: the query batch's term buckets (distinct,
-    * ≤ |query terms| small ints, collected driver-side) push down as a
-    * partition-column `isin` filter; the pruned frames are a superset of
-    * the query's terms, so delegating to [[bm25TopKFromIndex]] returns the
-    * identical ranking (gate shares the retrieval oracle verbatim).
-    */
   /** Incremental ingest into a [[persistBm25Index]] directory — the
     * lifecycle twin of [[graft.operators.Dedup.persistSignatureIndex]]'s
     * append and [[graft.operators.Similarity.appendToIvfIndex]]: the new
@@ -1051,7 +1044,7 @@ object TextAnalysis {
   /** Compact a persisted BM25 index — the third of the
     * build → append/delete → compact lifecycle. All three relations are
     * rewritten into ONE new generation behind ONE atomic pointer flip
-    * ([[graft.operators.IndexStore.swapGeneration]] — no absence window,
+    * ([[graft.operators.IndexStore.compact]] — no absence window,
     * no compacted-postings-over-stale-terms state observable, crash-safe
     * at every point, writers serialized on the index lease), with the
     * selective dirty-bucket-only cost model of
@@ -1080,8 +1073,8 @@ object TextAnalysis {
       minRetentionMs: Long = 0L
   ): Unit = {
     import graft.operators.IndexStore
-    IndexStore.swapGeneration(spark, path, dropMeta = Set(IndexStore.TombstonesName),
-      keepGens = keepGens, minRetentionMs = minRetentionMs) { (live, staged) =>
+    IndexStore.compact(spark, path, keepGens, minRetentionMs) { c =>
+      val live = c.live
       // ONE dirty set governs postings AND terms: both are partitioned by
       // the same term-bucket formula, an append touches the same buckets
       // in both, and a tombstoned doc changes doc_freq exactly in the
@@ -1089,25 +1082,24 @@ object TextAnalysis {
       // over its own dirty buckets plus the terms-dirty ones, and every
       // recount below can read the freshly-rewritten staged postings of
       // the same buckets.
-      val root   = IndexStore.rootOf(live)
-      val man    = IndexStore.readManifest(spark, live) // parsed ONCE for all relations
-      val tStats = IndexStore.relStats(spark, live, "terms", "bucket", man)
+      val tStats = IndexStore.relStats(spark, live, "terms", "bucket", c.manifest)
       // The postings→terms chain (terms recounts from the STAGED postings,
       // so it must follow them) and the independent docs rewrite run
       // CONCURRENTLY ([[IndexStore.inParallel]] — the lease is held by the
-      // enclosing swap and shared with the worker threads): compact wall
-      // becomes max(chain, docs), not their sum.
-      val Seq(postingsTermsEntries, docsEntries) = IndexStore.inParallel(
+      // enclosing compaction and shared with the worker threads): compact
+      // wall becomes max(chain, docs), not their sum. All three relations
+      // land in ONE manifest: rewritten buckets with fresh recorded bases,
+      // clean buckets as references.
+      IndexStore.inParallel(
         () => {
           // 1. postings: live rows only, dirty buckets rewritten, clean carried.
-          val (d, postingsEntries) = IndexStore.rewriteDirty(
-            spark, live, staged, man, "postings", "bucket", selective,
+          val d = c.rewrite("postings", "bucket", selective,
             idCol = Some("doc_id"), alsoDirty = tStats.filter(_._2.dirty).keySet)
           // Schema of the just-written staged postings (data columns + the
           // directory-encoded bucket) — passing it to the recount re-reads
           // below skips their schema-inference jobs.
           lazy val stagedPostingsSchema = org.apache.spark.sql.types.StructType(
-            IndexStore.readRel(spark, live, "postings", "bucket", man).schema
+            IndexStore.readRel(spark, live, "postings", "bucket", c.manifest).schema
               .filter(_.name != "bucket") :+
               org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType))
           // 2. terms: doc-frequencies RECOUNTED from the compacted postings of
@@ -1116,13 +1108,10 @@ object TextAnalysis {
           //    The recount reads the PHYSICAL staged postings — exactly the
           //    rewritten buckets, no manifest resolution needed or wanted.
           if (d.full || d.dirty.nonEmpty)
-            IndexStore.writeStaged(spark, staged, IndexStore.Relation("terms", "bucket",
-              spark.read.schema(stagedPostingsSchema).parquet(s"$staged/postings")
+            c.write(IndexStore.Relation("terms", "bucket",
+              spark.read.schema(stagedPostingsSchema).parquet(s"${c.staged}/postings")
                 .groupBy("bucket", "term").agg(count(lit(1)).as("doc_freq"))))
-          postingsEntries ++
-            IndexStore.stagedEntries(spark, root, staged, "terms", "bucket") ++
-            IndexStore.carriedEntries(spark, root, live, "terms", "bucket",
-              if (d.full) Nil else (tStats.keySet -- d.dirty).toSeq.sorted, man)
+          c.carry("terms", "bucket", if (d.full) Nil else tStats.keySet -- d.dirty)
         },
         () => {
           // 3. docs: unpartitioned thin relation (doc_id, len) — rewritten
@@ -1132,23 +1121,26 @@ object TextAnalysis {
           //    No explicit repartition: the parquet read packs small appended
           //    segments into maxPartitionBytes-sized splits, so the rewrite
           //    folds file count to ~bytes/128MB without paying a shuffle.
+          //    No baseline artifact to refresh: docs' segment arithmetic
+          //    counts distinct WRITE GROUPS from file names
+          //    ([[bm25DocsSegments]]), and a rewrite's files all share one
+          //    job UUID — the next sweep reads 1.
           val docsDirty = IndexStore.tombstones(spark, live).isDefined || bm25DocsSegments(spark, live) > 1
-          if (!selective || docsDirty) {
-            IndexStore.writeStaged(spark, staged, IndexStore.Relation.flat("docs",
-              IndexStore.minusTombstoned(IndexStore.readRelFlat(spark, live, "docs", man), "doc_id", live)))
-            IndexStore.stagedFlatEntry(spark, root, staged, "docs")
-          } else
-            IndexStore.carriedFlatEntry(spark, root, live, "docs", man)
+          if (!selective || docsDirty)
+            c.write(IndexStore.Relation.flat("docs",
+              IndexStore.minusTombstoned(IndexStore.readRelFlat(spark, live, "docs", c.manifest), "doc_id", live)))
+          else c.carryFlat("docs")
         })
-      // All three relations land in ONE manifest: rewritten buckets with
-      // fresh recorded bases, clean buckets as references.
-      IndexStore.writeManifest(spark, staged, postingsTermsEntries ++ docsEntries)
-      // No baseline artifact to refresh: docs' segment arithmetic counts
-      // distinct WRITE GROUPS from file names ([[bm25DocsSegments]]), and
-      // a rewrite's files all share one job UUID — the next sweep reads 1.
     }
   }
 
+  /** Serve BM25 from a [[persistBm25Index]] directory with PARTITION-PRUNED
+    * postings/terms reads: the query batch's term buckets (distinct,
+    * ≤ |query terms| small ints, collected driver-side) push down as a
+    * partition-column `isin` filter; the pruned frames are a superset of
+    * the query's terms, so delegating to [[bm25TopKFromIndex]] returns the
+    * identical ranking (gate shares the retrieval oracle verbatim).
+    */
   def bm25TopKFromPersisted(
       spark: org.apache.spark.sql.SparkSession,
       path: String,

@@ -188,6 +188,22 @@ class GraftSpec extends SparkSpec {
     }
   }
 
+  describe("run, when a table of a level fails") {
+    it("throws only after every table of the level finished") {
+      val schema = StructType(Seq(StructField("id", IntegerType, false), StructField("payload", StringType)))
+      def table  = spark.createDataFrame(java.util.Arrays.asList(Row(1, "x")), schema)
+      val g = new Graft(Map("bad" -> table, "slow" -> table),
+        SchemaManifest(tables = Seq("bad", "slow"), pks = Map("bad" -> Seq("id"), "slow" -> Seq("id")), fks = Nil))
+      val out = java.nio.file.Files.createTempDirectory("graft-run-fail").toString
+      intercept[Exception] {
+        g.run(out, spark)(
+          "bad"  -> TableSpec.select(row => Seq(row.payload.mapString(_ => throw new IllegalStateException("bad plan")))),
+          "slow" -> TableSpec.select(row => Seq(row.payload.mapString { s => Thread.sleep(2000); s })))
+      }
+      new java.io.File(s"$out/slow/_SUCCESS").exists shouldBe true
+    }
+  }
+
   describe("SQL function registration") {
     it("anon_* functions work from spark.sql and match the Scala API") {
       _root_.graft.functions.GraftFunctions.registerAll(spark)

@@ -671,6 +671,24 @@ class IndexLifecycleSpec extends SparkSpec {
     }
   }
 
+  describe("CorpusPipeline.compactIndexes") {
+    it("throws only after every sibling compaction finished, with every failure attached") {
+      import graft.operators.CorpusPipeline
+      val good = tmpDir("cmp_good_")
+      Dedup.persistSignatureIndex(Dedup.buildSignatureIndex(docsDf(1 to 40), "text", "doc_id"), good)
+      Dedup.persistSignatureIndex(
+        Dedup.buildSignatureIndex(docsDf(41 to 80), "text", "doc_id"), good, append = true)
+      val bare = Seq(tmpDir("cmp_bare_a_"), tmpDir("cmp_bare_b_")) // no index metadata
+      val e = the[IllegalArgumentException] thrownBy CorpusPipeline.compactIndexes(spark, good +: bare)
+      IndexStore.currentGeneration(spark, good) shouldBe 1
+      e.getMessage should include(bare(0))
+      e.getSuppressed.map(_.getMessage).toSeq match {
+        case Seq(m) => m should include(bare(1))
+        case other  => fail(s"expected one suppressed failure, got $other")
+      }
+    }
+  }
+
   describe("CorpusPipeline.maintainIndexes") {
     it("compacts only the indexes whose policy signals fire; dryRun reports without executing") {
       import graft.operators.CorpusPipeline

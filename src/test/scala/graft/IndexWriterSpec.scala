@@ -51,6 +51,13 @@ class IndexWriterSpec extends SparkSpec {
     IndexStore.withBatchToken(spark, dir, "s", 0L)(())
   }
 
+  /** Reads list their paths under the session settings the library
+    * documents (the listing threshold), as the job-count spec does. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    SessionTuning.tune(spark)
+  }
+
   private def withLogCapture[T](body: => T): (T, Seq[String]) = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
@@ -255,6 +262,35 @@ class IndexWriterSpec extends SparkSpec {
       Dedup.loadSignatureIndex(spark, dir).count() shouldBe 20L
       Dedup.matchVsPersistedIndex(docsDf(7 to 7), "text", "doc_id", dir)
         .select("matched_id").as[Long].collect() should contain(7L)
+    }
+  }
+
+  describe("reads that name a `_`-prefixed directory") {
+    it("a probe after a generational rebuild, an excised Jaccard probe and a PQ-refresh compaction log no 'All paths were ignored'") {
+      val sig = tmpDir("wr_warn_gen_")
+      Dedup.persistSignatureIndex(sigIndex(1 to 20), sig)
+      Dedup.compactSignatureIndex(spark, sig)
+      Dedup.persistSignatureIndex(sigIndex(1 to 20), sig) // generation 2, no manifest
+      val jac = tmpDir("wr_warn_jac_")
+      Dedup.persistJaccardIndex(sets(1 to 20), "bg", "doc_id", jac, thresholdMilli = 600,
+        exciseBoilerplateFrac = Some(0.5))
+      val ivf = tmpDir("wr_warn_pq_")
+      Similarity.persistIvfPqIndex(emb(1 to 40), "vec_id", "embedding", cents,
+        Similarity.pqTrain(emb(1 to 40), "vec_id", "embedding", m = 4, k = 8), ivf)
+      val ((hits, matched), lines) = withLogCapture {
+        val hits = Dedup.matchVsPersistedIndex(docsDf(7 to 8), "text", "doc_id", sig)
+          .select("matched_id").as[Long].collect()
+        val matched = Dedup.matchVsJaccardIndex(sets(5 to 5).withColumn("doc_id", lit(100L)), "bg", "doc_id", jac)
+          .select("matched_id").as[Long].collect()
+        Similarity.compactIvfIndex(spark, ivf, pqRefresh = Similarity.PqRefreshMode.Always)
+        (hits, matched)
+      }
+      IndexStore.currentGeneration(spark, sig) shouldBe 2
+      hits should (contain(7L) and contain(8L))
+      new java.io.File(jac, "_graft_jidx_hot").exists() shouldBe true
+      matched should contain(5L)
+      new java.io.File(IndexStore.dataDir(spark, ivf), "_graft_pq_stats").exists() shouldBe true
+      lines.filter(_.contains("All paths were ignored")) shouldBe empty
     }
   }
 }

@@ -5,7 +5,7 @@ import graft.operators.IndexStore.RewriteDecision
 import org.apache.spark.sql.functions.col
 
 /** The selective-rewrite policy every index family's compaction shares
-  * ([[IndexStore.decideRewrite]], applied by [[IndexStore.rewriteDirty]]):
+  * ([[IndexStore.decideRewrite]], applied by [[IndexStore.Compaction.rewrite]]):
   * dirty partitions are rewritten and clean ones carried by manifest
   * reference, unless the caller asks for a full rewrite, the relation has
   * no partitions, or at least 80% of them are dirty.
@@ -38,18 +38,21 @@ class RewritePolicySpec extends SparkSpec {
     }
   }
 
-  describe("IndexStore.rewriteDirty") {
+  describe("IndexStore.Compaction.rewrite") {
     it("writes nothing and carries every partition of a clean relation") {
       val root = java.nio.file.Files.createTempDirectory("rewrite_clean_").resolve("idx").toString
       // Flat layout, one file per bucket: no append segment anywhere.
       (0L until 50L).toDF("doc_id").withColumn("bucket", (col("doc_id") % 5).cast("int"))
         .repartition(col("bucket")).write.partitionBy("bucket").parquet(root)
-      val staged = s"$root/${IndexStore.GenPrefix}00001"
-      val (d, entries) = IndexStore.rewriteDirty(
-        spark, root, staged, None, "", "bucket", selective = true, idCol = Some("doc_id"))
+      var d: RewriteDecision = null
+      IndexStore.compact(spark, root, keepGens = 1, minRetentionMs = 0L) { c =>
+        d = c.rewrite("", "bucket", selective = true, idCol = Some("doc_id"))
+      }
       d shouldBe RewriteDecision(full = false, Set.empty, Seq(0, 1, 2, 3, 4))
-      new java.io.File(staged).exists shouldBe false
-      entries.map(e => (e.part, e.dir)) shouldBe (0 until 5).map(p => (p, s"bucket=$p"))
+      val staged = s"$root/${IndexStore.GenPrefix}00001"
+      new java.io.File(staged).list().filter(_.startsWith("bucket=")) shouldBe empty
+      IndexStore.readManifest(spark, staged).get.map(e => (e.part, e.dir)) shouldBe
+        (0 until 5).map(p => (p, s"bucket=$p"))
     }
   }
 }

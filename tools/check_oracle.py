@@ -20,6 +20,7 @@ class a stringified compare masks). Exit code 1 if any query mismatches.
 import glob
 import json
 import sys
+import time
 
 import duckdb
 
@@ -44,6 +45,42 @@ def normalize(rows, cols):
     return [cols[i] for i in order], out
 
 
+def check(con, out_dir, name, sql):
+    """(True, row count) when the Spark result matches the oracle, else (False, why)."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    if not files:
+        return False, "no spark result written"
+    try:
+        spark_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
+        s_cols, s_rows = normalize(spark_rel.fetchall(), spark_rel.columns)
+        s_types = [str(t) for _, t in sorted(zip(spark_rel.columns, spark_rel.types))]
+        ora_rel = con.sql(sql)
+        o_cols, o_rows = normalize(ora_rel.fetchall(), ora_rel.columns)
+        o_types = [str(t) for _, t in sorted(zip(ora_rel.columns, ora_rel.types))]
+    except Exception as e:
+        return False, f"error: {e}"
+    # Gate-output lint: the driver's hasher diverges on wide DECIMALs and
+    # its pandas compare crashes on array/binary/struct columns. Fail any
+    # gate query emitting them, even if values happen to match locally.
+    bad = [f"{c}: {t}" for c, t in zip(s_cols, s_types)
+           if t.startswith(("DECIMAL", "STRUCT", "MAP", "LIST", "UNION"))
+           or t.endswith("[]") or t == "BLOB"]
+    if bad:
+        return False, ("LINT: non-scalar/decimal output column(s) "
+                       "(driver cannot hash these): " + "; ".join(bad))
+    if s_cols != o_cols:
+        return False, f"column mismatch: spark={s_cols} oracle={o_cols}"
+    if s_types != o_types:
+        diffs = [f"{c}: spark={a} oracle={b}" for c, a, b in zip(s_cols, s_types, o_types) if a != b]
+        return False, "TYPE mismatch (driver hash is type-sensitive): " + "; ".join(diffs)
+    if len(s_rows) != len(o_rows):
+        return False, f"row count: spark={len(s_rows)} oracle={len(o_rows)}"
+    if s_rows != o_rows:
+        diff = next(i for i, (a, b) in enumerate(zip(s_rows, o_rows)) if a != b)
+        return False, f"value mismatch at sorted row {diff}:\n  spark : {s_rows[diff]}\n  oracle: {o_rows[diff]}"
+    return True, len(s_rows)
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -52,42 +89,14 @@ def main():
 
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures, passes = [], []
-    for name, sql in sorted(oracle.items()):
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            failures.append((name, "no spark result written"))
-            continue
-        try:
-            spark_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
-            s_cols, s_rows = normalize(spark_rel.fetchall(), spark_rel.columns)
-            s_types = [str(t) for _, t in sorted(zip(spark_rel.columns, spark_rel.types))]
-            ora_rel = con.sql(sql)
-            o_cols, o_rows = normalize(ora_rel.fetchall(), ora_rel.columns)
-            o_types = [str(t) for _, t in sorted(zip(ora_rel.columns, ora_rel.types))]
-        except Exception as e:
-            failures.append((name, f"error: {e}"))
-            continue
-        # Gate-output lint: the driver's hasher diverges on wide DECIMALs and
-        # its pandas compare crashes on array/binary/struct columns. Fail any
-        # gate query emitting them, even if values happen to match locally.
-        bad = [f"{c}: {t}" for c, t in zip(s_cols, s_types)
-               if t.startswith(("DECIMAL", "STRUCT", "MAP", "LIST", "UNION"))
-               or t.endswith("[]") or t == "BLOB"]
-        if bad:
-            failures.append((name, "LINT: non-scalar/decimal output column(s) "
-                             "(driver cannot hash these): " + "; ".join(bad)))
-        elif s_cols != o_cols:
-            failures.append((name, f"column mismatch: spark={s_cols} oracle={o_cols}"))
-        elif s_types != o_types:
-            diffs = [f"{c}: spark={a} oracle={b}" for c, a, b in zip(s_cols, s_types, o_types) if a != b]
-            failures.append((name, "TYPE mismatch (driver hash is type-sensitive): " + "; ".join(diffs)))
-        elif len(s_rows) != len(o_rows):
-            failures.append((name, f"row count: spark={len(s_rows)} oracle={len(o_rows)}"))
-        elif s_rows != o_rows:
-            diff = next(i for i, (a, b) in enumerate(zip(s_rows, o_rows)) if a != b)
-            failures.append((name, f"value mismatch at sorted row {diff}:\n  spark : {s_rows[diff]}\n  oracle: {o_rows[diff]}"))
-        else:
-            passes.append((name, len(s_rows)))
+    for i, (name, sql) in enumerate(sorted(oracle.items()), 1):
+        t0 = time.monotonic()
+        ok, detail = check(con, out_dir, name, sql)
+        (passes if ok else failures).append((name, detail))
+        # Progress on stderr as each query finishes: stdout, the exit code
+        # and the --json artifact stay exactly the summary below.
+        print(f"[{i}/{len(oracle)}] {'PASS' if ok else 'FAIL'}  {name}  {time.monotonic() - t0:.2f}s",
+              file=sys.stderr, flush=True)
 
     for name, n in passes:
         print(f"PASS  {name} ({n} rows)")
