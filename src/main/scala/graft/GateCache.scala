@@ -104,7 +104,7 @@ object GateCache {
     *
     * Lifecycle: the gate's RESULT frame reads the copy lazily, so the gate
     * body cannot delete it — the harness (Verify / Bench / TimeQuery /
-    * RunGate / ScaleSoak) calls [[releasePrivateCopies]] after fully
+    * ScaleSoak) calls [[releasePrivateCopies]] after fully
     * materializing each query instead. Copies therefore live one gate
     * long under a harness, and only until JVM exit elsewhere (specs).
     */

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-dynamic SQL-conf tuning shared by the harness mains (Bench,
-  * Verify, TimeQuery, ProfileQuery, RunGate, soaks). Everything here is
-  * scale-parameterised (env-overridable) with local-mode defaults; none
-  * of it changes what any query computes.
+/** Session-dynamic SQL-conf tuning that [[Harness.session]] applies for
+  * every main in this repo and that library users apply to their own
+  * session. Everything here is scale-parameterised (env-overridable) with
+  * local-mode defaults; none of it changes what any query computes.
   */
 object SessionTuning {
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Types the driver's DuckDB/pandas compare cannot hash reliably: wide
   * DECIMAL (typed-value hash diverges between engines), and any non-scalar
@@ -19,22 +18,16 @@ object GateLint {
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional trailing args: run only the named queries (local iteration;
-    // the driver always passes exactly two args → full run).
+    // Optional trailing args: run only the named queries, and write only
+    // their oracle SQL, so tools/check_oracle.py checks just them (local
+    // iteration; two args → every query).
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SessionTuning.tune(spark)
+    def selected(name: String) = only.isEmpty || only(name)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     var nRun    = 0
     var nFailed = 0
-    SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       nRun += 1
       try {
@@ -70,7 +63,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(q => selected(q._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // LAST stdout line: a short machine-parseable run summary, so a

@@ -223,7 +223,7 @@ object StreamGates {
     // (store commit + task launch × partitions × batches), and the state
     // partition count is frozen from spark.sql.shuffle.partitions at query
     // start. The fixture replay keys state by ~1.5k users — 8 partitions
-    // saturate local[32] for that cardinality; the session's batch setting
+    // saturate a 32-core local master for that cardinality; the session's batch setting
     // (sized for 100k-row shuffles) would triple the gate's wall clock in
     // pure state-store overhead. Scoped to the streaming query only:
     // restored before the batch post-processing runs.

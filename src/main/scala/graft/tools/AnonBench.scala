@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.functions.{Anonymizer, ScrubKernel}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Measures the native [[graft.functions.Scrub]] expression against the
@@ -15,12 +15,7 @@ object AnonBench {
   def main(args: Array[String]): Unit = {
     val rows = if (args.length > 0) args(0).toLong else 1500000L
     val reps = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
 
     // Distinct inputs so no cache effect favors either path.
     val df = spark.range(rows).select(concat(lit("Customer#"), col("id")).as("s"))

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the BM25 `docs/` append path with and without the retired
@@ -25,13 +25,7 @@ object Bm25AppendSoak {
 
   def main(args: Array[String]): Unit = {
     val scales = (if (args.length > 0) args(0) else "1,8").split(",").map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     def docs(from: Long, n: Long): DataFrame =
       spark.range(from, from + n).select(col("id").as("doc_id"),

@@ -46,13 +46,7 @@ object CompactionSoak {
     val sfDir  = args(0)
     val cycles = if (args.length > 1) args(1).toInt else 6
     val mode   = if (args.length > 2) args(2) else "all"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val docs  = graft.Tpch.table(spark, sfDir, "documents").select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)

@@ -35,17 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object CrossProcessLeaseSoak {
 
-  private def session(threads: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def docs(spark: SparkSession, ids: Seq[Long]) = {
     import spark.implicits._
     ids.map(i => (i, s"alpha beta gamma delta epsilon zeta eta theta doc$i word${i % 7} tail${i % 3}"))
@@ -66,7 +55,7 @@ object CrossProcessLeaseSoak {
     */
   private def holder(args: Array[String]): Unit = {
     val Array(_, dir, holdMsS) = args.take(3)
-    val spark = session(2)
+    val spark = graft.Harness.session()
     IndexStore.withWriterLease(spark, dir) {
       println("holding"); Console.flush()
       Thread.sleep(holdMsS.toLong)
@@ -80,7 +69,7 @@ object CrossProcessLeaseSoak {
     */
   private def single(args: Array[String]): Unit = {
     val Array(_, dir, idS) = args.take(3)
-    val spark = session(2)
+    val spark = graft.Harness.session()
     val t0 = System.nanoTime()
     val ids = (0 until 50).map(k => idS.toLong * 10000000L + k)
     Dedup.persistSignatureIndex(
@@ -106,7 +95,7 @@ object CrossProcessLeaseSoak {
     */
   private def killDriver(args: Array[String]): Unit = {
     val dir   = java.nio.file.Files.createTempDirectory("graft_xproc_kill_").toString + "/idx"
-    val spark = session(8)
+    val spark = graft.Harness.session()
     Dedup.persistSignatureIndex(
       Dedup.buildSignatureIndex(docs(spark, (1L to 100L)), "text", "doc_id"), dir)
 
@@ -192,7 +181,7 @@ object CrossProcessLeaseSoak {
   private def worker(args: Array[String]): Unit = {
     val Array(_, dir, idS, cyclesS, perS) = args.take(5)
     val (id, cycles, per) = (idS.toInt, cyclesS.toInt, perS.toInt)
-    val spark = session(4)
+    val spark = graft.Harness.session()
     (0 until cycles).foreach { c =>
       val ids = (0 until per).map(k => id * 10000000L + c * 10000L + k)
       Dedup.persistSignatureIndex(
@@ -211,7 +200,7 @@ object CrossProcessLeaseSoak {
     val cycles = if (args.length > 0) args(0).toInt else 20
     val per    = if (args.length > 1) args(1).toInt else 50
     val dir    = java.nio.file.Files.createTempDirectory("graft_xproc_lease_").toString + "/idx"
-    val spark  = session(8)
+    val spark  = graft.Harness.session()
 
     Dedup.persistSignatureIndex(
       Dedup.buildSignatureIndex(docs(spark, (1L to 100L)), "text", "doc_id"), dir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected gate queries — the
   * plan-audit loop for pushdown / broadcast / whole-stage-codegen checks.
   * Usage: runMain graft.tools.Explain [sfDir] [query...]
@@ -11,13 +9,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq
     else Seq("q_scan_filter_project", "q_agg_group", "q_semijoin", "q_propagation_2hop", "q_topn")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     names.foreach { name =>
       println(s"\n========== $name ==========")
       graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")

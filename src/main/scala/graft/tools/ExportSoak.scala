@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Falsifiable constant-heap proof for the WebDataset export sink at
@@ -20,12 +19,7 @@ object ExportSoak {
     val samples  = if (args.length > 0) args(0).toInt else 5000
     val perShard = if (args.length > 1) args(1).toInt else 1000
     val imgKiB   = if (args.length > 2) args(2).toInt else 1024
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
 
     // ~imgKiB of deterministic bytes per image, built executor-side.

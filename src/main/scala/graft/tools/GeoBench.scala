@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off A/B: adaptive band fallback old (32x4) vs recall-driven (60x10)
   * geometry on the sf0.1 documents corpus (the regime where the fallback
   * engages). Usage: runMain graft.tools.GeoBench [sfDir] [reps]
@@ -10,12 +8,7 @@ object GeoBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps  = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     def time(label: String, mode: graft.operators.Dedup.CandidateMode): Unit =
       (0 to reps).foreach { i =>

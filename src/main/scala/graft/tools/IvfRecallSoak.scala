@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures IVF recall decay under APPEND DRIFT and its cure — the
@@ -40,13 +40,7 @@ object IvfRecallSoak {
   def main(args: Array[String]): Unit = {
     val sfDir  = args(0)
     val scales = (if (args.length > 1) args(1) else "1,10").split(",").map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
 
     val base = graft.Tpch.table(spark, sfDir, "embeddings")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.{Dedup, IndexStore}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures Jaccard prefix-index selectivity decay under APPEND DRIFT and
@@ -40,13 +40,7 @@ object JaccardDriftSoak {
   def main(args: Array[String]): Unit = {
     val scales = (if (args.length > 0) args(0) else "1,4").split(",").map(_.trim.toInt)
     val skew   = args.length > 1 && args(1) == "skew"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
 
     // Build doc i: 4 commons, 3 of 64 mid tokens, 1 unique.

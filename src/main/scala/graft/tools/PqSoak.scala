@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the product-quantization tradeoff the `q_knn_pq_*` gates pin
@@ -20,13 +20,7 @@ object PqSoak {
   def main(args: Array[String]): Unit = {
     val sfDir  = args(0)
     val copies = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val base = graft.Tpch.table(spark, sfDir, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -22,14 +21,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val name  = args(1)
     val topN  = if (args.length > 2) args(2).toInt else 25
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SessionTuning.tune(spark)
+    val spark = graft.Harness.session()
 
     val fn = graft.SparkEntry.queries(name)
     // Warmup run (codegen, classloading) — NOT profiled.

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase-by-phase timing of the shuffled verification path (candidate
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object ProfileShuffleVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val df   = spark.read.parquet(s"$sfDir/documents.parquet")
     def time[T](label: String)(f: => T): T = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Runs selected gate queries against ScaleSynth corpora at increasing
   * multipliers and reports wall time, output rows, and the largest
   * "Broadcasting large task binary" the scheduler warned about — the two
@@ -57,14 +55,7 @@ object ScaleSoak {
     val reps    = if (args.length > 4) args(4).toInt else 2
     val skew    = args.length > 5 && args(5) == "skew"
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     TaskBinaryWatch.install()
 
     // The key distribution is part of the corpus identity: skewed corpora

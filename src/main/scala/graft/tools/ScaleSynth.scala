@@ -176,13 +176,7 @@ object ScaleSynth {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, mult) = args.take(3)
     val skew = args.length > 3 && args(3) == "skew"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     synthesize(spark, srcDir, outDir, mult.toInt, skewKeys = skew)
     spark.stop()
   }

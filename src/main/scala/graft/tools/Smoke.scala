@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Graft
 import graft.functions.{GraftFunctions, Lens}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Smoke drive: applies the anonymizer UDF surface + a JSON lens over the
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val customer = spark.read.parquet(s"$sfDir/customer.parquet")
     val anon = customer.select(

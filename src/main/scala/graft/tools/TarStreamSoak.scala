@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming WebDataset ingest at PRODUCTION shard size — the
@@ -28,13 +27,7 @@ object TarStreamSoak {
     val scales  = (if (args.length > 1) args(1) else "1,2").split(",").map(_.trim.toInt)
     val perShard = if (args.length > 2) args(2).toInt else 1000
     val budget   = (if (args.length > 3) args(3).toLong else 1536L) * 1024 * 1024
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     // Max task peakExecutionMemory across the run — the executor-side
     // memory observable; binaryFile's whole-shard rows surface here.

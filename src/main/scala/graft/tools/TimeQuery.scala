@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times gate queries N times each (first run = warmup) — the focused
   * perf loop for one or a few operators without paying a full Bench sweep.
   * Usage: runMain graft.tools.TimeQuery <sfDir> <query>[,<query>...] [reps]
@@ -11,28 +9,12 @@ object TimeQuery {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
     val reps  = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SessionTuning.tune(spark)
-    // Box-speed canary (same workload as Bench's): the sandbox shares a
-    // physical host, so absolute seconds swing 2-3x with ambient
-    // contention — bracket every query's reps with the canary so an A/B
+    val spark = graft.Harness.session()
+    // Bracket every query's reps with the box-speed canary so an A/B
     // comparison can be canary-normalized.
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 50000000L, 1, 32)
-        .selectExpr("id % 97 AS k", "id AS v").groupBy("k").sum("v").count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    canaryOnce()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      val c0 = (1 to 2).map(_ => canaryOnce()).min
+      val c0 = graft.Harness.canary(spark)
       val times = (0 to reps).map { i =>
         val t0 = System.nanoTime()
         val n  = fn(spark, sfDir).count()
@@ -41,7 +23,7 @@ object TimeQuery {
         println(f"[$name] run $i: $s%.3f s ($n rows)${if (i == 0) "  (warmup)" else ""}")
         s
       }
-      val c1 = (1 to 2).map(_ => canaryOnce()).min
+      val c1 = graft.Harness.canary(spark)
       // reps=0 → warmup-only run: no post-warmup sample to summarize.
       times.drop(1).reduceOption(_ min _).foreach { best =>
         println(f"[$name] best=$best%.3f s canary=$c0%.3f/$c1%.3f")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Trains the frozen BPE merge table behind `q_text_bpe_real` and
   * regenerates `operators/BpePinned.scala` — same pinning rationale as
   * [[TrainIvf]]: tokenizers are trained offline and frozen; pinned
@@ -14,12 +12,7 @@ object TrainBpe {
   def main(args: Array[String]): Unit = {
     val sfDir  = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val merges = if (args.length > 1) args(1).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val docs    = spark.read.parquet(s"$sfDir/documents.parquet")
     val trained = graft.operators.Bpe.trainMerges(docs, "text", merges)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Trains the frozen IVF coarse quantizer that `q_knn_ivf_probe` serves
   * with, and regenerates `operators/IvfPinned.scala` from it.
   *
@@ -20,12 +18,7 @@ object TrainIvf {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val nlist = if (args.length > 1) args(1).toInt else 16
     val iters = if (args.length > 2) args(2).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val emb   = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val cents = graft.operators.Similarity.ivfCentroids(emb, "vec_id", "embedding", nlist, iters)

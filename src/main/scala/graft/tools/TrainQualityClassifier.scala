@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Trains the frozen quality-classifier weights behind
@@ -25,12 +24,7 @@ object TrainQualityClassifier {
     val dim   = if (args.length > 1) args(1).toInt else 1024
     val iters = if (args.length > 2) args(2).toInt else 50
     val lr    = if (args.length > 3) args(3).toDouble else 0.5
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val labeled = docs.join(

@@ -49,10 +49,10 @@ class IndexLifecycleSpec extends SparkSpec {
     out.toSeq
   }
 
-  private def inode(f: String): Long =
-    java.nio.file.Files
-      .getAttribute(java.nio.file.Paths.get(f.stripPrefix("file:")), "unix:ino")
-      .asInstanceOf[Long]
+  /** A generation's physical rows, read through its data files: Spark
+    * flags the `_gen-N` directory name itself as hidden. */
+  private def genRows(dd: String): DataFrame =
+    spark.read.option("basePath", dd).parquet(parquetFilesUnder(dd): _*)
 
   private def docsDf(ids: Range): DataFrame =
     ids.map(i => (i.toLong, s"alpha beta gamma delta epsilon zeta eta theta doc$i word${i % 7} tail${i % 3}"))
@@ -71,7 +71,7 @@ class IndexLifecycleSpec extends SparkSpec {
       Dedup.deleteFromPersistedIndex(
         (1 to 80).filter(_ % 3 == 0).map(_.toLong).toDF("doc_id"), "doc_id", dir)
       val filesBefore = parquetFilesUnder(dataDir(dir)).size
-      val metaBefore  = sortedRows(spark.read.parquet(s"$dir/_graft_index_meta"))
+      val metaBefore  = sortedRows(IndexStore.readArtifact(spark, s"$dir/_graft_index_meta").get)
 
       Dedup.compactSignatureIndex(spark, dir)
 
@@ -79,7 +79,7 @@ class IndexLifecycleSpec extends SparkSpec {
       dd should not equal dir // flat layout transitioned to generation 1
       IndexStore.currentGeneration(spark, dir) shouldBe 1
       exists(s"$dd/_graft_tombstones") shouldBe false // mask died with the masked rows
-      sortedRows(spark.read.parquet(s"$dd/_graft_index_meta")) shouldEqual metaBefore
+      sortedRows(IndexStore.readArtifact(spark, s"$dd/_graft_index_meta").get) shouldEqual metaBefore
       // Serving file count (physical + manifest-referenced) fell: the
       // append segments folded.
       IndexStore.relStats(spark, dd, "", "bucket").values.map(_.files).sum should be < filesBefore
@@ -374,7 +374,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val dir  = tmpDir("jaccmp_")
       val sets = docsDf(1 to 40).select(col("doc_id"), Dedup.wordNgrams(col("text"), 3).as("bg"))
       Dedup.persistJaccardIndex(sets, "bg", "doc_id", dir, thresholdMilli = 600)
-      val dictBefore = sortedRows(spark.read.parquet(s"$dir/_graft_jidx_dict"))
+      val dictBefore = sortedRows(IndexStore.readArtifact(spark, s"$dir/_graft_jidx_dict").get)
       Dedup.deleteFromPersistedIndex(
         (1 to 40).filter(_ % 3 == 0).map(_.toLong).toDF("doc_id"), "doc_id", dir)
 
@@ -382,7 +382,7 @@ class IndexLifecycleSpec extends SparkSpec {
 
       val dd = dataDir(dir)
       exists(s"$dd/_graft_tombstones") shouldBe false
-      sortedRows(spark.read.parquet(s"$dd/_graft_jidx_dict")) shouldEqual dictBefore
+      sortedRows(IndexStore.readArtifact(spark, s"$dd/_graft_jidx_dict").get) shouldEqual dictBefore
       spark.read.parquet(s"$dd/postings").where(col("doc_id") % 3 === 0).count() shouldBe 0L
       spark.read.parquet(s"$dd/fullsets").where(col("doc_id") % 3 === 0).count() shouldBe 0L
     }
@@ -433,7 +433,7 @@ class IndexLifecycleSpec extends SparkSpec {
       // not drift). 303 riser posting rows collapse to 1.
       riserPostings(dir) shouldBe 1L
       Dedup.jaccardDictDrift(spark, dir) shouldBe 0.0 +- 1e-9
-      spark.read.parquet(s"${dataDir(dir)}/_graft_jidx_dict")
+      IndexStore.readArtifact(spark, s"${dataDir(dir)}/_graft_jidx_dict").get
         .where(col("tok") === "r1").head.getLong(1) shouldBe 101L
       // Selectivity is a cost lever only — the probe's result set is
       // byte-identical under either order.
@@ -451,10 +451,10 @@ class IndexLifecycleSpec extends SparkSpec {
       }.toDF("doc_id", "bg")
       Dedup.persistJaccardIndex(sameShape, "bg", "doc_id", dir, thresholdMilli = 600, append = true)
       Dedup.jaccardDictDrift(spark, dir) should be < 0.2
-      val dictBefore = sortedRows(spark.read.parquet(s"$dir/_graft_jidx_dict"))
+      val dictBefore = sortedRows(IndexStore.readArtifact(spark, s"$dir/_graft_jidx_dict").get)
       Dedup.compactJaccardIndex(spark, dir, refresh = Dedup.RefreshMode.Auto())
       // Held: the frozen dictionary rode the generation swap untouched.
-      sortedRows(spark.read.parquet(s"${dataDir(dir)}/_graft_jidx_dict")) shouldEqual dictBefore
+      sortedRows(IndexStore.readArtifact(spark, s"${dataDir(dir)}/_graft_jidx_dict").get) shouldEqual dictBefore
     }
 
     it("hot-set refresh: post-build boilerplate excises on a fired compact, artifact monotone") {
@@ -471,7 +471,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val dir = tmpDir("jac_hotref_")
       Dedup.persistJaccardIndex(build, "bg", "doc_id", dir, thresholdMilli = 600,
         exciseBoilerplateFrac = Some(0.2))
-      sortedRows(spark.read.parquet(s"$dir/_graft_jidx_hot")) shouldEqual Seq("[hb]")
+      sortedRows(IndexStore.readArtifact(spark, s"$dir/_graft_jidx_hot").get) shouldEqual Seq("[hb]")
       Dedup.jaccardHotDrift(spark, dir) shouldBe 0.0 // freshly cut — nothing newly hot
       // Append: 40 docs ALL carrying "nb" — frozen-set excision cannot
       // see it, so it lands in postings and fullsets.
@@ -485,13 +485,13 @@ class IndexLifecycleSpec extends SparkSpec {
       Dedup.compactJaccardIndex(spark, dir, refresh = Dedup.RefreshMode.Auto(0.05))
       val dd = dataDir(dir)
       // Updated artifact is MONOTONE: build-era hb survives, nb joins it.
-      sortedRows(spark.read.parquet(s"$dd/_graft_jidx_hot")) shouldEqual Seq("[hb]", "[nb]")
+      sortedRows(IndexStore.readArtifact(spark, s"$dd/_graft_jidx_hot").get) shouldEqual Seq("[hb]", "[nb]")
       // The newly-hot token left BOTH relations and the dictionary.
       IndexStore.readRel(spark, dd, "fullsets", "dbucket")
         .where(col("tok") === "nb").count() shouldBe 0L
       IndexStore.readRel(spark, dd, "postings", "bucket")
         .where(col("tok") === "nb").count() shouldBe 0L
-      spark.read.parquet(s"$dd/_graft_jidx_dict")
+      IndexStore.readArtifact(spark, s"$dd/_graft_jidx_dict").get
         .where(col("tok") === "nb").count() shouldBe 0L
       Dedup.jaccardHotDrift(spark, dir) shouldBe 0.0 // cured
       // Serving: a twin probe matches on real content (4/4 shared toks →
@@ -584,15 +584,15 @@ class IndexLifecycleSpec extends SparkSpec {
       }
       val sel  = tmpDir("ivfsel_");  build(sel)
       val full = tmpDir("ivffull_"); build(full)
-      val centsBefore = sortedRows(spark.read.parquet(s"$sel/_graft_centroids"))
+      val centsBefore = sortedRows(IndexStore.readArtifact(spark, s"$sel/_graft_centroids").get)
 
       Similarity.compactIvfIndex(spark, sel, selective = true)
       Similarity.compactIvfIndex(spark, full, selective = false)
 
-      val selRows = sortedRows(spark.read.parquet(dataDir(sel)))
-      selRows shouldEqual sortedRows(spark.read.parquet(dataDir(full)))
-      sortedRows(spark.read.parquet(s"${dataDir(sel)}/_graft_centroids")) shouldEqual centsBefore
-      val left = spark.read.parquet(dataDir(sel))
+      val selRows = sortedRows(genRows(dataDir(sel)))
+      selRows shouldEqual sortedRows(genRows(dataDir(full)))
+      sortedRows(IndexStore.readArtifact(spark, s"${dataDir(sel)}/_graft_centroids").get) shouldEqual centsBefore
+      val left = genRows(dataDir(sel))
       left.where(col("vec_id") % 3 === 0).count() shouldBe 0L
       left.count() shouldBe (1 to 80).count(_ % 3 != 0).toLong
     }
@@ -615,9 +615,9 @@ class IndexLifecycleSpec extends SparkSpec {
 
       val dd = dataDir(dir)
       exists(s"$dd/_graft_tombstones") shouldBe false
-      val newCents = sortedRows(spark.read.parquet(s"$dd/_graft_centroids"))
-      newCents should not equal sortedRows(spark.read.parquet(s"$dir/_graft_centroids"))
-      spark.read.parquet(dd).count() shouldBe 78L
+      val newCents = sortedRows(IndexStore.readArtifact(spark, s"$dd/_graft_centroids").get)
+      newCents should not equal sortedRows(IndexStore.readArtifact(spark, s"$dir/_graft_centroids").get)
+      genRows(dd).count() shouldBe 78L
       // Full-probe (nprobe = nlist) search is exhaustive, so the ranking
       // must equal brute-force cosine top-k over the survivors whatever
       // the centroids — the invariant that makes retraining safe.
@@ -647,12 +647,12 @@ class IndexLifecycleSpec extends SparkSpec {
       Similarity.persistIvfIndex(base, "vec_id", "embedding", cents, bal)
       Similarity.appendToIvfIndex(emb(41 to 80, 0.0), "vec_id", "embedding", bal)
       Dedup.deleteFromPersistedIndex(Seq(5L).toDF("vec_id"), "vec_id", bal)
-      val centsBefore = sortedRows(spark.read.parquet(s"$bal/_graft_centroids"))
+      val centsBefore = sortedRows(IndexStore.readArtifact(spark, s"$bal/_graft_centroids").get)
       Similarity.ivfCellImbalance(spark, bal) should be < 2.0
       Similarity.compactIvfIndex(spark, bal,
         retrain = Similarity.RetrainMode.Auto(maxImbalance = 2.0))
-      sortedRows(spark.read.parquet(s"${dataDir(bal)}/_graft_centroids")) shouldEqual centsBefore
-      spark.read.parquet(dataDir(bal)).count() shouldBe 79L
+      sortedRows(IndexStore.readArtifact(spark, s"${dataDir(bal)}/_graft_centroids").get) shouldEqual centsBefore
+      genRows(dataDir(bal)).count() shouldBe 79L
 
       // Drifted appends (a coherent far mode crowding into few frozen
       // cells): the trigger must FIRE — new quantizer in the same
@@ -665,9 +665,9 @@ class IndexLifecycleSpec extends SparkSpec {
       imbDrift should be > 2.0
       Similarity.compactIvfIndex(spark, dr,
         retrain = Similarity.RetrainMode.Auto(maxImbalance = 2.0))
-      sortedRows(spark.read.parquet(s"${dataDir(dr)}/_graft_centroids")) should not equal centsBefore
+      sortedRows(IndexStore.readArtifact(spark, s"${dataDir(dr)}/_graft_centroids").get) should not equal centsBefore
       Similarity.ivfCellImbalance(spark, dr) should be < imbDrift
-      spark.read.parquet(dataDir(dr)).count() shouldBe 79L
+      genRows(dataDir(dr)).count() shouldBe 79L
     }
   }
 
@@ -733,8 +733,8 @@ class IndexLifecycleSpec extends SparkSpec {
       exists(s"${dataDir(dirty)}/_graft_tombstones") shouldBe false
       IndexStore.currentGeneration(spark, ivf) shouldBe 1
       // compact_retrain really retrained: the quantizer moved.
-      sortedRows(spark.read.parquet(s"${dataDir(ivf)}/_graft_centroids")) should not equal
-        sortedRows(spark.read.parquet(s"$ivf/_graft_centroids"))
+      sortedRows(IndexStore.readArtifact(spark, s"${dataDir(ivf)}/_graft_centroids").get) should not equal
+        sortedRows(IndexStore.readArtifact(spark, s"$ivf/_graft_centroids").get)
 
       // A sweep straight after finds the compacted indexes healthy.
       val again = actions(dryRun = false)
@@ -909,7 +909,7 @@ class IndexLifecycleSpec extends SparkSpec {
       IndexStore.currentGeneration(spark, ivfpq) shouldBe 1
       exists(s"${dataDir(jac)}/_graft_tombstones") shouldBe false
       // The policy compact carried the PQ columns and the codebook artifact.
-      spark.read.parquet(dataDir(ivfpq)).columns should contain allOf ("pq_code", "pq_norm")
+      genRows(dataDir(ivfpq)).columns should contain allOf ("pq_code", "pq_norm")
       noException should be thrownBy
         Similarity.loadPqModel(spark, s"${dataDir(ivfpq)}/_graft_pq")
     }
@@ -1071,7 +1071,7 @@ class IndexLifecycleSpec extends SparkSpec {
       parquetFilesUnder(dd).size should be < filesBefore
       // Overlapping increments re-contributed grams; compaction dropped
       // the duplicates.
-      val grams = spark.read.parquet(dd)
+      val grams = genRows(dd)
       grams.count() shouldBe grams.select("g").distinct().count()
       sortedRows(Dedup.exciseVsPersistedGrams(docsDf(100 to 104), "text", "doc_id", dir)) shouldEqual probeBefore
       val fresh = tmpDir("gramfresh_")

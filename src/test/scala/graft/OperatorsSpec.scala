@@ -2322,8 +2322,9 @@ class OperatorsSpec extends SparkSpec {
       Similarity.compactIvfIndex(spark, tmp, retrain = Similarity.RetrainMode.Always)
       val dd = graft.operators.IndexStore.dataDir(spark, tmp)
       dd should not equal dd0 // a generation actually flipped
-      spark.read.parquet(dd).columns should contain allOf ("pq_code", "pq_norm")
-      spark.read.parquet(dd).where("pq_code IS NULL").count() shouldBe 0
+      val rows = graft.operators.IndexStore.readRel(spark, dd, "", "cell")
+      rows.columns should contain allOf ("pq_code", "pq_norm")
+      rows.where("pq_code IS NULL").count() shouldBe 0
       noException should be thrownBy Similarity.loadPqModel(spark, s"$dd/_graft_pq")
       val (g3, b3) = serve(qs, survivors); g3 shouldBe b3
     }

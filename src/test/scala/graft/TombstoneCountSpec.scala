@@ -20,7 +20,7 @@ class TombstoneCountSpec extends SparkSpec {
   }
 
   private def distributedDistinct(dir: String): Long =
-    spark.read.schema("doc_id BIGINT").parquet(dir).distinct().count()
+    IndexStore.readArtifact(spark, dir).get.distinct().count()
 
   it("returns 0 for a missing or empty relation") {
     IndexStore.tombstoneDistinctCount(spark, freshDir()) shouldBe 0L
