@@ -13,29 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
-  /** Fixed-point PageRank: ranks live in NANO units (10⁹ = probability
-    * mass 1) and every step is INTEGER arithmetic — initial rank
-    * 10⁹ div N, per-edge share (rank · dampMilli) div (1000 · outdeg),
-    * teleport ((1000 − dampMilli) · 10⁹) div (1000 · N) — so the result
-    * is bit-identical on any engine (a float formulation would drift
-    * with summation order at every iteration). Truncation leaks at most
-    * outdeg − 1 nano per node per round: ~10⁻⁷ of total mass on a
-    * million-node graph, irrelevant for ranking and a price worth exact
-    * reproducibility.
-    *
-    * Contract: every distinct (src, dst) edge counts once; nodes are
-    * everything appearing as src or dst; dangling nodes (no out-edges)
-    * keep their teleport share but their mass is NOT redistributed (the
-    * simple-drop convention — ranks then sum to < 1; callers who need
-    * the stochastic-matrix variant can add a sink node).
-    *
-    * Scale shape: `iterations` rounds of (edges ⋈ ranks on src) → one
-    * map-side-combinable sum per dst — the same per-round cost as one
-    * big co-grouped join; ranks re-materialize each round
-    * ([[Lineage.truncate]]) so the plan stays flat instead of growing an
-    * `iterations`-deep lineage. Convergence for ranking purposes is
-    * typically 10–20 rounds; the knob is explicit, not adaptive, so the
-    * cost is predictable and the result engine-replayable.
+  /** Fixed-point PageRank, simple-drop convention: every node gets the
+    * starting mass and the teleport (w ≡ 1 in [[fixedPoint]]); dangling
+    * nodes (no out-edges) keep their teleport share but their mass is NOT
+    * redistributed, so ranks sum to < 1 (callers who need the
+    * stochastic-matrix variant use [[pageRankStochastic]]).
     */
   def pageRank(
       edges: DataFrame,
@@ -43,59 +25,22 @@ object LinkGraph {
       dstCol: String,
       iterations: Int = 10,
       dampMilli: Long = 850L
-  ): DataFrame = {
-    require(iterations >= 0, "iterations must be >= 0")
-    require(dampMilli >= 0 && dampMilli <= 1000, "dampMilli is a per-mille damping factor")
-    val (e, relE) = Lineage.truncateReleasable(
-      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")).distinct())
-    val (nodes, relNodes) = Lineage.truncateReleasable(
-      e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node"))).distinct())
-    val (outdeg, relOut) = Lineage.truncateReleasable(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    val n = nodes.count()
-    require(n > 0, "pageRank needs at least one edge")
-    val teleport = ((1000L - dampMilli) * 1000000000L) / (1000L * n)
-    // Each round's checkpoint is released once the next is materialized
-    // (and the inputs once the loop ends) — an unreleased checkpoint is
-    // pinned storage, and iterative operators that leak one per round
-    // strangle execution memory (see Lineage.truncateReleasable).
-    var (ranks, relRanks) = Lineage.truncateReleasable(
-      nodes.withColumn("rank_nano", lit(1000000000L / n)))
-    (1 to iterations).foreach { _ =>
-      val shares = e
-        .join(ranks, e("src") === ranks("node"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr(s"(rank_nano * $dampMilli) div (1000 * outdeg)").as("share"))
-        .groupBy("dst")
-        .agg(sum("share").as("in_share"))
-      val (next, relNext) = Lineage.truncateReleasable(
-        nodes
-          .join(shares, nodes("node") === shares("dst"), "left")
-          .select(col("node"), (lit(teleport) + coalesce(col("in_share"), lit(0L))).as("rank_nano")))
-      relRanks(); ranks = next; relRanks = relNext
-    }
-    relE(); relNodes(); relOut()
-    ranks
-  }
+  ): DataFrame =
+    fixedPoint(edges, srcCol, dstCol, _.withColumn("w", lit(1)), "pageRank needs at least one edge",
+      iterations, dampMilli, redistribute = false, convergeNano = None)
 
   /** [[pageRank]]'s STOCHASTIC-MATRIX variant: dangling-node mass is
     * REDISTRIBUTED uniformly each round instead of dropped — ranks keep
     * summing to ~10⁹ nano (a true probability distribution, modulo integer
     * truncation), which matters exactly when the graph has real sinks
     * (crawl frontiers, PDF leaves, robots-blocked hosts — a large fraction
-    * of any web snapshot). Same fixed-point integer arithmetic as the
-    * simple variant, bit-identical on any engine: the per-round dangling
-    * mass D (an exact integer sum, order-free) contributes
-    * (D · dampMilli) div (1000 · N) to every node alongside the teleport.
+    * of any web snapshot).
     *
     * `convergeNano = Some(tol)` adds an early stop: iteration ends when
     * max |Δrank_nano| ≤ tol (one extra self-join + max aggregate per
     * round, integer-exact, so the stop round — and therefore the result —
     * is deterministic and engine-independent). With None the round count
     * is fixed at `iterations`, the oracle-replayable form.
-    *
-    * Scale shape: identical to [[pageRank]] per round, plus one
-    * anti-join aggregate for D (map-side combinable sum collapsing to a
-    * single driver long — not a driver-side loop over data).
     */
   def pageRankStochastic(
       edges: DataFrame,
@@ -104,73 +49,23 @@ object LinkGraph {
       iterations: Int = 10,
       dampMilli: Long = 850L,
       convergeNano: Option[Long] = None
-  ): DataFrame = {
-    require(iterations >= 0, "iterations must be >= 0")
-    require(dampMilli >= 0 && dampMilli <= 1000, "dampMilli is a per-mille damping factor")
-    val (e, relE) = Lineage.truncateReleasable(
-      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")).distinct())
-    val (nodes, relNodes) = Lineage.truncateReleasable(
-      e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node"))).distinct())
-    val (outdeg, relOut) = Lineage.truncateReleasable(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    val n = nodes.count()
-    require(n > 0, "pageRankStochastic needs at least one edge")
-    val teleport = ((1000L - dampMilli) * 1000000000L) / (1000L * n)
-    var (ranks, relRanks) = Lineage.truncateReleasable(
-      nodes.withColumn("rank_nano", lit(1000000000L / n)))
-    var it = 0
-    var converged = false
-    while (it < iterations && !converged) {
-      // Dangling mass: rank held by nodes with no out-edges (exact integer
-      // sum — order-free), redistributed uniformly below.
-      val dangling = ranks
-        .join(outdeg, ranks("node") === outdeg("src"), "left_anti")
-        .agg(coalesce(sum("rank_nano"), lit(0L))).head.getLong(0)
-      val danglingShare = (dangling * dampMilli) / (1000L * n)
-      val shares = e
-        .join(ranks, e("src") === ranks("node"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr(s"(rank_nano * $dampMilli) div (1000 * outdeg)").as("share"))
-        .groupBy("dst")
-        .agg(sum("share").as("in_share"))
-      val (next, relNext) = Lineage.truncateReleasable(
-        nodes
-          .join(shares, nodes("node") === shares("dst"), "left")
-          .select(
-            col("node"),
-            (lit(teleport + danglingShare) + coalesce(col("in_share"), lit(0L))).as("rank_nano")))
-      converged = convergeNano match {
-        case Some(tol) =>
-          val delta = next.toDF("node", "next_nano")
-            .join(ranks, "node")
-            .agg(max(abs(col("next_nano") - col("rank_nano")))).head.getLong(0)
-          delta <= tol
-        case None => false
-      }
-      relRanks(); ranks = next; relRanks = relNext
-      it += 1
-    }
-    relE(); relNodes(); relOut()
-    ranks
-  }
+  ): DataFrame =
+    fixedPoint(edges, srcCol, dstCol, _.withColumn("w", lit(1)), "pageRankStochastic needs at least one edge",
+      iterations, dampMilli, redistribute = true, convergeNano)
 
   /** PERSONALIZED PageRank (TrustRank when the seeds are trusted hosts):
     * the teleport vector concentrates on a SEED SET instead of spreading
     * uniformly — rank measures proximity to the seeds, the standard
     * crawl-quality / spam-demotion signal (Gyöngyi et al., VLDB'04) and
     * the seed-expansion primitive for topic-focused corpus selection.
-    * Same fixed-point integer scheme as [[pageRankStochastic]], so the
-    * result is bit-identical on any engine: ranks in nano units,
-    * teleport ((1000−damp)·10⁹) div (1000·|S|) to each seed (zero to
-    * non-seeds), initial mass 10⁹ div |S| on seeds, and each round's
-    * dangling mass D returns to the seeds as (D·damp) div (1000·|S|) —
-    * the personalized stochastic-matrix convention (mass that would leak
-    * out of the walk restarts at the seeds, like the teleport itself).
+    * Only seeds have w = 1: the starting mass, the teleport and each
+    * round's dangling mass all go to the seeds — the personalized
+    * stochastic-matrix convention (mass that would leak out of the walk
+    * restarts at the seeds, like the teleport itself).
     *
     * Seeds arrive as a DataFrame (seed sets at web scale are tables, not
     * literals) and are intersected with the graph's nodes; seeds outside
-    * the graph carry no mass by construction. Scale shape: identical to
-    * [[pageRankStochastic]] per round — the seed flag is one extra
-    * broadcast-sized column on the node frame, materialized once.
+    * the graph carry no mass by construction.
     */
   def pageRankPersonalized(
       edges: DataFrame,
@@ -180,44 +75,89 @@ object LinkGraph {
       seedCol: String,
       iterations: Int = 10,
       dampMilli: Long = 850L
+  ): DataFrame =
+    fixedPoint(edges, srcCol, dstCol,
+      _.join(seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("w", lit(1)),
+        Seq("node"), "left").select(col("node"), coalesce(col("w"), lit(0)).as("w")),
+      "pageRankPersonalized: no seed is a node of the graph",
+      iterations, dampMilli, redistribute = true, convergeNano = None)
+
+  /** The PageRank iteration kernel. Ranks live in NANO units (10⁹ =
+    * probability mass 1) and every step is INTEGER arithmetic, so the
+    * result is bit-identical on any engine (a float formulation would
+    * drift with summation order at every iteration). `weights` gives every
+    * node a weight w ∈ {0, 1}; with k = Σw:
+    *   - initial rank w · (10⁹ div k);
+    *   - per-edge share (rank · dampMilli) div (1000 · outdeg);
+    *   - teleport w · (((1000 − dampMilli) · 10⁹) div (1000 · k));
+    *   - with `redistribute`, the round's dangling mass D (rank held by
+    *     nodes with no out-edges, an exact order-free integer sum) adds
+    *     w · ((D · dampMilli) div (1000 · k)).
+    * Truncation leaks at most outdeg − 1 nano per node per round: ~10⁻⁷
+    * of total mass on a million-node graph, a price worth exact
+    * reproducibility. Every distinct (src, dst) edge counts once; nodes
+    * are everything appearing as src or dst.
+    *
+    * Scale shape: `iterations` rounds of (edges ⋈ ranks on src) → one
+    * map-side-combinable sum per dst, plus with `redistribute` one
+    * anti-join aggregate collapsing D to a single driver long. Ranks
+    * re-materialize each round ([[Lineage.truncate]]) so the plan stays
+    * flat instead of growing an `iterations`-deep lineage. The round count
+    * is explicit, not adaptive (10–20 rounds settle a ranking), so the
+    * cost is predictable and the result engine-replayable.
+    */
+  private def fixedPoint(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      weights: DataFrame => DataFrame,
+      noMass: String,
+      iterations: Int,
+      dampMilli: Long,
+      redistribute: Boolean,
+      convergeNano: Option[Long]
   ): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(dampMilli >= 0 && dampMilli <= 1000, "dampMilli is a per-mille damping factor")
     val (e, relE) = Lineage.truncateReleasable(
       edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")).distinct())
-    val nodes = e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node"))).distinct()
     val (outdeg, relOut) = Lineage.truncateReleasable(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    val (flagged, relFlagged) = Lineage.truncateReleasable(
-      nodes.join(
-        seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("is_seed", lit(1)),
-        Seq("node"), "left")
-        .select(col("node"), coalesce(col("is_seed"), lit(0)).as("is_seed")))
-    val ns = flagged.where(col("is_seed") === 1).count()
-    require(ns > 0, "pageRankPersonalized: no seed is a node of the graph")
-    val teleport = ((1000L - dampMilli) * 1000000000L) / (1000L * ns)
-    var (ranks, relRanks) = Lineage.truncateReleasable(flagged.select(col("node"), col("is_seed"),
-      when(col("is_seed") === 1, lit(1000000000L / ns)).otherwise(lit(0L)).as("rank_nano")))
-    (1 to iterations).foreach { _ =>
-      val dangling = ranks
+    val (weighted, relW) = Lineage.truncateReleasable(weights(
+      e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node"))).distinct()))
+    val k = weighted.where(col("w") === 1).count()
+    require(k > 0, noMass)
+    val teleport = ((1000L - dampMilli) * 1000000000L) / (1000L * k)
+    // Each round's checkpoint is released once the next is materialized
+    // (and the inputs once the loop ends) — an unreleased checkpoint is
+    // pinned storage, and iterative operators that leak one per round
+    // strangle execution memory (see Lineage.truncateReleasable).
+    var (ranks, relRanks) = Lineage.truncateReleasable(
+      weighted.select(col("node"), (col("w") * (1000000000L / k)).as("rank_nano")))
+    var it = 0
+    var converged = false
+    while (it < iterations && !converged) {
+      val dangling = if (!redistribute) 0L else ranks
         .join(outdeg, ranks("node") === outdeg("src"), "left_anti")
         .agg(coalesce(sum("rank_nano"), lit(0L))).head.getLong(0)
-      val danglingShare = (dangling * dampMilli) / (1000L * ns)
       val shares = e
         .join(ranks, e("src") === ranks("node"))
         .join(outdeg, "src")
         .select(col("dst"), expr(s"(rank_nano * $dampMilli) div (1000 * outdeg)").as("share"))
         .groupBy("dst")
         .agg(sum("share").as("in_share"))
+      val mass = teleport + (dangling * dampMilli) / (1000L * k)
       val (next, relNext) = Lineage.truncateReleasable(
-        flagged
-          .join(shares, flagged("node") === shares("dst"), "left")
-          .select(col("node"), col("is_seed"),
-            (when(col("is_seed") === 1, lit(teleport + danglingShare)).otherwise(lit(0L))
-              + coalesce(col("in_share"), lit(0L))).as("rank_nano")))
+        weighted.join(shares, weighted("node") === shares("dst"), "left")
+          .select(col("node"), (col("w") * mass + coalesce(col("in_share"), lit(0L))).as("rank_nano")))
+      converged = convergeNano.exists { tol =>
+        next.toDF("node", "next_nano").join(ranks, "node")
+          .agg(max(abs(col("next_nano") - col("rank_nano")))).head.getLong(0) <= tol
+      }
       relRanks(); ranks = next; relRanks = relNext
+      it += 1
     }
-    relE(); relOut(); relFlagged()
-    ranks.select("node", "rank_nano")
+    relE(); relOut(); relW()
+    ranks
   }
 
   /** Distributed triangle counting (compact-forward / node-iterator with

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -144,19 +146,10 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
     val assignU = udf { (v: Array[Float]) => nearestCell(v.map(_.toDouble), bc.value) }
-    val probeU = udf { (v: Array[Float]) =>
-      val vd = v.map(_.toDouble)
-      bc.value.indices
-        .map(c => (cosineDD(vd, bc.value(c)), c))
-        .sortBy { case (s, c) => (-s, c) }
-        .take(nprobe)
-        .map(_._2)
-        .toArray
-    }
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("cell", assignU(col("c_vec")))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("cell", explode(probeU(col("q_vec"))))
+      .withColumn("cell", explode(nearestCells(bc, nprobe)(col("q_vec"))))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     q.join(c, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
@@ -414,6 +407,20 @@ object Similarity {
     best
   }
 
+  /** UDF: a vector's `nprobe` nearest cells of the broadcast centroids,
+    * by cosine descending, lowest index on ties — deterministic.
+    */
+  private def nearestCells(bc: Broadcast[Array[Array[Double]]], nprobe: Int): UserDefinedFunction =
+    udf { (v: Array[Float]) =>
+      val vd = v.map(_.toDouble)
+      bc.value.indices
+        .map(c => (cosineDD(vd, bc.value(c)), c))
+        .sortBy { case (s, c) => (-s, c) }
+        .take(nprobe)
+        .map(_._2)
+        .toArray
+    }
+
   private def cosineDD(a: Array[Double], b: Array[Double]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -489,19 +496,10 @@ object Similarity {
     val assignU = udf { (v: Array[Float]) =>
       nearestCell(v.map(_.toDouble), bc.value)
     }
-    val probeU = udf { (v: Array[Float]) =>
-      val vd = v.map(_.toDouble)
-      bc.value.indices
-        .map(c => (cosineDD(vd, bc.value(c)), c))
-        .sortBy { case (s, c) => (-s, c) }
-        .take(nprobe)
-        .map(_._2)
-        .toArray
-    }
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("cell", assignU(col("c_vec")))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("cell", explode(probeU(col("q_vec"))))
+      .withColumn("cell", explode(nearestCells(bc, nprobe)(col("q_vec"))))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     q.join(c, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
@@ -668,18 +666,9 @@ object Similarity {
     val cents = loadCentroids(spark, s"$dd/_graft_centroids")
     require(nprobe >= 1 && nprobe <= cents.length, "need 1 <= nprobe <= centroids.length")
     val bc = spark.sparkContext.broadcast(cents)
-    val probeU = udf { (v: Array[Float]) =>
-      val vd = v.map(_.toDouble)
-      bc.value.indices
-        .map(c => (cosineDD(vd, bc.value(c)), c))
-        .sortBy { case (s, c) => (-s, c) }
-        .take(nprobe)
-        .map(_._2)
-        .toArray
-    }
     val q = graft.plans.Lineage.truncate(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-        .withColumn("cell", explode(probeU(col("q_vec")))))
+        .withColumn("cell", explode(nearestCells(bc, nprobe)(col("q_vec")))))
     val probed = q.select("cell").distinct().as[Int].collect().sorted
     val empty = spark.emptyDataset[(Long, Long, Long)].toDF("query_id", "neighbor_id", "rnk")
     if (probed.isEmpty) empty
@@ -1455,16 +1444,9 @@ object Similarity {
     val model = loadPqModel(spark, s"$dd/_graft_pq")
     require(nprobe >= 1 && nprobe <= cents.length, "need 1 <= nprobe <= centroids.length")
     val bc = spark.sparkContext.broadcast(cents)
-    val probeU = udf { (v: Array[Float]) =>
-      val vd = v.map(_.toDouble)
-      bc.value.indices
-        .map(c => (cosineDD(vd, bc.value(c)), c))
-        .sortBy { case (s, c) => (-s, c) }
-        .take(nprobe).map(_._2).toArray
-    }
     val qs = graft.plans.Lineage.truncate(
       pqQueryLuts(queries, idCol, vecCol, model)
-        .withColumn("cell", explode(probeU(col("q_vec")))))
+        .withColumn("cell", explode(nearestCells(bc, nprobe)(col("q_vec")))))
     val probed = qs.select("cell").distinct().as[Int].collect().sorted
     val empty = spark.emptyDataset[(Long, Long, Long)].toDF("query_id", "neighbor_id", "rnk")
     if (probed.isEmpty) return empty

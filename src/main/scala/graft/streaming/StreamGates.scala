@@ -209,9 +209,7 @@ object StreamGates {
       mode: OutputMode,
       flush: Seq[DataFrame] = Seq.empty,
       stageKey: Option[String] = None,
-      statePartitions: Int = 8,
-      noDataBatches: Boolean = true,
-      boundedMemorySink: Boolean = false
+      windowedMonitor: Boolean = false
   )(build: DataFrame => DataFrame): DataFrame = {
     import java.nio.file.Files
     val tResolve0 = System.nanoTime()
@@ -237,23 +235,22 @@ object StreamGates {
     // returned frame reads it lazily through the sink's _spark_metadata
     // log) under [[appendSinkRoot]], reclaimed at JVM exit; the
     // checkpoint is deleted as soon as the query stops.
-    // `statePartitions` lets a gate with FEW state keys (the windowed
-    // monitors: bins-or-vocab × 16 windows) shrink the per-batch
-    // commit × partition product below the 8-partition default;
-    // `noDataBatches = false` drops the engine's empty watermark-advance
-    // batches (each of which still commits EVERY state partition) for
-    // gates whose sentinels already drive emission through data batches.
-    // `boundedMemorySink` opts an Append gate whose OUTPUT is bounded by
-    // construction (windowed drift monitors: bins-or-vocab × windows)
-    // into the memory sink — skipping the file sink's per-batch manifest
-    // commit; the off-driver file-sink default stays mandatory for gates
-    // whose output scales with the data.
+    // `windowedMonitor` is for gates with FEW state keys and output
+    // bounded by construction (the windowed drift monitors: bins-or-vocab
+    // × windows) whose sentinels already drive emission through data
+    // batches. It sets ONE state partition (the per-batch commit ×
+    // partition product below the 8-partition default), drops the
+    // engine's empty watermark-advance batches (each of which still
+    // commits EVERY state partition), and sends Append output to the
+    // memory sink — skipping the file sink's per-batch manifest commit;
+    // the off-driver file-sink default stays mandatory for gates whose
+    // output scales with the data.
     val name = s"stream_gate_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val priorShufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val priorNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
-    val append = mode == OutputMode.Append() && !boundedMemorySink
+    spark.conf.set("spark.sql.shuffle.partitions", if (windowedMonitor) "1" else "8")
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", (!windowedMonitor).toString)
+    val append = mode == OutputMode.Append() && !windowedMonitor
     // sink/checkpoint dirs exist only on the append (file-sink) path — the
     // memory-sink path never touches them, and an unconditionally created
     // empty sinkDir would accumulate under appendSinkRoot until JVM exit.
@@ -970,8 +967,7 @@ object StreamGates {
     // chunks per invocation; the file sink's per-batch manifest commit).
     val cur = replayViaFiles(
         spark, ev.where(col("event_id") > mid), "ts", chunks = 3, OutputMode.Append(), flush,
-        stageKey = Some(s"evpsiw:$sfDir"),
-        statePartitions = 1, noDataBatches = false, boundedMemorySink = true)(
+        stageKey = Some(s"evpsiw:$sfDir"), windowedMonitor = true)(
       in => in.withWatermark("ts", "1 second")
         .groupBy(window(col("ts"), "1 day"), Profiler.psiBin(col("cents"), binWidth, numBins).as("bin"))
         .agg(count(lit(1)).as("b_cnt")))
@@ -1060,8 +1056,7 @@ object StreamGates {
     // partition, sentinel-driven emission → no empty batches, staged
     // chunks cached per JVM, bounded output → memory sink.
     val curCounts = replayViaFiles(spark, cur, "ts", chunks = 3, OutputMode.Append(), flush,
-        stageKey = Some(s"docsodd1s:$sfDir"),
-        statePartitions = 1, noDataBatches = false, boundedMemorySink = true)(
+        stageKey = Some(s"docsodd1s:$sfDir"), windowedMonitor = true)(
       in => in.withWatermark("ts", "1 second")
         .select(col("ts"), explode(TextAnalysis.tokens(col("text"))).as("term"))
         .groupBy(window(col("ts"), "2 minutes"), col("term"))

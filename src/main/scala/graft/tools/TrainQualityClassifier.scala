@@ -17,13 +17,16 @@ import org.apache.spark.sql.functions._
   * expensive signal from hashed token counts alone.
   *
   * Usage: runMain graft.tools.TrainQualityClassifier [sfDir] [dim] [iters] [lr]
+  * — each omitted argument defaults to the pinned model's own setting,
+  * so a no-argument run regenerates the pinned file unchanged.
   */
 object TrainQualityClassifier {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val dim   = if (args.length > 1) args(1).toInt else 1024
-    val iters = if (args.length > 2) args(2).toInt else 50
-    val lr    = if (args.length > 3) args(3).toDouble else 0.5
+    import graft.operators.{QualityClassifierPinned => Pinned}
+    val sfDir = if (args.length > 0) args(0) else Pinned.trainedOn
+    val dim   = if (args.length > 1) args(1).toInt else Pinned.dim
+    val iters = if (args.length > 2) args(2).toInt else Pinned.iters
+    val lr    = if (args.length > 3) args(3).toDouble else Pinned.learningRate
     val spark = graft.Harness.session()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

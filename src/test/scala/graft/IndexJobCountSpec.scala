@@ -1,9 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, IndexStore, Similarity, TextAnalysis}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,30 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class IndexJobCountSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Runs `body` and counts the Spark jobs it started. The listener bus is
-    * asynchronous but delivers in order, so once a marker job run
-    * afterwards is seen, every earlier job's start has been counted.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc     = spark.sparkContext
-    val jobs   = new AtomicInteger(0)
-    val marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setLocalProperty("graft.test.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.marker", null)
-      marker.await(60, TimeUnit.SECONDS) shouldBe true
-      (out, jobs.get())
-    } finally sc.removeSparkListener(l)
-  }
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

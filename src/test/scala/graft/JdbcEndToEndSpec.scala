@@ -4,13 +4,10 @@ import graft.dsl.TableSpec
 import graft.functions.Anonymizer
 import graft.sinks.{JdbcUpsertSink, OnConflict}
 import graft.sources.JdbcCatalog
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import java.sql.DriverManager
 import java.util.Properties
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The full reference workflow — catalog discovery, spec DSL, filter
   * propagation, anonymization, JDBC write-back — driven end-to-end against
@@ -72,30 +69,6 @@ class JdbcEndToEndSpec extends SparkSpec {
         .map(r => s"${r.getString("TABLE_SCHEM")}.${r.getString("TABLE_NAME")}")
         .filter(_.endsWith("_GRAFT_STAGE")).toList
     } finally c.close()
-  }
-
-  /** Runs `body` and counts the Spark jobs it started. The listener bus is
-    * asynchronous but delivers in order, so once a marker job run
-    * afterwards is seen, every earlier job's start has been counted.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc     = spark.sparkContext
-    val jobs   = new AtomicInteger(0)
-    val marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setLocalProperty("graft.test.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.marker", null)
-      marker.await(60, TimeUnit.SECONDS) shouldBe true
-      (out, jobs.get())
-    } finally sc.removeSparkListener(l)
   }
 
   /** Three FK-chained tables A <- B <- C in `schema`, with no rows. */

@@ -405,6 +405,28 @@ class OperatorsSpec extends SparkSpec {
       stopped.foreach { case (node, v) => math.abs(v - long(node)) should be <= 10000L }
     }
 
+    it("pageRankPersonalized with every node a seed is bit-identical to pageRankStochastic") {
+      import graft.operators.LinkGraph
+      val sink = (0L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
+      val star = ((1L to 8L).map(i => (i, 0L)) :+ (0L, 1L)).toDF("src", "dst")
+      Seq(sink, star).foreach { g =>
+        val everyNode = g.select(col("src").as("node")).union(g.select(col("dst").as("node")))
+        val pers = LinkGraph.pageRankPersonalized(g, "src", "dst", everyNode, "node", iterations = 10)
+          .as[(Long, Long)].collect().toMap
+        val stoch = LinkGraph.pageRankStochastic(g, "src", "dst", iterations = 10)
+          .as[(Long, Long)].collect().toMap
+        pers shouldBe stoch
+      }
+    }
+
+    it("pageRankPersonalized rejects a seed set disjoint from the graph") {
+      import graft.operators.LinkGraph
+      val sink = (0L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
+      val err = the[IllegalArgumentException] thrownBy
+        LinkGraph.pageRankPersonalized(sink, "src", "dst", Seq(100L, 101L).toDF("node"), "node")
+      err.getMessage should include("no seed is a node of the graph")
+    }
+
     it("bm25TopK ranks by tf saturation and idf; serve-from-index is bit-identical") {
       import graft.operators.TextAnalysis
       val docs = Seq(
