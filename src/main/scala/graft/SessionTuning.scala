@@ -2,10 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-dynamic SQL-conf tuning that [[Harness.session]] applies for
-  * every main in this repo and that library users apply to their own
-  * session. Everything here is scale-parameterised (env-overridable) with
-  * local-mode defaults; none of it changes what any query computes.
+/** Session tuning that [[Harness.session]] applies for every main in this
+  * repo and that library users apply to their own session. None of it
+  * changes what any query computes. It does two things:
+  *
+  *  - sets session-dynamic SQL confs, scale-parameterised
+  *    (env-overridable) with local-mode defaults;
+  *  - installs the fork-free `file:` filesystem, [[LocalFs]], on the
+  *    session's Hadoop configuration. Without the native libhadoop,
+  *    Hadoop's own local filesystem starts a `chmod` process for every
+  *    file it creates and a `readlink` process for every link-status
+  *    check, and a streaming micro-batch's log commits and parquet writes
+  *    make dozens of each.
+  *
+  * Call it right after building the session: it drops the `file:`
+  * instance Hadoop has already cached for the JVM, so a file that
+  * instance was asked to delete on exit is deleted then.
   */
 object SessionTuning {
 
@@ -47,5 +59,6 @@ object SessionTuning {
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.minPartitionSize",
       sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64KB"))
+    LocalFs.install(spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -212,6 +212,14 @@ private[graft] object IndexStore {
   }
 
   // ------------------------------------------- filesystem commit primitives
+  //
+  // The `file:` branches below go through java.nio for semantics Hadoop's
+  // local filesystem does not give: an O_EXCL create (its
+  // create(overwrite=false) is exists-then-create) and an ATOMIC_MOVE
+  // replace (its FileContext rename with OVERWRITE deletes the target,
+  // then renames). Speed is not the reason: under
+  // [[graft.SessionTuning.tune]] Hadoop's `file:` filesystem is
+  // [[graft.LocalFs]], which starts no `chmod`/`readlink` process either.
 
   /** The [[org.apache.hadoop.fs.FileContext]] for `p`'s scheme, or None
     * when the scheme has no AbstractFileSystem binding (S3-class object
@@ -282,8 +290,9 @@ private[graft] object IndexStore {
     }
 
   /** Install a DATA file at its final (deterministic) name, replacing
-    * any previous attempt's copy. FileContext-capable schemes get the
-    * atomic replace; object-store schemes fall back to delete +
+    * any previous attempt's copy. POSIX local gets the atomic replace
+    * from nio ATOMIC_MOVE, other FileContext-capable schemes from
+    * rename(OVERWRITE); object-store schemes fall back to delete +
     * `FileSystem.rename` — non-atomic as a pair, but safe here by
     * protocol: install names are deterministic per (streamId, batchId,
     * k), the installer first swept its own previous attempt, and a
